@@ -13,6 +13,7 @@ A "kind" is the reference's ENABLED_SEARCHES entry
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column, DataFrame
@@ -54,16 +55,12 @@ class KindConfig:
     published_value: str = "published"
 
 
-def _validate_filter_fields(df: DataFrame, filters: dict) -> None:
-    """Unknown filter field → ParamError (reference: filtering on a
-    nonexistent field is a contained error, not an empty success).
-
-    Resolves dotted paths against the schema directly — one walk over
-    a StructType, instead of the previous trick of forcing a second
-    Catalyst analysis pass per request just to surface the
-    AnalysisException. Mirrors Spark resolution under the SESSION'S
-    resolver mode (``spark.sql.caseSensitive``, default insensitive —
-    pinned against the real analyzer by
+def _field_resolver(df: DataFrame) -> Callable[[str], bool]:
+    """A predicate ``dotted path → resolves on df``, walking the schema
+    directly instead of asking Catalyst (a probe ``select`` costs one
+    more analysis pass per request). Mirrors Spark resolution under
+    the SESSION'S resolver mode (``spark.sql.caseSensitive``, default
+    insensitive — pinned against the real analyzer by
     tests/test_filter_properties.py): struct members matched per the
     mode, arrays traversed to their element, map access valid for any
     key.
@@ -79,28 +76,40 @@ def _validate_filter_fields(df: DataFrame, filters: dict) -> None:
         )
     except Exception:
         case_sensitive = False
+    schema = df.schema
 
     def names_match(a: str, b: str) -> bool:
         return a == b if case_sensitive else a.lower() == b.lower()
 
-    for field, values in filters.items():
-        if not values:
-            continue  # no predicate is built for it — nothing to resolve
-        dt = df.schema
-        for part in field.split("."):
+    def resolves(dotted: str) -> bool:
+        dt = schema
+        for part in dotted.split("."):
             while isinstance(dt, ArrayType):
                 dt = dt.elementType
             if isinstance(dt, MapType):
                 dt = dt.valueType  # any key is addressable
                 continue
             if not isinstance(dt, StructType):
-                raise ParamError(f"unknown field: {field!r}")
+                return False
             match = next(
                 (f for f in dt.fields if names_match(f.name, part)), None
             )
             if match is None:
-                raise ParamError(f"unknown field: {field!r}")
+                return False
             dt = match.dataType
+        return True
+
+    return resolves
+
+
+def _validate_filter_fields(df: DataFrame, filters: dict) -> None:
+    """Unknown filter field → ParamError (reference: filtering on a
+    nonexistent field is a contained error, not an empty success)."""
+    resolves = _field_resolver(df)
+    for field, values in filters.items():
+        # a field without values builds no predicate — nothing to resolve
+        if values and not resolves(field):
+            raise ParamError(f"unknown field: {field!r}")
 
 
 class SearchEngine:
@@ -168,7 +177,13 @@ class SearchEngine:
 
     def _run(self, kind: str, userid: str | None, spec: QuerySpec) -> Envelope:
         cfg = self.kinds[kind]
-        df = self.dfs[kind]
+        # field paths resolve against the kind's long-lived frame, whose
+        # schema PySpark caches after the first request (the filters
+        # below never change the schema)
+        base = df = self.dfs[kind]
+        bytes_col = cfg.bytes_field
+        if bytes_col is not None and not _field_resolver(base)(bytes_col):
+            bytes_col = None
 
         if cfg.findability_field:
             df = df.filter(
@@ -182,7 +197,7 @@ class SearchEngine:
 
         pred = filters_predicate(spec.filters, mode=cfg.filter_mode)
         if pred is not None:
-            _validate_filter_fields(df, spec.filters)
+            _validate_filter_fields(base, spec.filters)
             df = df.filter(pred)
 
         sort_cols: list[Column] = []
@@ -206,7 +221,7 @@ class SearchEngine:
         sort_cols.append(F.col(cfg.id_field).asc())  # deterministic tiebreak
 
         env = run_envelope(
-            df, sort_cols, spec.offset, spec.size, bytes_col=cfg.bytes_field
+            df, sort_cols, spec.offset, spec.size, bytes_col=bytes_col
         )
         if "score" in df.columns:
             for r in env.results:

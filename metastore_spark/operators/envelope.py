@@ -5,16 +5,16 @@ The reference attaches to every query (a) the total matched count
 aggregation over all matched docs (summary.totalBytes,
 metastore/models.py:116-117,153), regardless of pagination.
 
-Spark-first shape: one ``agg(count, sum)`` job over the filtered frame
-(partial aggregation map-side, a single exchange of one row per
-partition — cheap at any scale), plus the paginated page itself.
+Spark-first shape: ONE job per request, like ES's one pass over the
+matched docs — ``count(*)`` and ``sum(bytes)`` are observed on the
+page's top-k scan; no second job, no cached copy of the filtered frame.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from metastore_spark.operators.paging import paginate
@@ -37,23 +37,20 @@ class Envelope:
         return out
 
 
+def _summary_exprs(bytes_col: str | None) -> list[Column]:
+    exprs = [F.count(F.lit(1)).alias("total")]
+    if bytes_col is not None:
+        exprs.append(F.sum(F.col(bytes_col).cast("double")).alias("total_bytes"))
+    return exprs
+
+
+def _summary(metrics: dict) -> tuple[int, float]:
+    return int(metrics["total"]), float(metrics.get("total_bytes") or 0.0)
+
+
 def summary_agg(filtered: DataFrame, bytes_col: str | None) -> tuple[int, float]:
     """count(*) + sum(bytes) in ONE aggregation job."""
-    aggs = [F.count(F.lit(1)).alias("total")]
-    if bytes_col is not None and _has_field(filtered, bytes_col):
-        aggs.append(F.sum(F.col(bytes_col).cast("double")).alias("total_bytes"))
-    row = filtered.agg(*aggs).first()
-    total = int(row["total"])
-    total_bytes = float(row["total_bytes"]) if "total_bytes" in row and row["total_bytes"] is not None else 0.0
-    return total, total_bytes
-
-
-def _has_field(df: DataFrame, dotted: str) -> bool:
-    try:
-        df.select(F.col(dotted))
-        return True
-    except Exception:
-        return False
+    return _summary(filtered.agg(*_summary_exprs(bytes_col)).first().asDict())
 
 
 def run_envelope(
@@ -63,17 +60,25 @@ def run_envelope(
     size: int,
     bytes_col: str | None = None,
 ) -> Envelope:
-    """Execute the canonical search shape: summary aggs + one page.
+    """One page + its summary in ONE job.
 
-    The filtered frame feeds two jobs (summary + page); persist it so
-    the filter/scoring pipeline runs once, and release the cache
-    before returning — per-request memory is bounded by the request.
+    Sort + offset + limit plans to TakeOrderedAndProjectExec, a bounded
+    JVM top-k with no exchange above the observation: every row passes
+    through result-stage tasks, whose accumulator updates Spark applies
+    exactly once. Not so for a limit-0 page (an empty relation; the
+    observation never fires) or an input already sorted on the page
+    order (the top-k stops each partition early): those use
+    ``summary_agg``. Reading the plan does not plan twice.
     """
-    filtered = filtered.persist()
-    try:
-        total, total_bytes = summary_agg(filtered, bytes_col)
-        page = paginate(filtered, sort_cols, offset, size)
-        results = [r.asDict(recursive=True) for r in page.collect()]
-    finally:
-        filtered.unpersist()
-    return Envelope(results=results, total=total, total_bytes=total_bytes)
+    observation = Observation()
+    observed_df = filtered.observe(observation, *_summary_exprs(bytes_col))
+    page = paginate(observed_df, sort_cols, offset, size)
+    plan = page._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    observed = plan.nodeName() == "TakeOrderedAndProject" and (
+        plan.child().outputOrdering().isEmpty()
+    )
+    results = [r.asDict(recursive=True) for r in page.collect()]
+    summary = _summary(observation.get) if observed else summary_agg(filtered, bytes_col)
+    return Envelope(results, *summary)

@@ -5,7 +5,9 @@ Mirrors the reference's wire contract (metastore/models.py:97-105,
 value — metastore/models.py:101), control params (``q`` ``size``
 ``from`` ``sort`` ``jwt``) are popped before the residue becomes
 filters, ``size`` is defaulted to 50 and clamped to 100
-(metastore/models.py:129-132), ``from`` defaults to 0.
+(metastore/models.py:129-132), ``from`` defaults to 0. A negative
+``size`` or ``from`` is a ParamError (ES rejects both), raised before
+any Spark work.
 
 The IR is a plain dataclass, the only "plan" object in the engine —
 everything downstream is Catalyst's job.
@@ -70,6 +72,8 @@ def parse_params(params: dict[str, list[str] | str]) -> QuerySpec:
             size = int(multi.pop("size")[0])
         except (TypeError, ValueError) as e:
             raise ParamError(f"invalid size: {e}") from e
+        if size < 0:
+            raise ParamError(f"invalid size: {size} is negative")
         # Clamp only applies to user-supplied sizes (metastore/models.py:129-132)
         spec.size = min(size, MAX_SIZE)
     if "from" in multi:
@@ -77,6 +81,8 @@ def parse_params(params: dict[str, list[str] | str]) -> QuerySpec:
             spec.offset = int(multi.pop("from")[0])
         except (TypeError, ValueError) as e:
             raise ParamError(f"invalid from: {e}") from e
+        if spec.offset < 0:
+            raise ParamError(f"invalid from: {spec.offset} is negative")
     if "sort" in multi:
         raw = multi.pop("sort")[0].strip('"').lower()
         if raw not in ("asc", "desc"):

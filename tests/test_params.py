@@ -20,6 +20,7 @@ def test_unquoted_string_raises():
 def test_size_default_and_clamp():
     assert parse_params({}).size == 50
     assert parse_params({"size": "30"}).size == 30
+    assert parse_params({"size": "0"}).size == 0  # count-only request
     assert parse_params({"size": "500"}).size == 100
 
 
@@ -65,3 +66,12 @@ def test_object_and_array_values_rejected():
         parse_params({"k": '{"x": 1}'})
     with pytest.raises(ParamError):
         parse_params({"k": "[1, 2]"})
+
+
+def test_negative_size_and_from_raise():
+    # ES rejects both; without this check they reach Spark's limit and
+    # offset operators, whose errors are engine text, not a param error
+    with pytest.raises(ParamError):
+        parse_params({"size": "-1"})
+    with pytest.raises(ParamError):
+        parse_params({"from": "-5"})

@@ -351,3 +351,94 @@ def test_events_totalbytes_zero(spark, engine_factory):
     e = engine_factory(events=fx.some_event_records(spark, 4))
     out = run(e, "events", userid="datahubid")
     assert out["summary"]["totalBytes"] == 0.0
+
+
+# -- count-only and past-the-end pages --------------------------------------
+
+
+def test_size_zero_returns_summary_only(spark, engine_factory):
+    e = engine_factory(fx.some_records(spark, 7))
+    out = run(e, "dataset", size="0")
+    assert out["results"] == []
+    assert out["summary"] == {"total": 7, "totalBytes": 70.0}
+    out = run(e, "events", size="0")
+    assert "error" not in out
+    assert out["summary"]["total"] == 0
+
+
+def test_from_past_end_keeps_full_summary(spark, engine_factory):
+    e = engine_factory(fx.some_records(spark, 7))
+    out = run(e, "dataset", size="5", **{"from": "50"})
+    assert out["results"] == []
+    assert out["summary"] == {"total": 7, "totalBytes": 70.0}
+
+
+def test_presorted_input_keeps_full_summary(spark, engine_factory):
+    """A kind bound to a frame already sorted on the page order: the
+    top-k then reads only the first rows of each partition, so the
+    summary must not come from that scan."""
+    from pyspark.sql import functions as F
+
+    events = fx.some_event_records(spark, 12).orderBy(
+        F.col("timestamp").asc(), F.col("_event_id").asc()
+    )
+    e = engine_factory(events=events)
+    out = run(e, "events", userid="datahubid", size="1", sort='"asc"')
+    assert out["summary"]["total"] == 12
+    assert [r["_event_id"] for r in out["results"]] == ["e0000"]
+
+
+# -- request cost and isolation ---------------------------------------------
+
+
+def test_filter_search_runs_one_job_and_caches_nothing(spark, engine_factory):
+    """A no-q page and its summary come from ONE Spark job, and no
+    per-request copy of the filtered frame is cached."""
+    sc = spark.sparkContext
+    e = engine_factory(fx.some_records(spark, 20))
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
+    group = "test-one-job-per-search"
+    sc.setJobGroup(group, "one search request")
+    try:
+        out = run(e, "dataset", size="5", license=['"str3"', '"str4"', '"str5"'])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out["summary"] == {"total": 3, "totalBytes": 30.0}
+    assert len(out["results"]) == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
+
+
+def test_concurrent_searches_match_sequential(spark, engine_factory):
+    """Threaded WSGI workers share one engine: each request's summary
+    must be its own, never another request's observation."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    e = engine_factory(
+        fx.some_records(spark, 30), events=fx.some_event_records(spark, 12)
+    )
+    requests = [
+        ("dataset", None, {"license": f'"str{i}"'}) for i in range(3)
+    ] + [
+        ("dataset", None, {"title": ["1", "2", "3", "4"], "size": "2"}),
+        ("dataset", None, {"from": "25"}),
+        ("events", "datahubid", {"event_entity": '"flow"'}),
+        ("events", None, {"size": "3", "sort": '"asc"'}),
+        ("events", "datahubid", {"size": "0"}),
+    ]
+
+    def one(req):
+        kind, userid, params = req
+        return run(e, kind, userid=userid, **params)
+
+    sequential = [one(r) for r in requests]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=len(requests)) as pool:
+            concurrent = list(pool.map(one, requests, timeout=600))
+    finally:
+        sys.setswitchinterval(switch)
+    assert concurrent == sequential
+    assert len({o["summary"]["total"] for o in sequential}) > 3
