@@ -48,92 +48,33 @@ def write_events_by_day(df: DataFrame, path: str, ts_col: str = "ts") -> None:
     )
 
 
-def events_partitioned(
-    spark: SparkSession, sf_dir: str, warehouse: str | None = None
-):
+def events_partitioned(spark: SparkSession, sf_dir: str):
     """Probe-or-build the date-partitioned events layout for ``sf_dir``.
 
-    Returns ``(df, True)`` reading the partitioned layout (cached under
-    the repo warehouse, keyed by the sf_dir name and invalidated on
-    source size/mtime change), or ``(df, False)`` falling back to the
-    flat parquet when the layout can't be materialized (read-only FS,
-    concurrent writer, ...). Either way ``ts`` is canonical NTZ and the
-    query result must be identical — the layout only changes WHAT the
-    scan can prune, never the rows. The `_SOURCE.json` marker is
-    underscore-prefixed so Spark's parquet reader ignores it.
+    Returns ``(df, True)`` reading the partitioned layout (a build-once
+    store, `serve.build_once`, keyed by the events source's path and
+    content), or ``(df, False)`` falling back to the flat parquet when
+    the layout can't be materialized (read-only warehouse, ...). Either
+    way ``ts`` is canonical NTZ and the query result must be identical
+    — the layout only changes WHAT the scan can prune, never the rows.
     """
-    import json
-
+    from metastore_spark.serve import build_once
     from metastore_spark.ts import normalize_ts
 
     src = os.path.join(sf_dir, "events.parquet")
     flat = lambda: normalize_ts(spark.read.parquet(src))  # noqa: E731
-    if warehouse is None:
-        warehouse = os.environ.get(
-            "SPARK_GRAFT_WAREHOUSE",
-            os.path.join(
-                os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                "spark-warehouse",
-            ),
-        )
-    key = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    dest = os.path.join(os.path.abspath(warehouse), "events_by_day", key)
-    marker = os.path.join(dest, "_SOURCE.json")
     try:
-        st = os.stat(src)
-        sig = {"size": st.st_size, "mtime": int(st.st_mtime)}
-        fresh = False
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                fresh = json.load(fh) == sig
-        if not fresh:
-            # Build in a process-private tmp dir and os.rename into
-            # place (same protocol as serve.materialized): an in-place
-            # overwrite lets two concurrent builders interleave Spark's
-            # delete-then-write, leaving BOTH writers' part-files under
-            # a fresh marker — silently doubled aggregates forever
-            # after. rename is atomic; losing the race just means the
-            # winner's identical layout serves.
-            import shutil
-
-            tmp = f"{dest}.build-{os.getpid()}"
-            write_events_by_day(flat(), tmp)
-            with open(os.path.join(tmp, "_SOURCE.json"), "w") as fh:
-                json.dump(sig, fh)
-            if os.path.exists(dest):  # stale layout: move aside, drop
-                trash = f"{dest}.old-{os.getpid()}"
-                try:
-                    os.rename(dest, trash)
-                    shutil.rmtree(trash, ignore_errors=True)
-                except OSError:
-                    pass  # another process already moved it
-            try:
-                os.rename(tmp, dest)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            # reclaim siblings orphaned by CRASHED builders (a dead
-            # process's .build-<pid>/.old-<pid> has no cleanup path and
-            # each holds a full-size copy); a day comfortably outlives
-            # any live build
-            import time as _time
-
-            parent = os.path.dirname(dest)
-            base = os.path.basename(dest)
-            for entry in os.listdir(parent):
-                if not (
-                    entry.startswith(f"{base}.build-")
-                    or entry.startswith(f"{base}.old-")
-                ):
-                    continue
-                victim = os.path.join(parent, entry)
-                try:
-                    if _time.time() - os.stat(victim).st_mtime > 86400:
-                        shutil.rmtree(victim, ignore_errors=True)
-                except OSError:
-                    pass
-        return spark.read.parquet(dest), True
+        path = build_once(
+            "events_by_day",
+            "events",
+            [src],
+            lambda tmp: write_events_by_day(flat(), tmp),
+        )
+        if path is not None:
+            return spark.read.parquet(path), True
     except Exception:
-        return flat(), False
+        pass
+    return flat(), False
 
 
 def read_events_day_range(

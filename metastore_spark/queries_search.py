@@ -6,9 +6,9 @@ engines tokenize identically).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,6 +18,7 @@ from metastore_spark.search.analysis import ENGLISH_STOPWORDS
 from metastore_spark.search.index import build_index
 from metastore_spark.search.scoring import bm25_scores
 from metastore_spark.search.serve import load_index, materialize_index
+from metastore_spark.serve import build_once
 
 _Q = "spark join stream"
 _STOPS_SQL = ", ".join(f"'{s}'" for s in ENGLISH_STOPWORDS)
@@ -25,96 +26,34 @@ _TERMS_SQL = ", ".join(f"'{t}'" for t in _Q.split())
 
 # Session-level handle cache: avoids re-opening the on-disk index per
 # call. Keyed by Spark applicationId (stable and unique per session —
-# id(spark) could be recycled by the allocator after a session dies).
+# id(spark) could be recycled by the allocator after a session dies)
+# and the store path, which carries the corpus fingerprint.
 # LRU-bounded: a long-lived session cycling through many corpora must
-# not grow handles without limit (the on-disk prune already bounds
-# storage; this bounds the in-memory side).
-from collections import OrderedDict
-
-_INDEX_CACHE: OrderedDict[tuple[str, str, str], object] = OrderedDict()
+# not grow handles without limit.
+_INDEX_CACHE: OrderedDict[tuple[str, str], object] = OrderedDict()
 _INDEX_CACHE_MAX = 8
-
-_SERVE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "spark-warehouse",
-    "serving_index",
-)
-
-
-def _source_fingerprint(sf_dir: str, stem: bool = False) -> tuple[str, str]:
-    """(source-path tag, content fingerprint) of the documents source.
-    The tag also encodes the analysis tier, so the stem-free and
-    stemmed indexes of one source coexist and prune independently.
-
-    parquet paths are DIRECTORIES — a directory's own stat never
-    reflects content — so the fingerprint hashes every file's
-    (relative name, size, mtime) under it. The tag identifies the
-    source path independent of content, so superseded index builds for
-    the same source can be pruned.
-    """
-    src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    tag = hashlib.md5(f"{src}|stem={stem}".encode()).hexdigest()[:8]
-    parts: list[str] = [src]
-    try:
-        if os.path.isdir(src):
-            for root, _dirs, files in sorted(os.walk(src)):
-                for name in sorted(files):
-                    st = os.stat(os.path.join(root, name))
-                    rel = os.path.relpath(os.path.join(root, name), src)
-                    parts.append(f"{rel}|{st.st_size}|{st.st_mtime_ns}")
-        else:
-            st = os.stat(src)
-            parts.append(f"{st.st_size}|{st.st_mtime_ns}")
-    except OSError:
-        pass
-    fp = hashlib.md5("\n".join(parts).encode()).hexdigest()[:16]
-    return tag, fp
 
 
 def _index_for(spark: SparkSession, sf_dir: str, stem: bool = False):
-    """Serving-path index: materialized once on disk per corpus, then
-    every later call (any session, any process) reopens the bucketed
+    """Serving-path index over the documents table: a build-once store
+    (`serve.build_once`, one per corpus content and analysis tier), so
+    every later call in any session or process reopens the bucketed
     tables instead of re-analyzing the corpus — the analyze-at-ingest
     trade ES makes (SCALE.md 'Full-text search'). A query touches only
-    term-pruned postings + two vocabulary-sized side tables.
-
-    Concurrency/staleness: builds go to a process-private tmp dir and
-    are atomically renamed into place (a losing racer discards its
-    build and serves the winner's); the cache key includes the content
-    fingerprint so a rewritten corpus is re-indexed mid-session; index
-    dirs for superseded fingerprints of the same source are pruned."""
-    tag, fp = _source_fingerprint(sf_dir, stem)
-    key = (spark.sparkContext.applicationId, tag, fp)
+    term-pruned postings + two vocabulary-sized side tables."""
+    path = build_once(
+        "serving_index",
+        "documents-stem" if stem else "documents",
+        [os.path.join(sf_dir, "documents.parquet")],
+        lambda tmp: materialize_index(
+            spark, _t(spark, sf_dir, "documents"), "doc_id", ["text"], tmp,
+            stem=stem,
+        ),
+    )
+    if path is None:
+        raise OSError("search index: the warehouse is not writable")
+    key = (spark.sparkContext.applicationId, path)
     if key not in _INDEX_CACHE:
-        path = os.path.join(_SERVE_ROOT, f"{tag}-{fp}")
-        if not os.path.exists(os.path.join(path, "_DONE")):
-            d = _t(spark, sf_dir, "documents")
-            tmp = f"{path}.build-{os.getpid()}"
-            materialize_index(spark, d, "doc_id", ["text"], tmp, stem=stem)
-            with open(os.path.join(tmp, "_DONE"), "w") as fh:
-                fh.write("ok\n")
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            # prune superseded builds of this same source — including
-            # dirs under the legacy (pre-tier) tag format, which no
-            # current tag can ever address again
-            src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-            legacy_tag = hashlib.md5(src.encode()).hexdigest()[:8]
-            if os.path.isdir(_SERVE_ROOT):
-                for entry in os.listdir(_SERVE_ROOT):
-                    full = os.path.join(_SERVE_ROOT, entry)
-                    stale_current = (
-                        entry.startswith(f"{tag}-")
-                        and entry != f"{tag}-{fp}"
-                    )
-                    stale_legacy = entry.startswith(f"{legacy_tag}-")
-                    if (
-                        (stale_current or stale_legacy)
-                        and not entry.endswith(f".build-{os.getpid()}")
-                    ):
-                        shutil.rmtree(full, ignore_errors=True)
         _INDEX_CACHE[key] = load_index(spark, path)
         while len(_INDEX_CACHE) > _INDEX_CACHE_MAX:
             _INDEX_CACHE.popitem(last=False)  # evict least-recently-used

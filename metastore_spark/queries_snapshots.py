@@ -10,6 +10,7 @@ under the same parquet files every other operator reads.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 
@@ -17,13 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metastore_spark.queries import query, _t
+from metastore_spark.serve import build_once
 from metastore_spark.sources import snapshots as snap
-
-_SNAP_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "spark-warehouse",
-    "snapshots",
-)
 
 
 def _append_width(
@@ -37,12 +33,10 @@ def _append_width(
     while at 100 TB the same ceil(bytes / 64 MiB) keeps files in the
     target range and the write parallel. Derived from the parquet
     FOOTERS' uncompressed bytes of the source fixture (driver-side
-    metadata read, no scan) — an upper bound for filtered inputs,
-    which only errs toward more/smaller files, never toward losing
-    write parallelism. Returns 0 (caller skips the coalesce) when the
-    raw fixture is absent."""
-    import pyarrow.parquet as pq
-
+    metadata read, no scan, once per file stamp) — an upper bound for
+    filtered inputs, which only errs toward more/smaller files, never
+    toward losing write parallelism. Returns 0 (caller skips the
+    coalesce) when the raw fixture is absent."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:
         files = (
@@ -57,14 +51,27 @@ def _append_width(
         )
         if not files:
             return 0
-        total = 0
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                total += md.row_group(rg).total_byte_size
-        return max(1, -(-total // bytes_per_file))
+        stamp = tuple(
+            (f, os.stat(f).st_size, os.stat(f).st_mtime_ns) for f in files
+        )
+        return max(1, -(-_footer_bytes(stamp) // bytes_per_file))
     except Exception:
         return 0
+
+
+@functools.lru_cache(maxsize=64)
+def _footer_bytes(stamp: tuple) -> int:
+    """Uncompressed bytes the footers of ``stamp``'s files record.
+    ``stamp`` carries each file's (path, size, mtime_ns), so a
+    rewritten file is a new key and never served a stale total."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for f, _size, _mtime in stamp:
+        md = pq.ParquetFile(f).metadata
+        for rg in range(md.num_row_groups):
+            total += md.row_group(rg).total_byte_size
+    return total
 
 
 def _sized(df: DataFrame, sf_dir: str, table: str = "events") -> DataFrame:
@@ -75,60 +82,58 @@ def _sized(df: DataFrame, sf_dir: str, table: str = "events") -> DataFrame:
     return df.coalesce(w) if w else df
 
 
-def _events_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once snapshot table over the events corpus: three
-    committed versions (append, append, COW delete), keyed by corpus
-    content like every serving store (serve.py idiom: stage under a
-    process-private dir, atomic-rename the COMPLETE table into place,
-    losers discard)."""
-    from metastore_spark.serve import _fingerprint
-
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    # v3 store key: v3 commits record microsecond ts_us, which
-    # TIMESTAMP AS OF resolution needs to distinguish commits landing
-    # within one wall-clock second (v2 added min/max stats on user_id)
-    # — older stores must not satisfy the build-once check
-    root = os.path.join(_SNAP_ROOT, f"events-v3-{fp}")
-    if snap.current_version(root) >= 3:
-        return root
-
-    base = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
+def _fixture(sf_dir: str, tag: str, build) -> str:
+    """Root of the snapshot-format fixture ``tag`` over the events
+    corpus: a build-once store (`serve.build_once`) that ``build(tmp)``
+    commits into and every later call reopens. The key covers the
+    source, not the code: bump ``tag`` when a fixture's build changes.
+    Side files (a victim id, say) are written into ``tmp`` too, so
+    they publish with the table."""
+    root = build_once(
+        "snapshots", tag, [os.path.join(sf_dir, "events.parquet")], build
     )
-    cutoff = int(base.agg(F.max("user_id")).first()[0]) // 10
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    # appends land range-partitioned on user_id so the later range
-    # delete AFFECTS some files and carries the rest by reference —
-    # the file layout a real table would have (cluster by the
-    # erasure/retention key), and the layout that makes COW cheap
-    snap.commit_append(
-        spark,
-        tmp,
-        base.filter(F.col("event_id") % 3 == 0).repartitionByRange(
-            4, "user_id"
-        ),
-        stats_cols=["user_id"],  # manifest min/max -> file skipping
-    )
-    snap.commit_append(
-        spark,
-        tmp,
-        base.filter(F.col("event_id") % 3 == 1).repartitionByRange(
-            4, "user_id"
-        ),
-    )
-    snap.commit_delete_where(
-        spark,
-        tmp,
-        (F.col("user_id") < cutoff) & (F.col("event_type") == "click"),
-    )
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
+    if root is None:
+        raise OSError(f"snapshot fixture {tag}: the warehouse is not writable")
     return root
+
+
+def _events_table(spark: SparkSession, sf_dir: str) -> str:
+    """Snapshot table over the events corpus: three committed versions
+    (append, append, COW delete). The v3 tag's commits record
+    microsecond ts_us, which TIMESTAMP AS OF resolution needs to
+    distinguish commits landing within one wall-clock second."""
+
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        cutoff = int(base.agg(F.max("user_id")).first()[0]) // 10
+        # appends land range-partitioned on user_id so the later range
+        # delete AFFECTS some files and carries the rest by reference —
+        # the file layout a real table would have (cluster by the
+        # erasure/retention key), and the layout that makes COW cheap
+        snap.commit_append(
+            spark,
+            tmp,
+            base.filter(F.col("event_id") % 3 == 0).repartitionByRange(
+                4, "user_id"
+            ),
+            stats_cols=["user_id"],  # manifest min/max -> file skipping
+        )
+        snap.commit_append(
+            spark,
+            tmp,
+            base.filter(F.col("event_id") % 3 == 1).repartitionByRange(
+                4, "user_id"
+            ),
+        )
+        snap.commit_delete_where(
+            spark,
+            tmp,
+            (F.col("user_id") < cutoff) & (F.col("event_type") == "click"),
+        )
+
+    return _fixture(sf_dir, "events-v3", build)
 
 
 @query(
@@ -201,41 +206,30 @@ def events_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _eqdel_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once snapshot table pinning EQUALITY-DELETE semantics:
-    v1 appends the even-event rows, v2 equality-deletes every
-    user_id divisible by 7 (by KEY, no position scan), v3 appends the
-    odd-event rows — which include the deleted users, so the scope
-    rule (deletes bind rows written BEFORE them) is observable."""
-    from metastore_spark.serve import _fingerprint
+    """Snapshot table pinning EQUALITY-DELETE semantics: v1 appends the
+    even-event rows, v2 equality-deletes every user_id divisible by 7
+    (by KEY, no position scan), v3 appends the odd-event rows — which
+    include the deleted users, so the scope rule (deletes bind rows
+    written BEFORE them) is observable."""
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"eqdel-v1-{fp}")
-    if snap.current_version(root) >= 3:
-        return root
-    base = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(
-        spark, tmp, base.filter(F.col("event_id") % 2 == 0)
-    )
-    keys = (
-        base.filter(F.col("user_id") % 7 == 0)
-        .select("user_id")
-        .distinct()
-    )
-    snap.commit_mor_delete_keys(spark, tmp, keys)
-    snap.commit_append(
-        spark, tmp, base.filter(F.col("event_id") % 2 == 1)
-    )
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return root
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        snap.commit_append(
+            spark, tmp, base.filter(F.col("event_id") % 2 == 0)
+        )
+        keys = (
+            base.filter(F.col("user_id") % 7 == 0)
+            .select("user_id")
+            .distinct()
+        )
+        snap.commit_mor_delete_keys(spark, tmp, keys)
+        snap.commit_append(
+            spark, tmp, base.filter(F.col("event_id") % 2 == 1)
+        )
+
+    return _fixture(sf_dir, "eqdel-v1", build)
 
 
 @query(
@@ -308,36 +302,24 @@ def events_snapshot_eq_delete(
 
 
 def _upsert_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once snapshot table pinning MOR-UPSERT semantics: v1
-    appends the even-event rows; v2 `commit_mor_upsert`s ONE atomic
-    CDC batch — restated values (x2) for event_id % 4 == 0 plus all
-    odd-event rows as inserts — keyed on event_id, zero scan, zero
-    rewrite."""
-    from metastore_spark.serve import _fingerprint
+    """Snapshot table pinning MOR-UPSERT semantics: v1 appends the
+    even-event rows; v2 `commit_mor_upsert`s ONE atomic CDC batch —
+    restated values (x2) for event_id % 4 == 0 plus all odd-event rows
+    as inserts — keyed on event_id, zero scan, zero rewrite."""
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"upsert-v1-{fp}")
-    if snap.current_version(root) >= 2:
-        return root
-    base = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(
-        spark, tmp, base.filter(F.col("event_id") % 2 == 0)
-    )
-    batch = base.filter(F.col("event_id") % 4 == 0).withColumn(
-        "value", F.col("value") * 2
-    ).unionByName(base.filter(F.col("event_id") % 2 == 1))
-    snap.commit_mor_upsert(spark, tmp, batch, ["event_id"])
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return root
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        snap.commit_append(
+            spark, tmp, base.filter(F.col("event_id") % 2 == 0)
+        )
+        batch = base.filter(F.col("event_id") % 4 == 0).withColumn(
+            "value", F.col("value") * 2
+        ).unionByName(base.filter(F.col("event_id") % 2 == 1))
+        snap.commit_mor_upsert(spark, tmp, batch, ["event_id"])
+
+    return _fixture(sf_dir, "upsert-v1", build)
 
 
 @query(
@@ -970,7 +952,7 @@ def events_stream_upsert_sink(
 
 def _serving_store(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """The events corpus SERVED through the snapshot table format
-    end-to-end (VERDICT r6 task 1) — the lifecycle a 100 TB metastore
+    end-to-end — the lifecycle a 100 TB metastore
     runs on its one mutating table (the reference's append-only
     events kind, /root/reference/metastore/models.py:82-85):
 
@@ -983,73 +965,56 @@ def _serving_store(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
            `commit_with_retry` — the victim user's rows are rewritten
            out of affected files only.
 
-    Returns (root, victim_user). Built once per corpus fingerprint
-    (serve.py idiom: process-private build dir, atomic rename, losers
-    discard); ``ts`` is projected to epoch-micros int64 at ingest so
-    the stored table is encoding-canonical."""
-    from metastore_spark.serve import _fingerprint
-    from metastore_spark.ts import ts_us
-
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"serving-{fp}")
-    victim_path = os.path.join(root, "victim.json")
-    if snap.current_version(root) >= 5 and os.path.exists(victim_path):
-        import json
-
-        with open(victim_path) as fh:
-            return root, json.load(fh)["user_id"]
-
-    base = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        ts_us("ts").alias("ts_us"),
-    )
-    victim = int(
-        base.filter(F.col("event_type") == "click")
-        .agg(F.min("user_id"))
-        .first()[0]
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
+    Returns (root, victim_user); the victim is published with the table
+    as ``victim.json``. ``ts`` is projected to epoch-micros int64 at
+    ingest so the stored table is encoding-canonical."""
+    import json
     import tempfile
 
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    feed = tempfile.mkdtemp(prefix="snap_feed_")
-    ckpt = tempfile.mkdtemp(prefix="snap_ckpt_")
-    try:
-        base.repartition(3).write.mode("overwrite").parquet(feed)
-        stream = (
-            spark.readStream.schema(spark.read.parquet(feed).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        snap.ingest_stream(stream, tmp, ckpt, stream_id=f"events-{fp[:8]}")
-        assert snap.current_version(tmp) == 3
-        snap.commit_with_retry(
-            tmp, lambda: snap.compact(spark, tmp, target_files=1)
-        )
-        snap.commit_with_retry(
-            tmp,
-            lambda: snap.commit_delete_where(
-                spark, tmp, F.col("user_id") == victim
-            ),
-        )
-        import json
+    from metastore_spark.ts import ts_us
 
-        with open(os.path.join(tmp, "victim.json"), "w") as fh:
-            json.dump({"user_id": victim}, fh)
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id",
+            "user_id",
+            "event_type",
+            "value",
+            ts_us("ts").alias("ts_us"),
+        )
+        victim = int(
+            base.filter(F.col("event_type") == "click")
+            .agg(F.min("user_id"))
+            .first()[0]
+        )
+        feed = tempfile.mkdtemp(prefix="snap_feed_")
+        ckpt = tempfile.mkdtemp(prefix="snap_ckpt_")
         try:
-            os.rename(tmp, root)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    finally:
-        shutil.rmtree(feed, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-    return root, victim
+            base.repartition(3).write.mode("overwrite").parquet(feed)
+            stream = (
+                spark.readStream.schema(spark.read.parquet(feed).schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(feed)
+            )
+            snap.ingest_stream(stream, tmp, ckpt, stream_id="events-serving")
+            assert snap.current_version(tmp) == 3
+            snap.commit_with_retry(
+                tmp, lambda: snap.compact(spark, tmp, target_files=1)
+            )
+            snap.commit_with_retry(
+                tmp,
+                lambda: snap.commit_delete_where(
+                    spark, tmp, F.col("user_id") == victim
+                ),
+            )
+            with open(os.path.join(tmp, "victim.json"), "w") as fh:
+                json.dump({"user_id": victim}, fh)
+        finally:
+            shutil.rmtree(feed, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+    root = _fixture(sf_dir, "serving", build)
+    with open(os.path.join(root, "victim.json")) as fh:
+        return root, json.load(fh)["user_id"]
 
 
 @query(
@@ -1228,48 +1193,35 @@ def events_snapshot_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _day_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once DAY-PARTITIONED snapshot events table (VERDICT r7
-    task 2): the partition spec lives IN the commits — two appends
-    (the second inherits the spec without restating it) lay files out
-    one day per file group with per-file day values in segment
-    metadata."""
-    from metastore_spark.serve import _fingerprint
+    """DAY-PARTITIONED snapshot events table: the partition spec lives
+    IN the commits — two appends (the second inherits the spec without
+    restating it) lay files out one day per file group with per-file
+    day values in segment metadata. The frame is repartitioned on the
+    spec column before each append, so each lands one file per day
+    instead of one per input partition x day."""
     from metastore_spark.ts import ts_us
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    # day3: day-CLUSTERED layout (repartition on the spec column
-    # before each append -> one file per day per append, instead of
-    # one per input partition x day after the r10 serving-store
-    # fan-out); day2 added per-file row accounting — older-generation
-    # stores must not satisfy the build-once check
-    root = os.path.join(_SNAP_ROOT, f"day3-{fp}")
-    if snap.current_version(root) >= 2:
-        return root
-    base = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-        ts_us("ts").alias("ts_us"),
-    ).repartition(F.col("day"))
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(
-        spark,
-        tmp,
-        base.filter(F.col("event_id") % 2 == 0),
-        partition_by=["day"],
-    )
-    # spec inheritance is part of what the table serves: no restate
-    snap.commit_append(spark, tmp, base.filter(F.col("event_id") % 2 == 1))
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return root
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id",
+            "user_id",
+            "event_type",
+            "value",
+            F.date_format("ts", "yyyy-MM-dd").alias("day"),
+            ts_us("ts").alias("ts_us"),
+        ).repartition(F.col("day"))
+        snap.commit_append(
+            spark,
+            tmp,
+            base.filter(F.col("event_id") % 2 == 0),
+            partition_by=["day"],
+        )
+        # spec inheritance is part of what the table serves: no restate
+        snap.commit_append(
+            spark, tmp, base.filter(F.col("event_id") % 2 == 1)
+        )
+
+    return _fixture(sf_dir, "day3", build)
 
 
 @query(
@@ -1344,89 +1296,76 @@ def events_snapshot_day_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zcell_table(spark: SparkSession, sf_dir: str) -> tuple[str, int, list]:
-    """Build-once Z-CELL-PARTITIONED snapshot events table with a
-    partition-scoped GDPR erasure committed on top (VERDICT r7 task
-    2): `layout.py`'s Z-order cells composed INTO the commit protocol
-    — v1 appends the corpus cell-partitioned, v2 erases the victim
-    user through `commit_delete_where(scan_prune=victim cells)`, so
-    the delete scans only the files the driver-side box decomposition
-    names. Returns (root, victim_user, victim_cells)."""
+    """Z-CELL-PARTITIONED snapshot events table with a partition-scoped
+    GDPR erasure committed on top: `layout.py`'s Z-order cells composed
+    INTO the commit protocol — v1 appends the corpus cell-partitioned,
+    v2 erases the victim user through `commit_delete_where(scan_prune=
+    victim cells)`, so the delete scans only the files the driver-side
+    box decomposition names. Returns (root, victim_user, victim_cells),
+    the last two published with the table as ``erasure.json``."""
     import json
 
     from metastore_spark.layout import zcells_for_box, zorder_cell, zorder_shifts
-    from metastore_spark.serve import _fingerprint
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    # zcells2: cell-CLUSTERED layout — the frame is repartitioned on
-    # the partition column before the identity-partitioned append, so
-    # the table lands ONE file per cell instead of one per (input
-    # partition x cell). The r10 8-way serving-store fan-out tripled
-    # this table's file count (552 vs 180) and with it every full-
-    # version scan (the r11 A/B's one code_regression); clustering by
-    # the spec column is also the correct 100 TB write shape
-    # (Iceberg/Delta guidance: sort/cluster on partition keys before
-    # an identity-partitioned write). Name bump busts pre-clustered
-    # build-once stores.
-    root = os.path.join(_SNAP_ROOT, f"zcells2-{fp}")
-    meta_path = os.path.join(root, "erasure.json")
-    if snap.current_version(root) >= 2 and os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            mm = json.load(fh)
-        return root, mm["victim"], mm["cells"]
-
-    ev = _t(spark, sf_dir, "events")
-    stats = ev.agg(
-        F.max("user_id"),
-        F.min(F.to_date("ts")),
-        F.datediff(F.max(F.to_date("ts")), F.min(F.to_date("ts"))),
-        F.min(F.when(F.col("event_type") == "click", F.col("user_id"))),
-    ).first()
-    u_max, d0, d_max, victim = (
-        int(stats[0]),
-        stats[1],
-        int(stats[2]),
-        int(stats[3]),
-    )
-    u_shift, d_shift = zorder_shifts(u_max, d_max)
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        zorder_cell(
-            F.col("user_id"),
-            F.datediff(F.to_date("ts"), F.lit(d0)),
-            u_shift,
-            d_shift,
-        ).alias("zcell"),
-    )
-    cells = zcells_for_box(victim, victim, 0, d_max, u_shift, d_shift)
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(
-        spark,
-        tmp,
-        base.repartition(F.col("zcell")),  # one file per cell
-        partition_by=["zcell"],
-    )
-    snap.commit_with_retry(
-        tmp,
-        lambda: snap.commit_delete_where(
+    def build(tmp: str) -> None:
+        ev = _t(spark, sf_dir, "events")
+        stats = ev.agg(
+            F.max("user_id"),
+            F.min(F.to_date("ts")),
+            F.datediff(F.max(F.to_date("ts")), F.min(F.to_date("ts"))),
+            F.min(F.when(F.col("event_type") == "click", F.col("user_id"))),
+        ).first()
+        u_max, d0, d_max, victim = (
+            int(stats[0]),
+            stats[1],
+            int(stats[2]),
+            int(stats[3]),
+        )
+        u_shift, d_shift = zorder_shifts(u_max, d_max)
+        base = ev.select(
+            "event_id",
+            "user_id",
+            "event_type",
+            "value",
+            zorder_cell(
+                F.col("user_id"),
+                F.datediff(F.to_date("ts"), F.lit(d0)),
+                u_shift,
+                d_shift,
+            ).alias("zcell"),
+        )
+        cells = zcells_for_box(victim, victim, 0, d_max, u_shift, d_shift)
+        # cell-CLUSTERED layout: the frame is repartitioned on the
+        # partition column before the identity-partitioned append, so
+        # the table lands ONE file per cell instead of one per (input
+        # partition x cell) — unclustered, the 8-way serving-store
+        # fan-out tripled its file count (552 vs 180) and with it every
+        # full-version scan; clustering by the spec column is also the
+        # correct 100 TB write shape (Iceberg/Delta guidance: sort/
+        # cluster on partition keys before an identity-partitioned
+        # write)
+        snap.commit_append(
             spark,
             tmp,
-            F.col("user_id") == victim,
-            scan_prune={"zcell": cells},
-        ),
-    )
-    with open(os.path.join(tmp, "erasure.json"), "w") as fh:
-        json.dump({"victim": victim, "cells": cells}, fh)
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return root, victim, cells
+            base.repartition(F.col("zcell")),  # one file per cell
+            partition_by=["zcell"],
+        )
+        snap.commit_with_retry(
+            tmp,
+            lambda: snap.commit_delete_where(
+                spark,
+                tmp,
+                F.col("user_id") == victim,
+                scan_prune={"zcell": cells},
+            ),
+        )
+        with open(os.path.join(tmp, "erasure.json"), "w") as fh:
+            json.dump({"victim": victim, "cells": cells}, fh)
+
+    root = _fixture(sf_dir, "zcells2", build)
+    with open(os.path.join(root, "erasure.json")) as fh:
+        mm = json.load(fh)
+    return root, mm["victim"], mm["cells"]
 
 
 @query(
@@ -1653,56 +1592,44 @@ def events_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once snapshot table with a full column-ID evolution
-    history (VERDICT r8 task 5): v1 appends under (event_id, uid int,
-    event_type); v2 WIDENS uid to long; v3 appends wide rows; v4
-    RENAMES uid to user_id; v5 appends under the new name. Three file
-    cohorts — narrow-old-name, wide-old-name, wide-new-name — all
-    resolve through the manifest's ID mapping."""
-    from metastore_spark.serve import _fingerprint
+    """Snapshot table with a full column-ID evolution history: v1
+    appends under (event_id, uid int, event_type); v2 WIDENS uid to
+    long; v3 appends wide rows; v4 RENAMES uid to user_id; v5 appends
+    under the new name. Three file cohorts — narrow-old-name,
+    wide-old-name, wide-new-name — all resolve through the manifest's
+    ID mapping."""
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"events-evo1-{fp}")
-    if snap.current_version(root) >= 5:
-        return root
-
-    base = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(
-        spark,
-        tmp,
-        base.filter(F.col("event_id") % 3 == 0).select(
-            "event_id",
-            F.col("user_id").cast("int").alias("uid"),
-            "event_type",
-        ),
-    )
-    snap.widen_column(tmp, "uid", "long")
-    snap.commit_append(
-        spark,
-        tmp,
-        base.filter(F.col("event_id") % 3 == 1).select(
-            "event_id", F.col("user_id").alias("uid"), "event_type"
-        ),
-    )
-    snap.rename_column(tmp, "uid", "user_id")
-    snap.commit_append(
-        spark,
-        tmp,
-        base.filter(F.col("event_id") % 3 == 2).select(
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type"
-        ),
-    )
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return root
+        )
+        snap.commit_append(
+            spark,
+            tmp,
+            base.filter(F.col("event_id") % 3 == 0).select(
+                "event_id",
+                F.col("user_id").cast("int").alias("uid"),
+                "event_type",
+            ),
+        )
+        snap.widen_column(tmp, "uid", "long")
+        snap.commit_append(
+            spark,
+            tmp,
+            base.filter(F.col("event_id") % 3 == 1).select(
+                "event_id", F.col("user_id").alias("uid"), "event_type"
+            ),
+        )
+        snap.rename_column(tmp, "uid", "user_id")
+        snap.commit_append(
+            spark,
+            tmp,
+            base.filter(F.col("event_id") % 3 == 2).select(
+                "event_id", "user_id", "event_type"
+            ),
+        )
+
+    return _fixture(sf_dir, "events-evo1", build)
 
 
 @query(
@@ -1767,41 +1694,28 @@ def events_snapshot_schema_evolution(
 
 
 def _clustered_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once snapshot table exercising Z-ORDER-CLUSTERED
-    COMPACTION (VERDICT r8 task 6): v1 appends the events corpus as
-    ordinary unclustered files; v2 is `compact(cluster_by=[user_id,
-    day])` — the fold lands one file per Morton cell with the
-    cluster_spec recorded in the manifest."""
-    from metastore_spark.serve import _fingerprint
+    """Snapshot table exercising Z-ORDER-CLUSTERED COMPACTION: v1
+    appends the events corpus as ordinary unclustered files; v2 is
+    `compact(cluster_by=[user_id, day])` — the fold lands one file per
+    Morton cell with the cluster_spec recorded in the manifest."""
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"events-zcompact-{fp}")
-    if snap.current_version(root) >= 2:
-        return root
+    def build(tmp: str) -> None:
+        ev = _t(spark, sf_dir, "events")
+        d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
+        base = ev.select(
+            "event_id",
+            "user_id",
+            "event_type",
+            "value",
+            F.datediff(F.to_date("ts"), F.lit(d0)).alias("day"),
+        )
+        snap.commit_append(spark, tmp, base.repartition(8))
+        snap.commit_with_retry(
+            tmp,
+            lambda: snap.compact(spark, tmp, cluster_by=["user_id", "day"]),
+        )
 
-    ev = _t(spark, sf_dir, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).first()[0]
-    base = ev.select(
-        "event_id",
-        "user_id",
-        "event_type",
-        "value",
-        F.datediff(F.to_date("ts"), F.lit(d0)).alias("day"),
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(spark, tmp, base.repartition(8))
-    snap.commit_with_retry(
-        tmp,
-        lambda: snap.compact(spark, tmp, cluster_by=["user_id", "day"]),
-    )
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return root
+    return _fixture(sf_dir, "events-zcompact", build)
 
 
 @query(
@@ -1893,44 +1807,32 @@ def events_snapshot_clustered_compaction(
 
 
 def _wap_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once snapshot table exercising the full WRITE-AUDIT-
-    PUBLISH cycle plus a retention-pinning tag: v1 appends the whole
-    events corpus and is tagged ``prod``; an ``audit`` branch forks
-    v1, runs a quarantine delete (every 7th user's clicks) in
-    isolation, and `publish_branch` lands the audited row set on the
-    trunk as v2 — a metadata-only, fast-forward-checked commit. The
-    trunk was never observable in a half-audited state."""
-    from metastore_spark.serve import _fingerprint
+    """Snapshot table exercising the full WRITE-AUDIT-PUBLISH cycle plus
+    a retention-pinning tag: v1 appends the whole events corpus and is
+    tagged ``prod``; an ``audit`` branch forks v1, runs a quarantine
+    delete (every 7th user's clicks) in isolation, and `publish_branch`
+    lands the audited row set on the trunk as v2 — a metadata-only,
+    fast-forward-checked commit. The trunk was never observable in a
+    half-audited state."""
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"events-wap1-{fp}")
-    if snap.current_version(root) >= 2:
-        return root
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        snap.commit_append(
+            spark, tmp, base.repartitionByRange(4, "user_id")
+        )
+        snap.create_tag(tmp, "prod")  # pins v1 through any retention
+        snap.create_branch(tmp, "audit")
+        snap.commit_delete_where(
+            spark,
+            tmp,
+            (F.col("event_type") == "click") & (F.col("user_id") % 7 == 0),
+            ref="audit",
+        )
+        snap.publish_branch(tmp, "audit")
 
-    base = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(
-        spark, tmp, base.repartitionByRange(4, "user_id")
-    )
-    snap.create_tag(tmp, "prod")  # pins v1 through any retention
-    snap.create_branch(tmp, "audit")
-    snap.commit_delete_where(
-        spark,
-        tmp,
-        (F.col("event_type") == "click") & (F.col("user_id") % 7 == 0),
-        ref="audit",
-    )
-    snap.publish_branch(tmp, "audit")
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return root
+    return _fixture(sf_dir, "events-wap1", build)
 
 
 _WAP_LEG = """
@@ -2088,42 +1990,33 @@ def events_snapshot_partitions_metadata(
 
 
 def _mor_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once snapshot table exercising MERGE-ON-READ deletes:
-    v1 appends the events corpus; v2 and v3 are `commit_mor_delete`s
-    (zero data files rewritten — the erasure lands as position-delete
-    parquet and an accumulated ``delete_files`` list); v4 is the
-    compaction that applies and clears them."""
-    from metastore_spark.serve import _fingerprint
+    """Snapshot table exercising MERGE-ON-READ deletes: v1 appends the
+    events corpus; v2 and v3 are `commit_mor_delete`s (zero data files
+    rewritten — the erasure lands as position-delete parquet and an
+    accumulated ``delete_files`` list); v4 is the compaction that
+    applies and clears them."""
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"events-mor1-{fp}")
-    if snap.current_version(root) >= 4:
-        return root
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        snap.commit_append(
+            spark, tmp, base.repartitionByRange(4, "user_id")
+        )
+        snap.commit_mor_delete(
+            spark,
+            tmp,
+            (F.col("event_type") == "click") & (F.col("user_id") % 5 == 0),
+        )
+        snap.commit_mor_delete(
+            spark,
+            tmp,
+            (F.col("event_type") == "purchase")
+            & (F.col("event_id") % 11 == 0),
+        )
+        snap.compact(spark, tmp, target_files=4)
 
-    base = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(spark, tmp, base.repartitionByRange(4, "user_id"))
-    snap.commit_mor_delete(
-        spark,
-        tmp,
-        (F.col("event_type") == "click") & (F.col("user_id") % 5 == 0),
-    )
-    snap.commit_mor_delete(
-        spark,
-        tmp,
-        (F.col("event_type") == "purchase") & (F.col("event_id") % 11 == 0),
-    )
-    snap.compact(spark, tmp, target_files=4)
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return root
+    return _fixture(sf_dir, "events-mor1", build)
 
 
 _MOR_LEG = """
@@ -2404,30 +2297,19 @@ def events_snapshot_source_batch(
 
 
 def _ow_base_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once day-partitioned base store for the backfill query —
-    the IMMUTABLE trunk the per-run restatement forks from."""
-    from metastore_spark.serve import _fingerprint
+    """Day-partitioned base store for the backfill query — the
+    IMMUTABLE trunk the per-run restatement forks from."""
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"events-owbase1-{fp}")
-    if snap.current_version(root) >= 1:
-        return root
-    base = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "value",
-        F.date_format("ts", "yyyy-MM-dd").alias("day"),
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(spark, tmp, base, partition_by=["day"])
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return root
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id",
+            "user_id",
+            "value",
+            F.date_format("ts", "yyyy-MM-dd").alias("day"),
+        )
+        snap.commit_append(spark, tmp, base, partition_by=["day"])
+
+    return _fixture(sf_dir, "events-owbase1", build)
 
 
 @query(
@@ -2592,36 +2474,24 @@ def events_snapshot_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bloom_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once snapshot events table with BLOOM-FILTER skipping on
-    event_id: round-robin layout (every file's min/max range covers
-    every id — range stats provably cannot skip), blooms built at
-    commit from each file's distinct ids."""
-    from metastore_spark.serve import _fingerprint
+    """Snapshot events table with BLOOM-FILTER skipping on event_id:
+    round-robin layout (every file's min/max range covers every id —
+    range stats provably cannot skip), blooms built at commit from each
+    file's distinct ids."""
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"events-bloom1-{fp}")
-    if snap.current_version(root) >= 1:
-        return root
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        snap.commit_append(
+            spark,
+            tmp,
+            base.repartition(8),
+            stats_cols=["event_id"],
+            bloom_cols=["event_id"],
+        )
 
-    base = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(
-        spark,
-        tmp,
-        base.repartition(8),
-        stats_cols=["event_id"],
-        bloom_cols=["event_id"],
-    )
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return root
+    return _fixture(sf_dir, "events-bloom1", build)
 
 
 @query(
@@ -2685,33 +2555,21 @@ def events_snapshot_bloom_pruned(
 
 
 def _sorted_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once snapshot events table exercising SORTED COMPACTION:
-    v1 appends round-robin (overlapping ranges — stats can't skip),
-    v2 is `compact(sort_by=["user_id"])`, range-partitioning the fold
-    so file ranges become disjoint."""
-    from metastore_spark.serve import _fingerprint
+    """Snapshot events table exercising SORTED COMPACTION: v1 appends
+    round-robin (overlapping ranges — stats can't skip), v2 is
+    `compact(sort_by=["user_id"])`, range-partitioning the fold so file
+    ranges become disjoint."""
 
-    src = os.path.join(sf_dir, "events.parquet")
-    fp = _fingerprint([src])
-    root = os.path.join(_SNAP_ROOT, f"events-sorted1-{fp}")
-    if snap.current_version(root) >= 2:
-        return root
+    def build(tmp: str) -> None:
+        base = _t(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        snap.commit_append(
+            spark, tmp, base.repartition(8), stats_cols=["user_id"]
+        )
+        snap.compact(spark, tmp, target_files=8, sort_by=["user_id"])
 
-    base = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    os.makedirs(_SNAP_ROOT, exist_ok=True)
-    tmp = f"{root}.build-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    snap.commit_append(
-        spark, tmp, base.repartition(8), stats_cols=["user_id"]
-    )
-    snap.compact(spark, tmp, target_files=8, sort_by=["user_id"])
-    try:
-        os.rename(tmp, root)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return root
+    return _fixture(sf_dir, "events-sorted1", build)
 
 
 @query(

@@ -1,19 +1,30 @@
-"""Generic serving-path materialization: build-once, reopen-forever
-derived tables (signature stores, indexes) keyed by source content.
+"""Build-once serving stores: derived tables (signature stores, search
+indexes, partitioned layouts, snapshot-format fixtures) built once per
+source content and reopened by every later query, in any session or
+process.
 
 The production shape this encodes: expensive corpus-wide derivations
 (MinHash/SimHash signature tables, inverted indexes) are INGEST-time
 artifacts, not query-time work — a query against a 100 TB corpus
 reopens a bucketed signature table, it does not re-shingle the corpus.
-The search index (`metastore_spark/queries_search.py`) pioneered the
-pattern; this module generalizes it for any derived DataFrame.
 
-Durability/concurrency contract (same as the search index):
-- cache key = (tag, content fingerprint of the source files), so a
-  rewritten corpus re-materializes and stale builds are pruned;
-- builds land in a process-private tmp dir and atomically rename into
-  place — a losing racer discards its build and serves the winner's;
-- `_DONE` marker gates readers against partial builds.
+One protocol, `build_once`, serves every store kind:
+- a store lives at ``<warehouse>/<kind>/<tag>-<srckey>-<fp>``:
+  ``srckey`` hashes the sources' real paths, so two corpora sharing a
+  tag or a directory name are siblings, never supersessions; ``fp``
+  hashes their content, so a rewritten corpus builds a new store;
+- ``build(tmp)`` writes into a process-private ``<store>.build-<pid>-…``
+  dir, `_DONE` is written last and the dir is renamed into place; a
+  racer that loses the rename discards its own build and serves the
+  winner's, and a reader never sees a store without `_DONE`;
+- every open prunes the same (kind, tag, sources): a superseded store
+  survives until its replacement has been in place `_PRUNE_AGE_SEC`,
+  and another process's in-flight build survives until it is
+  `_BUILD_ORPHAN_AGE_SEC` old (a crashed builder's leftovers).
+
+The warehouse is ``<repo>/spark-warehouse`` unless the
+``SPARK_GRAFT_WAREHOUSE`` environment variable names another (read
+once, at import).
 """
 
 from __future__ import annotations
@@ -21,15 +32,19 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import threading
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-_SERVE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "spark-warehouse",
-    "serve",
+_WAREHOUSE = os.path.abspath(
+    os.environ.get("SPARK_GRAFT_WAREHOUSE")
+    or os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "spark-warehouse",
+    )
 )
-# in-process handle cache: (appId, tag, srckey, fingerprint) -> DataFrame
+# in-process handle cache for `materialized`: (appId, tag, path) -> DataFrame
 _CACHE: dict[tuple, DataFrame] = {}
 # Superseded-fingerprint stores survive until the REPLACEMENT store has
 # been in place this long: any reader of the old store necessarily
@@ -39,60 +54,10 @@ _CACHE: dict[tuple, DataFrame] = {}
 # this safe for a store that had been current for days before being
 # superseded (its own mtime is ancient the moment it's replaced).
 _PRUNE_AGE_SEC = 1800
-# A .build-<pid> tmp dir this old belongs to a crashed builder (no
-# build runs for a day); reclaim it or repeated crashes leak full-size
-# store copies indefinitely.
+# A .build- tmp dir this old belongs to a crashed builder (no build
+# runs for a day); reclaim it or repeated crashes leak full-size store
+# copies indefinitely.
 _BUILD_ORPHAN_AGE_SEC = 86400
-
-
-def _prune_stale(prefix: str, current: str, current_path: str) -> None:
-    """Reclaim superseded stores under ``prefix`` — which scopes to ONE
-    (tag, source-set) pair: two corpora sharing a tag (sf0.01 and sf1
-    signature stores, say) have different source keys and therefore
-    different prefixes, so neither can ever prune the other's LIVE
-    store (they are siblings, not supersessions)."""
-    import time as _time
-
-    try:
-        current_age = _time.time() - os.stat(current_path).st_mtime
-    except OSError:
-        return
-    for entry in os.listdir(_SERVE_ROOT):
-        if not entry.startswith(prefix) or entry == current:
-            continue
-        victim = os.path.join(_SERVE_ROOT, entry)
-        try:
-            victim_age = _time.time() - os.stat(victim).st_mtime
-        except OSError:
-            continue
-        if ".build-" in entry:
-            # in-flight builds are sacred (rmtree kills the builder's
-            # rename) — unless abandoned by a crashed process
-            if victim_age > _BUILD_ORPHAN_AGE_SEC:
-                shutil.rmtree(victim, ignore_errors=True)
-        elif current_age > _PRUNE_AGE_SEC:
-            shutil.rmtree(victim, ignore_errors=True)
-
-
-def _prune_legacy(tag: str, current_path: str) -> None:
-    """Reclaim stores written under the pre-srckey name format
-    ``{tag}-<fp16>`` (plus their .build orphans): no current code can
-    ever address them again, so they are dead full-size copies — the
-    same migration sweep queries_search runs for its legacy tag
-    format. Age-gated on the current store like _prune_stale."""
-    import re as _re
-    import time as _time
-
-    try:
-        current_age = _time.time() - os.stat(current_path).st_mtime
-    except OSError:
-        return
-    if current_age <= _PRUNE_AGE_SEC:
-        return
-    legacy = _re.compile(rf"^{_re.escape(tag)}-[0-9a-f]{{16}}(\.build-\d+)?$")
-    for entry in os.listdir(_SERVE_ROOT):
-        if legacy.match(entry):
-            shutil.rmtree(os.path.join(_SERVE_ROOT, entry), ignore_errors=True)
 
 
 def _fingerprint(sources: list[str]) -> str:
@@ -113,6 +78,69 @@ def _fingerprint(sources: list[str]) -> str:
     return hashlib.md5("\n".join(parts).encode()).hexdigest()[:16]
 
 
+def _prune_stale(root: str, prefix: str, current: str) -> None:
+    """Reclaim the stores ``current`` supersedes: the entries of
+    ``root`` named ``prefix`` + another fingerprint. ``prefix`` scopes
+    to ONE (tag, source set), so corpora sharing a tag (sf0.01 and sf1
+    signature stores, say) never prune each other's live store."""
+    now = time.time()
+    try:
+        current_age = now - os.stat(os.path.join(root, current)).st_mtime
+        entries = os.listdir(root)
+    except OSError:
+        return
+    for entry in entries:
+        if not entry.startswith(prefix) or entry == current:
+            continue
+        victim = os.path.join(root, entry)
+        try:
+            victim_age = now - os.stat(victim).st_mtime
+        except OSError:
+            continue
+        if ".build-" in entry:
+            # in-flight builds are sacred (rmtree kills the builder's
+            # rename) — unless abandoned by a crashed process
+            if victim_age > _BUILD_ORPHAN_AGE_SEC:
+                shutil.rmtree(victim, ignore_errors=True)
+        elif current_age > _PRUNE_AGE_SEC:
+            shutil.rmtree(victim, ignore_errors=True)
+
+
+def build_once(kind: str, tag: str, sources: list[str], build) -> str | None:
+    """Path of the ``kind`` store ``tag`` over ``sources``, built by
+    ``build(tmp)`` (which writes the store's files under the existing,
+    empty dir ``tmp``) the first time this source content is seen and
+    reopened on every later call. Returns None when the warehouse
+    cannot be written; an exception from ``build`` propagates, and its
+    partial build is removed."""
+    root = os.path.join(_WAREHOUSE, kind)
+    srckey = hashlib.md5(
+        "|".join(os.path.realpath(s) for s in sources).encode()
+    ).hexdigest()[:8]
+    prefix = f"{tag}-{srckey}-"
+    name = prefix + _fingerprint(sources)
+    path = os.path.join(root, name)
+    if not os.path.exists(os.path.join(path, "_DONE")):
+        tmp = f"{path}.build-{os.getpid()}-{threading.get_ident()}"
+        shutil.rmtree(tmp, ignore_errors=True)
+        try:
+            os.makedirs(tmp)
+        except OSError:
+            return None
+        try:
+            build(tmp)
+            with open(os.path.join(tmp, "_DONE"), "w") as fh:
+                fh.write("ok\n")
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                pass  # lost the race: the winner's store serves
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    _prune_stale(root, prefix, name)
+    return path
+
+
 def snapshot_store(
     spark: SparkSession,
     sources: list[str],
@@ -127,34 +155,17 @@ def snapshot_store(
     substrate `catalog.load_table` serves mutating kinds through.
 
     Returns the table ROOT path (reopen with `snapshots.read_snapshot`)
-    or None when the warehouse is unwritable — callers fall back to the
-    raw scan; correctness never depends on the cache. Same durability
-    contract as `materialized`: content-fingerprint key, build in a
-    process-private scratch root, atomic rename publishes (the
-    manifest head inside the scratch is complete BEFORE the rename, so
-    a published root is always readable), losers discard."""
+    or None when the store cannot be built — callers fall back to the
+    raw scan; correctness never depends on the cache."""
     from metastore_spark.sources import snapshots as _snap
 
-    fp = _fingerprint(sources)
-    srckey = hashlib.md5(
-        "|".join(os.path.realpath(s) for s in sources).encode()
-    ).hexdigest()[:8]
-    name = f"snap_{tag}-{srckey}-{fp}"
-    path = os.path.join(_SERVE_ROOT, name)
     try:
-        if _snap.current_version(path) == 0:
-            os.makedirs(_SERVE_ROOT, exist_ok=True)
-            tmp = f"{path}.build-{os.getpid()}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            _snap.commit_append(spark, tmp, build())
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-        _prune_stale(f"snap_{tag}-{srckey}-", name, path)
-        if _snap.current_version(path) == 0:
-            return None
-        return path
+        return build_once(
+            "tables",
+            tag,
+            sources,
+            lambda tmp: _snap.commit_append(spark, tmp, build()),
+        )
     except Exception:
         return None
 
@@ -173,45 +184,26 @@ def materialized(
     ``partition_by`` lays the store out hive-partitioned so equality
     probes on those columns become directory pruning (e.g. an IVF
     index partitioned by centroid_id). Falls back to serving
-    ``build()`` directly (no materialization) if the warehouse is
-    unwritable — correctness never depends on the cache.
+    ``build()`` directly (no materialization) if the store cannot be
+    built — correctness never depends on the cache.
     """
-    fp = _fingerprint(sources)
-    # source-path key: scopes the store NAME (and the prune prefix) to
-    # this source set, so corpora sharing a tag coexist
-    # realpath, not abspath: symlinked or CWD-relative spellings of
-    # one corpus must map to ONE store (duplicates would never
-    # supersede each other under per-prefix pruning)
-    srckey = hashlib.md5(
-        "|".join(os.path.realpath(s) for s in sources).encode()
-    ).hexdigest()[:8]
-    key = (spark.sparkContext.applicationId, tag, srckey, fp)
-    if key in _CACHE:
-        return _CACHE[key]
-    path = os.path.join(_SERVE_ROOT, f"{tag}-{srckey}-{fp}")
+
+    def write(tmp: str) -> None:
+        writer = build().write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+
     try:
-        if not os.path.exists(os.path.join(path, "_DONE")):
-            os.makedirs(_SERVE_ROOT, exist_ok=True)
-            tmp = f"{path}.build-{os.getpid()}"
-            writer = build().write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(tmp)
-            with open(os.path.join(tmp, "_DONE"), "w") as fh:
-                fh.write("ok\n")
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-        # prune on EVERY open (not just builds): retention is keyed on
-        # how long the current store has been in place, so superseded
-        # stores and orphaned build dirs are reclaimed by the first
-        # open that happens after the safety window, and a
-        # just-superseded store survives even if its own mtime is old.
-        _prune_stale(f"{tag}-{srckey}-", f"{tag}-{srckey}-{fp}", path)
-        _prune_legacy(tag, path)
-        df = spark.read.parquet(path)
+        path = build_once("serve", tag, sources, write)
     except Exception:
-        df = build()
-    _CACHE[key] = df
-    return df
+        path = None
+    if path is None:
+        return build()
+    key = (spark.sparkContext.applicationId, tag, path)
+    if key not in _CACHE:
+        try:
+            _CACHE[key] = spark.read.parquet(path)
+        except Exception:
+            return build()
+    return _CACHE[key]

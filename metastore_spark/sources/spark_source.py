@@ -120,11 +120,14 @@ def _slice_target_bytes() -> int:
     parquet bytes. Parameterised for deployments (SPARK_GRAFT_SLICE_MB);
     the 32 MiB local default keeps sf-fixture scans to a handful of
     tasks while any production-sized (128 MB+) file still gets its own
-    task."""
-    try:
-        return int(os.environ.get("SPARK_GRAFT_SLICE_MB", "32")) << 20
-    except ValueError:
-        return 32 << 20
+    task. ``0`` plans one file per slice; a negative or non-integer
+    value raises ValueError rather than silently planning either."""
+    raw = os.environ.get("SPARK_GRAFT_SLICE_MB", "32")
+    if not raw.strip().isdecimal():
+        raise ValueError(
+            f"SPARK_GRAFT_SLICE_MB={raw!r}: expected a non-negative integer"
+        )
+    return int(raw) << 20
 
 
 def _arrow_read(part: _FileSlice):

@@ -108,9 +108,7 @@ def test_unwritable_warehouse_falls_back_to_raw(spark, monkeypatch):
     instead of raising."""
     from metastore_spark import serve
 
-    monkeypatch.setattr(
-        serve, "_SERVE_ROOT", "/proc/definitely-not-writable/serve"
-    )
+    monkeypatch.setattr(serve, "_WAREHOUSE", "/proc/definitely-not-writable/wh")
     df = catalog.load_table(spark, SF, "events")
     assert all(SF in f for f in df.inputFiles())
     assert df.count() == 1000
@@ -123,7 +121,7 @@ def test_snapshot_store_build_race_single_winner(spark, tmp_path, monkeypatch):
 
     from metastore_spark import serve
 
-    monkeypatch.setattr(serve, "_SERVE_ROOT", str(tmp_path / "serve"))
+    monkeypatch.setattr(serve, "_WAREHOUSE", str(tmp_path / "wh"))
     src = f"{SF}/events.parquet"
     build = lambda: catalog._raw_table(spark, SF, "events")  # noqa: E731
 

@@ -33,18 +33,17 @@ def test_materialized_recovers_from_crashed_build(spark, tmp_path):
         calls["n"] += 1
         return spark.read.parquet(src).selectExpr("id", "id * 3 AS trp")
 
-    old_root = serve._SERVE_ROOT
-    serve._SERVE_ROOT = str(tmp_path / "serve")
+    old_root = serve._WAREHOUSE
+    serve._WAREHOUSE = str(tmp_path / "wh")
     try:
         # first build to learn the store path, then simulate the crash:
         # evacuate the live store back to a dead builder's tmp name
         df = serve.materialized(spark, [src], "tc", build)
         assert df.count() == 20 and calls["n"] == 1
-        store = [
-            d for d in os.listdir(serve._SERVE_ROOT) if d.startswith("tc-")
-        ]
+        stores = os.path.join(serve._WAREHOUSE, "serve")
+        store = [d for d in os.listdir(stores) if d.startswith("tc-")]
         assert len(store) == 1
-        live = os.path.join(serve._SERVE_ROOT, store[0])
+        live = os.path.join(stores, store[0])
         orphan = f"{live}.build-99999"
         os.rename(live, orphan)  # crash window: built, _DONE, no rename
         assert os.path.exists(os.path.join(orphan, "_DONE"))
@@ -68,7 +67,7 @@ def test_materialized_recovers_from_crashed_build(spark, tmp_path):
             serve._BUILD_ORPHAN_AGE_SEC = old_age
         assert not os.path.exists(orphan)
     finally:
-        serve._SERVE_ROOT = old_root
+        serve._WAREHOUSE = old_root
         serve._CACHE.clear()
 
 

@@ -105,31 +105,31 @@ def test_incremental_refresh_equals_full_build(spark, tmp_path):
     assert got == want
 
 
-def test_events_partitioned_probe_and_pruned_query(spark, tmp_path):
-    """events_partitioned builds the layout once (marker-cached) and
-    the registry's day-range query prunes partitions through it."""
+def test_events_partitioned_probe_and_pruned_query(spark, tmp_path, monkeypatch):
+    """events_partitioned builds the layout once (a build-once store)
+    and the registry's day-range query prunes partitions through it."""
     import metastore_spark.queries_temporal  # noqa: F401
+    from metastore_spark import serve
     from metastore_spark.queries import REGISTRY
 
     wh = str(tmp_path / "wh")
-    df, used = layout.events_partitioned(
-        spark, "/root/testdata/sf0.001", warehouse=wh
-    )
+    monkeypatch.setattr(serve, "_WAREHOUSE", wh)
+    df, used = layout.events_partitioned(spark, "/root/testdata/sf0.001")
     assert used
     flat = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     assert df.count() == flat.count()
-    # second probe reuses the cache (marker matches — no rewrite):
-    # capture the layout dir mtimes and re-probe
+    # second probe reuses the store (no rewrite): capture the store's
+    # _DONE mtime and re-probe
     import os
+    from urllib.parse import urlparse
 
-    dest = os.path.join(wh, "events_by_day", "sf0.001")
-    before = os.path.getmtime(os.path.join(dest, "_SOURCE.json"))
-    df2, used2 = layout.events_partitioned(
-        spark, "/root/testdata/sf0.001", warehouse=wh
-    )
-    assert used2 and os.path.getmtime(
-        os.path.join(dest, "_SOURCE.json")
-    ) == before
+    dest = {urlparse(f).path.split("/event_date=")[0] for f in df.inputFiles()}
+    assert len(dest) == 1
+    dest = dest.pop()
+    assert dest.startswith(os.path.join(wh, "events_by_day") + "/")
+    before = os.path.getmtime(os.path.join(dest, "_DONE"))
+    df2, used2 = layout.events_partitioned(spark, "/root/testdata/sf0.001")
+    assert used2 and os.path.getmtime(os.path.join(dest, "_DONE")) == before
 
     # the registry query (repo-warehouse layout) shows partition
     # pruning in its plan

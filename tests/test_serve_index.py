@@ -78,14 +78,15 @@ def test_kmeans_improves_ivf_recall(spark):
     assert set(exact) == set(approx)  # nprobe=1 suffices with good centroids
 
 
-def test_index_for_detects_rewritten_corpus(spark, tmp_path):
+def test_index_for_detects_rewritten_corpus(spark, tmp_path, monkeypatch):
     """The serving cache must re-index when the corpus content
     changes (fingerprint covers the parquet directory's files, and
     the in-session cache is keyed by it)."""
     import os
-    from pyspark.sql import functions as F
     from metastore_spark import queries_search as qs
+    from metastore_spark import serve
 
+    monkeypatch.setattr(serve, "_WAREHOUSE", str(tmp_path / "wh"))
     sf_dir = str(tmp_path / "corpus")
     os.makedirs(sf_dir)
     docs_path = os.path.join(sf_dir, "documents.parquet")
@@ -105,13 +106,11 @@ def test_index_for_detects_rewritten_corpus(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(docs_path)
 
+    # the superseded index is pruned by an open once its replacement is
+    # past the retention window (0 here; readers get _PRUNE_AGE_SEC):
+    # only one serving dir remains for this source
+    monkeypatch.setattr(serve, "_PRUNE_AGE_SEC", 0)
     idx2 = qs._index_for(spark, sf_dir)
     assert idx2.num_docs == 2  # stale index must NOT be served
-    # superseded build for the same source was pruned: only one
-    # serving dir remains for this source tag
-    tag, fp = qs._source_fingerprint(sf_dir)
-    siblings = [
-        e for e in os.listdir(qs._SERVE_ROOT)
-        if e.startswith(f"{tag}-") and not e.endswith("_DONE")
-    ]
-    assert siblings == [f"{tag}-{fp}"]
+    siblings = os.listdir(os.path.join(serve._WAREHOUSE, "serving_index"))
+    assert len(siblings) == 1 and siblings[0].startswith("documents-")

@@ -1491,3 +1491,35 @@ def test_compact_cluster_by_zorders_and_prunes(spark, tmp_path):
     snap.commit_append(spark, r2, df)
     with pytest.raises(ValueError, match="cluster_spec"):
         snap.clustered_prune(r2, 0, 1, 0, 1)
+
+
+def test_append_width_memoized_per_file_stamp(tmp_path, monkeypatch):
+    """_append_width reads the parquet footers once per (path, size,
+    mtime) stamp: repeat calls read nothing, and a rewritten corpus is
+    re-read, never served the stale width."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from metastore_spark import queries_snapshots as qsn
+
+    src = tmp_path / "events.parquet"
+    pq.write_table(pa.table({"x": list(range(1000))}), src)
+    reads = []
+    real = pq.ParquetFile
+
+    def counting(path, *a, **k):
+        reads.append(path)
+        return real(path, *a, **k)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    one_byte = qsn._append_width(str(tmp_path), bytes_per_file=1)
+    assert one_byte > 1 and len(reads) == 1
+    for _ in range(4):
+        assert qsn._append_width(str(tmp_path), bytes_per_file=1) == one_byte
+    assert len(reads) == 1
+
+    pq.write_table(pa.table({"x": list(range(5000))}), src)
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert qsn._append_width(str(tmp_path), bytes_per_file=1) > one_byte
+    assert len(reads) == 2

@@ -490,6 +490,22 @@ def test_stream_backlog_admission_cap(registered, tmp_path):
         )
 
 
+@pytest.mark.parametrize("raw", ["-1", "abc", "1.5", ""])
+def test_slice_mb_rejects_invalid_values(raw, monkeypatch):
+    """SPARK_GRAFT_SLICE_MB fails loudly: a negative or non-integer
+    value raises instead of silently planning 32 MiB or per-file
+    slices; 0 (one file per slice) and the default stay valid."""
+    from metastore_spark.sources.spark_source import _slice_target_bytes
+
+    monkeypatch.setenv("SPARK_GRAFT_SLICE_MB", raw)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SLICE_MB"):
+        _slice_target_bytes()
+    monkeypatch.setenv("SPARK_GRAFT_SLICE_MB", "0")
+    assert _slice_target_bytes() == 0
+    monkeypatch.delenv("SPARK_GRAFT_SLICE_MB")
+    assert _slice_target_bytes() == 32 << 20
+
+
 def test_slices_pack_files_by_byte_target(registered, tmp_path, monkeypatch):
     """r13: the planner packs many tiny files into few byte-target
     slices (one task per KB-sized micro-batch file was pure scheduler
