@@ -25,9 +25,9 @@ from metastore_spark.sources import snapshots as snap
 def _append_width(
     sf_dir: str, table: str = "events", bytes_per_file: int = 64 << 20
 ) -> int:
-    """Input-size-derived partition count for a commit's input frame
-    (r13, guide §6): a commit input that inherits the scan's
-    granularity writes one file PER SCAN PARTITION — dozens of KB-sized
+    """Input-size-derived partition count for a commit's input frame:
+    a commit input that inherits the scan's granularity writes one
+    file PER SCAN PARTITION — dozens of KB-sized
     files per micro-commit on the local fixtures (each then costing a
     write task, a driver footer/manifest entry, and a read slice),
     while at 100 TB the same ceil(bytes / 64 MiB) keeps files in the
@@ -265,8 +265,7 @@ def _eqdel_table(spark: SparkSession, sf_dir: str) -> str:
 def events_snapshot_eq_delete(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """MERGE-ON-READ EQUALITY DELETES (VERDICT r9 task 4 — Iceberg v2
-    equality deletes): delete-by-key with NO scan and NO rewrite at
+    """MERGE-ON-READ EQUALITY DELETES (Iceberg v2 equality deletes): delete-by-key with NO scan and NO rewrite at
     commit. v2 equality-deletes every user_id % 7 == 0 by writing the
     key set itself (`commit_mor_delete_keys`); readers anti-join the
     keys out of rows written BEFORE the delete. v3 appends rows that
@@ -414,7 +413,7 @@ def events_snapshot_mor_upsert(
 def events_snapshot_timetravel_ts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """``TIMESTAMP AS OF`` time travel (VERDICT r9 task 3): the same
+    """``TIMESTAMP AS OF`` time travel: the same
     three-version events table read back BY WALL-CLOCK INSTANT, not
     version number — `timestamp_version` resolves a timestamp to the
     newest commit at-or-before it through the manifest chain's
@@ -547,7 +546,7 @@ def events_stream_snapshot_ingest(
 def events_snapshot_mor_compact_fold(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """READ AMPLIFICATION before/after compact (VERDICT r10 task 6):
+    """READ AMPLIFICATION before/after compact:
     four CDC upserts restate every even event (value x2), leaving the
     head with 4 accumulated equality-delete entries — leg 1 reads
     THROUGH that debt (4 scoped anti-joins), then the `maybe_compact`
@@ -571,7 +570,7 @@ def events_snapshot_mor_compact_fold(
         base = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
         ).filter(F.col("event_id") % 2 == 0)
-        # commit inputs right-sized (r13, guide §6): unshaped they
+        # commit inputs right-sized: unshaped they
         # inherit the scan's granularity — one KB-sized file per scan
         # partition per commit, each costing a write task, a manifest
         # entry, and a read slice on every MOR head read
@@ -611,7 +610,7 @@ def events_snapshot_mor_compact_fold(
         # schema from the ALREADY-ANALYZED leg-1 frame — building a
         # third leg frame just to carry the schema re-ran Catalyst
         # analysis over the amplified-read join tree (~1-2 s of pure
-        # driver time at sf0.1; r12 optimization round)
+        # driver time at sf0.1)
         return spark.createDataFrame(pre + post, leg1.schema).orderBy("leg")
     finally:
         shutil.rmtree(os.path.dirname(root), ignore_errors=True)
@@ -640,7 +639,7 @@ def events_snapshot_mor_compact_fold(
 def events_snapshot_write_path(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """THE DATASOURCE WRITE PATH end-to-end (VERDICT r10 task 4): a
+    """THE DATASOURCE WRITE PATH end-to-end: a
     table whose every byte arrives through ``df.write.format(
     "snapshot")`` — v1 appends the even events hive-partitioned by
     event_type with min/max stats (first-write options), v2 appends
@@ -670,7 +669,7 @@ def events_snapshot_write_path(
         base = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         )
-        # right-sized write inputs (r13, guide §6): each write task
+        # right-sized write inputs: each write task
         # opens one staged file PER partition tuple, so an unshaped
         # input wrote (scan partitions x event types) KB-sized files
         # per version — every one a write task, a driver footer read
@@ -789,7 +788,7 @@ def events_stream_cdc_upsert(
         base = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         )
-        # right-sized commit input (r13, guide §6 — see
+        # right-sized commit input (see
         # events_snapshot_mor_compact_fold)
         snap.commit_append(
             spark, root,
@@ -805,7 +804,7 @@ def events_stream_cdc_upsert(
         # which holds ONLY if the feed landed as exactly 4 part files
         # (maxFilesPerTrigger=1 -> 4 micro-batches). Assert it here so
         # a change in Spark's writer/file-source batching fails loudly
-        # instead of silently drifting the commit count (ADVICE r10).
+        # instead of silently drifting the commit count.
         n_parts = len(
             [f for f in os.listdir(src) if f.endswith(".parquet")]
         )
@@ -866,8 +865,7 @@ def events_stream_cdc_upsert(
 def events_stream_upsert_sink(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The USER-FACING spelling of streaming CDC apply (VERDICT r11
-    task 7): the same lifecycle as `events_stream_cdc_upsert` — even
+    """The USER-FACING spelling of streaming CDC apply: the same lifecycle as `events_stream_cdc_upsert` — even
     events land as the base table (v1), then a 4-micro-batch CDC feed
     (restated x2 values for event_id % 4 == 0 plus the odd-event
     inserts) — but drained through ``writeStream.format("snapshot")
@@ -901,7 +899,7 @@ def events_stream_upsert_sink(
         base = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         )
-        # right-sized commit input (r13, guide §6 — see
+        # right-sized commit input (see
         # events_snapshot_mor_compact_fold)
         snap.commit_append(
             spark, root,
@@ -1051,8 +1049,7 @@ def _serving_store(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """,
 )
 def events_snapshot_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events served THROUGH the snapshot table format (VERDICT r6
-    task 1): the store is built by streaming ingest (3 exactly-once
+    """Events served THROUGH the snapshot table format: the store is built by streaming ingest (3 exactly-once
     micro-batch commits) + compaction + a COW GDPR-erasure commit, and
     this query reads it at two isolation points:
 
@@ -1654,7 +1651,7 @@ def _evolved_table(spark: SparkSession, sf_dir: str) -> str:
 def events_snapshot_schema_evolution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Reads ACROSS a rename + widen boundary (VERDICT r8 task 5):
+    """Reads ACROSS a rename + widen boundary:
     the head aggregates all three file cohorts — files physically
     named ``uid`` int, ``uid`` long, and ``user_id`` long — through
     the column-ID mapping, so the total must equal the raw corpus
@@ -1751,8 +1748,8 @@ def _clustered_table(spark: SparkSession, sf_dir: str) -> str:
 def events_snapshot_clustered_compaction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Z-order-clustered compaction probed end-to-end (VERDICT r8 task
-    6, Delta OPTIMIZE ZORDER's shape on this table format): the box
+    """Z-order-clustered compaction probed end-to-end (Delta OPTIMIZE
+    ZORDER's shape on this table format): the box
     query decomposes its (user_id, day) rectangle through the
     manifest's RECORDED cluster_spec (`snap.clustered_prune`) and
     reads only the intersecting cell files — the query SELF-CHECKS
@@ -2200,7 +2197,7 @@ def events_stream_backlog_drain(
             "event_id", "event_type", "value"
         )
         for i in range(4):
-            # right-sized commit inputs (r13, guide §6 — see
+            # right-sized commit inputs (see
             # events_snapshot_mor_compact_fold)
             snap.commit_append(
                 spark, root,
@@ -2266,9 +2263,9 @@ def events_snapshot_source_batch(
     position masked in the wrong file, an off-by-one row index, or a
     delete file dropped in planning hash-mismatches.
 
-    Scale shape: one InputPartition per data file (scan parallelism =
-    the manifest's file list), each reading only the projected
-    columns; the delete set is re-read per slice filtered to that
+    Scale shape: the planned files pack into ~32 MiB slices, one
+    InputPartition each, every file reading only the projected
+    columns; each slice reads the delete set once and filters it per
     file — O(small) parquet, the per-file share of the anti-join the
     JVM path runs."""
     from metastore_spark.sources.spark_source import SnapshotDataSource

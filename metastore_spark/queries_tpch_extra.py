@@ -324,8 +324,8 @@ def orders_lineitem_bucketed_join(
     order-grain query (neither fact can broadcast). Result is
     layout-independent (the oracle joins the plain parquet);
     tests/test_layout.py asserts the no-exchange plan property.
-    Falls back to the plain scans if the session can't host managed
-    tables (read-only cwd)."""
+    Falls back to the plain scans if the bucketed stores can't be
+    written (read-only warehouse)."""
     from metastore_spark import layout
 
     try:

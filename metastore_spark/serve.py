@@ -1,7 +1,7 @@
 """Build-once serving stores: derived tables (signature stores, search
-indexes, partitioned layouts, snapshot-format fixtures) built once per
-source content and reopened by every later query, in any session or
-process.
+indexes, partitioned and bucketed layouts, snapshot-format fixtures)
+built once per source content and reopened by every later query, in
+any session or process.
 
 The production shape this encodes: expensive corpus-wide derivations
 (MinHash/SimHash signature tables, inverted indexes) are INGEST-time

@@ -16,8 +16,8 @@ Readers resolve head -> commit file -> segments -> file list, so they
 always see a complete snapshot — never a half-written commit — and
 any retained historical version stays readable (time travel).
 
-Why two tiers: with the round-6 single-JSON design every commit
-rewrote the full O(table files) list — the commit bottleneck at
+Why two tiers: with a single-JSON design every commit would rewrite
+the full O(table files) list — the commit bottleneck at
 100 TB (millions of files). Now an append writes ONE new segment
 (O(delta files)) plus a commit file that is O(#segments), independent
 of the table's file count; a COW delete rewrites only the segments
@@ -60,9 +60,11 @@ import shutil
 import time
 import uuid
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType, StringType, StructType
 
 _META = "meta"
 _DATA = "data"
@@ -388,11 +390,8 @@ def _read_segment(root: str, name: str) -> list[str]:
 
 
 def manifest_files(root: str, manifest: dict) -> list[str]:
-    """Resolve a commit file to its full data-file list. Two-tier
-    manifests concatenate their segments; legacy single-tier commit
-    files (round 6, inline ``files``) resolve as-is."""
-    if "files" in manifest:
-        return list(manifest["files"])
+    """Resolve a commit file to its full data-file list: its segments'
+    files, concatenated in order."""
     out: list[str] = []
     for seg in manifest["segments"]:
         out.extend(_read_segment(root, seg))
@@ -461,12 +460,8 @@ def _partition_values(path: str, spec: list[str]) -> dict[str, str] | None:
 
 
 def _manifest_ts_us(m: dict) -> int:
-    """A manifest's commit time in epoch microseconds. Manifests
-    written before ``ts_us`` existed fall back to their whole-second
-    ``ts`` — coarser, but still non-decreasing along the chain."""
-    if "ts_us" in m:
-        return int(m["ts_us"])
-    return int(m.get("ts", 0)) * 1_000_000
+    """A manifest's commit time in epoch microseconds."""
+    return int(m["ts_us"])
 
 
 def _commit(
@@ -526,16 +521,6 @@ def _commit(
     return version
 
 
-def _parent_segments(root: str, manifest: dict) -> list[str]:
-    """Parent's segment list; a legacy inline-files parent is folded
-    into one fresh segment on first contact (lazy upgrade)."""
-    if "segments" in manifest:
-        return list(manifest["segments"])
-    if manifest.get("files"):
-        return [_write_segment(root, manifest["files"])]
-    return []
-
-
 def _carry_deletes(src_manifest: dict, extra: dict) -> None:
     """Position-delete files inherit like cluster_spec: every commit
     that carries its parent's row set forward must carry the parent's
@@ -572,7 +557,7 @@ def _schema_extra(df: DataFrame) -> dict:
     return {"schema": json.loads(df.schema.json())}
 
 
-# ---- column-ID schema evolution (VERDICT r8 task 5) ----------------
+# ---- column-ID schema evolution ------------------------------------
 #
 # Iceberg's idea, expressed in manifest JSON: every column gets a
 # table-unique ID at its first appearance; rename/drop/widen are
@@ -641,10 +626,6 @@ def _evolve(root: str, transform) -> int:
     if not head:
         raise ValueError("cannot evolve an empty table")
     m = read_manifest(root, head)
-    if "schema" not in m:
-        raise SchemaEvolutionError(
-            "legacy table has no committed schema to evolve"
-        )
     schema = json.loads(json.dumps(m["schema"]))
     ids = dict(m.get("column_ids") or {})
     nxt = m.get("next_column_id")
@@ -702,7 +683,7 @@ def _evolve(root: str, transform) -> int:
         extra["partition_spec"] = spec
     _carry_cluster(m, extra)
     _carry_deletes(m, extra)
-    return _commit(root, head, "evolve", _parent_segments(root, m), extra)
+    return _commit(root, head, "evolve", list(m["segments"]), extra)
 
 
 def rename_column(root: str, old: str, new: str) -> int:
@@ -869,7 +850,7 @@ def pruned_manifest_files(
     files), exactly like Iceberg partition + manifest stats / Delta
     data skipping. Safe only as an optimization UNDER the equivalent
     row filter, like partition pruning."""
-    return [f for f, _cols in _pruned_files_with_columns(root, manifest, prune)]
+    return [f for f, _cols, _eq in plan_scan(root, manifest, prune).files]
 
 
 def _segment_file_mapping(
@@ -891,7 +872,7 @@ def _segment_file_mapping(
         return cols
     mapping = dict(manifest.get("legacy_columns") or {})
     covered = {v["id"] for v in mapping.values()}
-    for f in manifest.get("schema", {}).get("fields", []):
+    for f in manifest["schema"]["fields"]:
         if (
             f["name"] not in mapping
             and f["name"] in ids
@@ -905,84 +886,138 @@ def _segment_file_mapping(
     return mapping
 
 
-def _pruned_files_with_columns(
-    root: str, manifest: dict, prune: dict | None
-):
-    """Yield (relpath, write-time column mapping or None) for the
-    manifest's files after metadata skipping. Prune bounds arrive
-    keyed by CURRENT column names; per segment they translate through
-    the column-ID mapping to the files' write-time names, so stats
-    and partition tuples recorded before a rename keep pruning after
-    it."""
-    if "files" in manifest:  # legacy manifest: no stats recorded
-        for f in manifest["files"]:
-            yield f, None
-        return
-    ids = manifest.get("column_ids") or {}
-    for seg in manifest["segments"]:
-        obj = _read_segment_obj(root, seg)
+class ScanPlan(NamedTuple):
+    """What a reader of one snapshot needs, resolved from metadata.
+
+    ``files``: per surviving data file, (table-relative path, its
+    write-time column mapping or None — see `_segment_file_mapping` —,
+    the indices into ``eq_deletes`` of the equality-delete entries
+    whose scope covers the file). ``pos_deletes``: the snapshot's
+    position-delete files. ``eq_deletes``: its equality-delete entries
+    as (key file paths, key columns)."""
+
+    files: list[tuple[str, dict | None, tuple[int, ...]]]
+    pos_deletes: list[str]
+    eq_deletes: list[tuple[list[str], list[str]]]
+
+
+def plan_scan(
+    root: str,
+    manifest: dict,
+    prune: dict | None = None,
+    only_files: set[str] | None = None,
+) -> ScanPlan:
+    """The one scan planner both readers (`read_snapshot` and the
+    ``format("snapshot")`` DataSource) consume: the manifest's files
+    after metadata skipping (see `pruned_manifest_files` for the
+    ``prune`` contract), restricted to ``only_files`` when given, each
+    with its write-time column mapping and covering equality-delete
+    entries. Reads each segment JSON at most once per call — the
+    eq-delete scopes reuse the data segments' reads — and opens no
+    data file.
+
+    Prune bounds arrive keyed by CURRENT column names; per segment
+    they translate through the column-ID mapping to the files'
+    write-time names, so stats and partition tuples recorded before a
+    rename keep pruning after it."""
+    segs: dict[str, dict] = {}
+
+    def seg(name: str) -> dict:
+        if name not in segs:
+            segs[name] = _read_segment_obj(root, name)
+        return segs[name]
+
+    kept: list[tuple[str, dict | None]] = []
+    for name in manifest["segments"]:
+        obj = seg(name)
         mapping = _segment_file_mapping(manifest, obj)
-        seg_prune = prune
-        if prune and mapping and ids:
-            by_id = {v["id"]: n for n, v in mapping.items()}
-            seg_prune = {}
-            for col, bound in prune.items():
-                fname = by_id.get(ids.get(col), None)
-                if fname is not None:
-                    seg_prune[fname] = bound
-                # a prune column the segment never wrote: its files
-                # predate the column — all-null, never match a range,
-                # but stats-less conservatism keeps them (caller's
-                # row filter decides); matches the un-evolved rule
-        if not seg_prune:
-            for f in obj["files"]:
-                yield f, mapping
-            continue
-        stats = obj.get("stats", {})
-        parts = obj.get("partitions", {})
-        blooms = obj.get("blooms", {})
-        for f in obj["files"]:
-            keep = True
-            fstats = stats.get(f, {})
-            fparts = parts.get(f, {})
-            fblooms = blooms.get(f, {})
-            for col, bound in seg_prune.items():
-                if isinstance(bound, (list, set)) and not bound:
-                    keep = False  # empty admissible set matches nothing
-                    break
-                if col in fparts:
-                    like = (
-                        next(iter(bound))
-                        if isinstance(bound, (list, set))
-                        else next(
-                            (b for b in bound if b is not None), None
-                        )
+        kept.extend(
+            (f, mapping)
+            for f in _segment_survivors(manifest, obj, mapping, prune)
+            if only_files is None or f in only_files
+        )
+    eq = manifest.get("eq_delete_files") or []
+    scopes = [
+        {f for s in e["scope_segments"] for f in seg(s)["files"]}
+        for e in eq
+    ]
+    return ScanPlan(
+        [
+            (f, mapping, tuple(i for i, sc in enumerate(scopes) if f in sc))
+            for f, mapping in kept
+        ],
+        list(manifest.get("delete_files") or []),
+        [(list(e["files"]), list(e["cols"])) for e in eq],
+    )
+
+
+def _segment_survivors(
+    manifest: dict, obj: dict, mapping: dict | None, prune: dict | None
+) -> list[str]:
+    """The files of one segment that its recorded partition tuples,
+    min/max stats and blooms cannot exclude under ``prune``."""
+    ids = manifest.get("column_ids") or {}
+    seg_prune = prune
+    if prune and mapping and ids:
+        by_id = {v["id"]: n for n, v in mapping.items()}
+        seg_prune = {}
+        for col, bound in prune.items():
+            fname = by_id.get(ids.get(col), None)
+            if fname is not None:
+                seg_prune[fname] = bound
+            # a prune column the segment never wrote: its files
+            # predate the column — all-null, never match a range,
+            # but stats-less conservatism keeps them (caller's
+            # row filter decides); matches the un-evolved rule
+    if not seg_prune:
+        return obj["files"]
+    stats = obj.get("stats", {})
+    parts = obj.get("partitions", {})
+    blooms = obj.get("blooms", {})
+    out = []
+    for f in obj["files"]:
+        keep = True
+        fstats = stats.get(f, {})
+        fparts = parts.get(f, {})
+        fblooms = blooms.get(f, {})
+        for col, bound in seg_prune.items():
+            if isinstance(bound, (list, set)) and not bound:
+                keep = False  # empty admissible set matches nothing
+                break
+            if col in fparts:
+                like = (
+                    next(iter(bound))
+                    if isinstance(bound, (list, set))
+                    else next(
+                        (b for b in bound if b is not None), None
                     )
-                    v = _coerce_partition_value(fparts[col], like)
-                    if v is not None and _bound_excludes(v, v, bound):
-                        keep = False
-                        break
-                    continue
-                if col in fstats:
-                    fmin, fmax = fstats[col]
-                    if _bound_excludes(fmin, fmax, bound):
-                        keep = False
-                        break
-                # bloom skipping: an equality probe (value set) whose
-                # EVERY value tests proven-absent skips the file even
-                # when the min/max range covers it — the scattered-key
-                # point-lookup gap range stats can't close
-                if (
-                    isinstance(bound, (list, set))
-                    and col in fblooms
-                    and not any(
-                        _bloom_test(fblooms[col], v) for v in bound
-                    )
-                ):
+                )
+                v = _coerce_partition_value(fparts[col], like)
+                if v is not None and _bound_excludes(v, v, bound):
                     keep = False
                     break
-            if keep:
-                yield f, mapping
+                continue
+            if col in fstats:
+                fmin, fmax = fstats[col]
+                if _bound_excludes(fmin, fmax, bound):
+                    keep = False
+                    break
+            # bloom skipping: an equality probe (value set) whose
+            # EVERY value tests proven-absent skips the file even
+            # when the min/max range covers it — the scattered-key
+            # point-lookup gap range stats can't close
+            if (
+                isinstance(bound, (list, set))
+                and col in fblooms
+                and not any(
+                    _bloom_test(fblooms[col], v) for v in bound
+                )
+            ):
+                keep = False
+                break
+        if keep:
+            out.append(f)
+    return out
 
 
 def _with_src(df: DataFrame) -> DataFrame:
@@ -1034,33 +1069,26 @@ def _apply_mor_deletes(
 
 
 def _plan_eq_deletes(
-    root: str, manifest: dict, scanned: set[str]
+    plan: ScanPlan,
 ) -> list[tuple[list[str], list[str], set[str] | None]]:
-    """Driver-side plan for the manifest's equality-delete entries
-    against THIS scan's file subset: (key file paths, key cols,
-    OUT-OF-SCOPE file names or None). None = every scanned file is in
-    the entry's scope (no appends since the delete touched this
-    subset), so the reader anti-joins without per-row file tests —
-    the common fast path. When the scan does include post-delete
-    files, the plan carries their names — the COMPLEMENT of the
-    scope, sized by appends-since-the-delete (small under the
+    """Per equality-delete entry covering some planned file: (key file
+    paths, key cols, OUT-OF-SCOPE file names or None). None = every
+    scanned file is in the entry's scope (no appends since the delete
+    touched this subset), so the reader anti-joins without per-row
+    file tests — the common fast path. When the scan does include
+    post-delete files, the plan carries their names — the COMPLEMENT
+    of the scope, sized by appends-since-the-delete (small under the
     compact-regularly CDC contract), never the O(table files) scope
     itself. Entries whose scope misses the whole scan are dropped
     (nothing to delete)."""
     plans = []
-    for entry in manifest.get("eq_delete_files") or []:
-        scope: set[str] = set()
-        for s in entry["scope_segments"]:
-            scope.update(_read_segment(root, s))
-        if not scanned & scope:
+    for i, (paths, cols) in enumerate(plan.eq_deletes):
+        if not any(i in eq for _f, _m, eq in plan.files):
             continue  # this scan reads only post-delete files
-        newer = scanned - scope
-        names = (
-            None
-            if not newer
-            else {os.path.basename(f) for f in newer}
-        )
-        plans.append((list(entry["files"]), list(entry["cols"]), names))
+        newer = {
+            os.path.basename(f) for f, _m, eq in plan.files if i not in eq
+        }
+        plans.append((paths, cols, newer or None))
     return plans
 
 
@@ -1078,7 +1106,7 @@ def _apply_eq_deletes(
     by appends-since-the-delete rather than the table. NULL keys
     never match (SQL equality), so null-keyed rows are never deleted.
 
-    LINEAR-PLAN invariant (r11): every entry must reference the
+    LINEAR-PLAN invariant: every entry must reference the
     running frame exactly ONCE. The earlier form split it into
     in/out-of-scope halves and unioned them back — referencing it
     twice per entry, a 2^n plan tree that hung Catalyst outright past
@@ -1087,8 +1115,7 @@ def _apply_eq_deletes(
     the plan O(entries) deep, so an over-accumulated table reads
     SLOWLY (one join per entry, as documented) instead of not at all.
 
-    MERGED SEQUENCE-RANK PLAN (r12 optimization round — guide §2.4
-    "remove shuffles/joins outright", §3): the common CDC shape is a
+    MERGED SEQUENCE-RANK PLAN: the common CDC shape is a
     chain of upserts whose scopes are NESTED (each entry scopes every
     segment committed before it), which admits Iceberg's sequence-
     number formulation: rank the nested entries by scope ascending
@@ -1106,7 +1133,7 @@ def _apply_eq_deletes(
     Entries whose key columns differ merge per column-signature
     group; a group whose scopes are NOT nested (possible via scoped
     delete-keys commits) falls back to the per-entry flag-and-filter
-    path below, preserving the r11 linear-plan invariant."""
+    path below, preserving the linear-plan invariant."""
     if not plans:
         return df
     orig_cols = list(df.columns)  # USING-joins move key cols first
@@ -1127,8 +1154,7 @@ def _apply_eq_deletes(
         # ONE columnar read over every entry's key files, rank attached
         # from the file name: a spark.read.parquet per entry costs an
         # O(entries) chain of driver round-trips (~0.1 s each) on EVERY
-        # head read of an upsert-accumulated table (r12 optimization
-        # round, guide §1.2/§5.4 — keep the driver out of the loop).
+        # head read of an upsert-accumulated table.
         # Part-file basenames carry a per-write UUID (the same
         # uniqueness _mor_file matching already relies on), so
         # basename → rank is a function.
@@ -1170,7 +1196,7 @@ def _apply_eq_deletes(
         # createDataFrame has no stats => no auto-broadcast): two
         # Exchange+Sort pairs over the whole scanned table just to
         # attach one small int per file. Broadcast is the Iceberg
-        # shape for delete-manifest attachment (r12, guide §3.1).
+        # shape for delete-manifest attachment.
         df = df.join(
             F.broadcast(t_df),
             df["_mor_file"] == t_df[f"{t_col}_file"],
@@ -1306,13 +1332,10 @@ def _read_files(
     ``_mor_pos`` columns visible to the caller (the delete writer
     itself needs them); file NAMES (not paths) key the join — write
     UUIDs make them unique per table and rename-safe."""
-    entries = [
-        e
-        for e in _pruned_files_with_columns(root, manifest, prune)
-        if only_files is None or e[0] in only_files
-    ]
-    dels = manifest.get("delete_files") or []
-    eq_plans = _plan_eq_deletes(root, manifest, {f for f, _c in entries})
+    plan = plan_scan(root, manifest, prune, only_files)
+    entries = [(f, mapping) for f, mapping, _eq in plan.files]
+    dels = plan.pos_deletes
+    eq_plans = _plan_eq_deletes(plan)
     # partially-scoped equality deletes split rows on _mor_file, so
     # the scan must capture it even without position deletes
     need_pos = with_pos or bool(dels) or any(
@@ -1325,24 +1348,6 @@ def _read_files(
         if not with_pos and "_mor_file" in frame.columns:
             frame = frame.drop("_mor_file", "_mor_pos")
         return frame
-    if "schema" not in manifest:
-        # legacy manifest, no committed schema to stand on
-        if not entries:
-            full = [
-                os.path.join(root, f) for f in manifest_files(root, manifest)
-            ]
-            df = spark.read.parquet(*full)
-            return (_with_src(df) if with_source else df).limit(0)
-        df = spark.read.parquet(
-            *[os.path.join(root, f) for f, _c in entries]
-        )
-        if need_pos:
-            df = _with_pos(df)
-        if with_source:
-            df = _with_src(df)
-        return _finish(df)
-    from pyspark.sql.types import StructType
-
     schema = StructType.fromJson(manifest["schema"])
     if not entries:  # pruned to nothing: empty frame, right schema
         df = spark.createDataFrame([], schema)
@@ -1428,8 +1433,6 @@ def _field_type_str(type_json):
     single-field struct round-trip."""
     if isinstance(type_json, str):
         return type_json
-    from pyspark.sql.types import StructType
-
     return (
         StructType.fromJson(
             {
@@ -1495,7 +1498,7 @@ def commit_append(
     parent = current_version(root, ref)
     prev_manifest = read_manifest(root, parent, ref) if parent else {}
     _check_add_only(prev_manifest, df)
-    prev_segs = _parent_segments(root, prev_manifest) if parent else []
+    prev_segs = list(prev_manifest["segments"]) if parent else []
     scols = stats_cols or prev_manifest.get("stats_cols") or []
     bcols = bloom_cols or prev_manifest.get("bloom_cols") or []
     spec = partition_by or prev_manifest.get("partition_spec") or []
@@ -1668,15 +1671,14 @@ def commit_mor_upsert_files(
                 "cannot upsert into an empty table; append first"
             )
         pm = read_manifest(root, parent)
-        if "schema" in pm:
-            committed = {f["name"] for f in pm["schema"]["fields"]}
-            alien = [c for c in key_cols if c not in committed]
-            if alien:
-                raise ValueError(
-                    f"key column(s) {alien} not in the committed schema"
-                )
+        committed = {f["name"] for f in pm["schema"]["fields"]}
+        alien = [c for c in key_cols if c not in committed]
+        if alien:
+            raise ValueError(
+                f"key column(s) {alien} not in the committed schema"
+            )
         _check_add_only_fields(pm, schema["fields"])
-        prev_segs = _parent_segments(root, pm)
+        prev_segs = list(pm["segments"])
         scols = pm.get("stats_cols") or []
         bcols = pm.get("bloom_cols") or []
         spec = pm.get("partition_spec") or []
@@ -1754,7 +1756,7 @@ def commit_delete_where(
     if not parent:
         raise ValueError("cannot delete from an empty table or branch")
     prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = _parent_segments(root, prev_manifest)
+    prev_segs = list(prev_manifest["segments"])
     # three-valued logic pinned once and reused by BOTH the affected-
     # file scan and the survivor filter, so they can never disagree on
     # a NULL-predicate row
@@ -1768,27 +1770,20 @@ def commit_delete_where(
     affected = {
         os.path.relpath(r["_src"], root) for r in affected_df.collect()
     }
-    schema_extra = (
-        {"schema": prev_manifest["schema"]}
-        if "schema" in prev_manifest
-        else None
+    schema_extra = {"schema": prev_manifest["schema"]}
+    schema_extra.update(
+        _ids_for_commit(prev_manifest, prev_manifest["schema"]["fields"])
     )
-    if schema_extra is not None:
-        schema_extra.update(
-            _ids_for_commit(
-                prev_manifest, prev_manifest["schema"]["fields"]
-            )
-        )
     spec = prev_manifest.get("partition_spec") or []
     if not affected:
-        extra = dict(schema_extra or {})
+        extra = dict(schema_extra)
         if prev_manifest.get("stats_cols"):
             extra["stats_cols"] = list(prev_manifest["stats_cols"])
         if spec:
             extra["partition_spec"] = list(spec)
         _carry_cluster(prev_manifest, extra)
         _carry_deletes(prev_manifest, extra)
-        return _commit(root, parent, "delete", prev_segs, extra or None, ref)
+        return _commit(root, parent, "delete", prev_segs, extra, ref)
     survivors = (
         with_file.join(F.broadcast(affected_df), "_src", "left_semi")
         .filter(~hit)
@@ -1808,21 +1803,17 @@ def commit_delete_where(
                 _spec_partitions(rewritten, spec),
                 _columns_meta(
                     prev_manifest["schema"]["fields"],
-                    (schema_extra or {}).get("column_ids") or {},
-                )
-                if "schema" in prev_manifest
-                else None,
+                    schema_extra.get("column_ids") or {},
+                ),
             )
         )
-    if schema_extra is None:
-        schema_extra = {}
     if scols:
         schema_extra["stats_cols"] = list(scols)
     if spec:
         schema_extra["partition_spec"] = list(spec)
     _carry_cluster(prev_manifest, schema_extra)
     _carry_deletes(prev_manifest, schema_extra)
-    return _commit(root, parent, "delete", new_segs, schema_extra or None, ref)
+    return _commit(root, parent, "delete", new_segs, schema_extra, ref)
 
 
 def commit_mor_delete(
@@ -1857,7 +1848,7 @@ def commit_mor_delete(
     if not parent:
         raise ValueError("cannot delete from an empty table or branch")
     prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = _parent_segments(root, prev_manifest)
+    prev_segs = list(prev_manifest["segments"])
     hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
     live = _read_files(
         spark, root, prev_manifest, prune=scan_prune, with_pos=True
@@ -1873,14 +1864,10 @@ def commit_mor_delete(
     # of two small columns — 16 writers keep the write parallel while
     # capping the per-commit delete-file count
     written = _write_data_files(positions.coalesce(16), root)
-    extra: dict = {}
-    if "schema" in prev_manifest:
-        extra["schema"] = prev_manifest["schema"]
-        extra.update(
-            _ids_for_commit(
-                prev_manifest, prev_manifest["schema"]["fields"]
-            )
-        )
+    extra: dict = {"schema": prev_manifest["schema"]}
+    extra.update(
+        _ids_for_commit(prev_manifest, prev_manifest["schema"]["fields"])
+    )
     if prev_manifest.get("stats_cols"):
         extra["stats_cols"] = list(prev_manifest["stats_cols"])
     if prev_manifest.get("partition_spec"):
@@ -1891,9 +1878,7 @@ def commit_mor_delete(
     )
     if prev_manifest.get("eq_delete_files"):
         extra["eq_delete_files"] = list(prev_manifest["eq_delete_files"])
-    return _commit(
-        root, parent, "delete-mor", prev_segs, extra or None, ref
-    )
+    return _commit(root, parent, "delete-mor", prev_segs, extra, ref)
 
 
 def commit_mor_delete_keys(
@@ -1937,16 +1922,13 @@ def commit_mor_delete_keys(
     cols = list(keys_df.columns)
     if not cols:
         raise ValueError("keys_df needs at least one key column")
-    if "schema" in prev_manifest:
-        committed = {
-            f["name"] for f in prev_manifest["schema"]["fields"]
-        }
-        missing = [c for c in cols if c not in committed]
-        if missing:
-            raise ValueError(
-                f"key column(s) {missing} not in the committed schema"
-            )
-    prev_segs = _parent_segments(root, prev_manifest)
+    committed = {f["name"] for f in prev_manifest["schema"]["fields"]}
+    missing = [c for c in cols if c not in committed]
+    if missing:
+        raise ValueError(
+            f"key column(s) {missing} not in the committed schema"
+        )
+    prev_segs = list(prev_manifest["segments"])
     written = _write_data_files(
         keys_df.dropDuplicates().coalesce(4), root
     )
@@ -1955,14 +1937,10 @@ def commit_mor_delete_keys(
         "cols": cols,
         "scope_segments": list(prev_segs),
     }
-    extra: dict = {}
-    if "schema" in prev_manifest:
-        extra["schema"] = prev_manifest["schema"]
-        extra.update(
-            _ids_for_commit(
-                prev_manifest, prev_manifest["schema"]["fields"]
-            )
-        )
+    extra: dict = {"schema": prev_manifest["schema"]}
+    extra.update(
+        _ids_for_commit(prev_manifest, prev_manifest["schema"]["fields"])
+    )
     if prev_manifest.get("stats_cols"):
         extra["stats_cols"] = list(prev_manifest["stats_cols"])
     if prev_manifest.get("partition_spec"):
@@ -1974,9 +1952,7 @@ def commit_mor_delete_keys(
         prev_manifest.get("eq_delete_files") or []
     ) + [entry]
     _warn_read_amplification(len(extra["eq_delete_files"]), root)
-    return _commit(
-        root, parent, "delete-mor-eq", prev_segs, extra or None, ref
-    )
+    return _commit(root, parent, "delete-mor-eq", prev_segs, extra, ref)
 
 
 def commit_mor_upsert(
@@ -2023,17 +1999,14 @@ def commit_mor_upsert(
     if missing:
         raise ValueError(f"key column(s) {missing} not in the frame")
     prev_manifest = read_manifest(root, parent, ref)
-    if "schema" in prev_manifest:
-        committed = {
-            f["name"] for f in prev_manifest["schema"]["fields"]
-        }
-        alien = [c for c in key_cols if c not in committed]
-        if alien:
-            raise ValueError(
-                f"key column(s) {alien} not in the committed schema"
-            )
+    committed = {f["name"] for f in prev_manifest["schema"]["fields"]}
+    alien = [c for c in key_cols if c not in committed]
+    if alien:
+        raise ValueError(
+            f"key column(s) {alien} not in the committed schema"
+        )
     _check_add_only(prev_manifest, df)
-    prev_segs = _parent_segments(root, prev_manifest)
+    prev_segs = list(prev_manifest["segments"])
     scols = prev_manifest.get("stats_cols") or []
     bcols = prev_manifest.get("bloom_cols") or []
     spec = prev_manifest.get("partition_spec") or []
@@ -2042,8 +2015,7 @@ def commit_mor_upsert(
     # ``df`` again: evaluating ``df`` twice re-executes its whole
     # upstream plan (for a CDC micro-batch, a second pass over the
     # stream source) where the staged parquet is a column-pruned
-    # local read of exactly the batch (r12 optimization round, guide
-    # §1.2/§4.1 — don't compute things twice).
+    # local read of exactly the batch.
     if files:
         staged = df.sparkSession.read.parquet(
             *[os.path.join(root, f) for f in files]
@@ -2121,7 +2093,7 @@ def commit_overwrite_where(
     if not parent:
         raise ValueError("cannot overwrite in an empty table or branch")
     prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = _parent_segments(root, prev_manifest)
+    prev_segs = list(prev_manifest["segments"])
     _check_add_only(prev_manifest, df)
     hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
     stray = df.filter(~F.coalesce(predicate.cast("boolean"), F.lit(False)))
@@ -2168,9 +2140,7 @@ def commit_overwrite_where(
                     _columns_meta(
                         prev_manifest["schema"]["fields"],
                         ev.get("column_ids") or {},
-                    )
-                    if "schema" in prev_manifest
-                    else None,
+                    ),
                 )
             )
     inserted = _write_data_files(df, root, spec or None)
@@ -2261,15 +2231,15 @@ def commit_merge(
         return commit_append(spark, root, source, ref=ref)
     prev_manifest = read_manifest(root, parent, ref)
     _check_add_only(prev_manifest, source)
-    prev_segs = _parent_segments(root, prev_manifest)
+    prev_segs = list(prev_manifest["segments"])
     spec = prev_manifest.get("partition_spec") or []
     scols = prev_manifest.get("stats_cols") or []
 
     # NULL-keyed source rows are excluded from the duplicate guard:
     # NULL keys never match any target row (SQL join semantics), so
     # each such row is an unconditional insert — two of them are not
-    # a multiple-match hazard (ADVICE r8: groupBy treats NULLs as
-    # equal and would have raised here).
+    # a multiple-match hazard (groupBy treats NULLs as equal and
+    # would raise here).
     all_keys_set = reduce(
         lambda a, b: a & b, [F.col(c).isNotNull() for c in key_cols]
     )
@@ -2358,7 +2328,7 @@ def commit_delete_keys(
     if not parent:
         raise ValueError("cannot delete from an empty table or branch")
     prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = _parent_segments(root, prev_manifest)
+    prev_segs = list(prev_manifest["segments"])
     spec = prev_manifest.get("partition_spec") or []
     scols = prev_manifest.get("stats_cols") or []
     kdf = keys.select(*key_cols).distinct()
@@ -2373,17 +2343,10 @@ def commit_delete_keys(
     affected = {
         os.path.relpath(r["_src"], root) for r in affected_df.collect()
     }
-    extra: dict = (
-        {"schema": prev_manifest["schema"]}
-        if "schema" in prev_manifest
-        else {}
+    extra: dict = {"schema": prev_manifest["schema"]}
+    extra.update(
+        _ids_for_commit(prev_manifest, prev_manifest["schema"]["fields"])
     )
-    if "schema" in prev_manifest:
-        extra.update(
-            _ids_for_commit(
-                prev_manifest, prev_manifest["schema"]["fields"]
-            )
-        )
     if scols:
         extra["stats_cols"] = list(scols)
     if spec:
@@ -2391,7 +2354,7 @@ def commit_delete_keys(
     if not affected:
         _carry_cluster(prev_manifest, extra)
         _carry_deletes(prev_manifest, extra)
-        return _commit(root, parent, "delete", prev_segs, extra or None, ref)
+        return _commit(root, parent, "delete", prev_segs, extra, ref)
     survivors = (
         with_file.join(F.broadcast(affected_df), "_src", "left_semi")
         .join(F.broadcast(kdf), key_cols, "left_anti")
@@ -2411,14 +2374,12 @@ def commit_delete_keys(
                 _columns_meta(
                     prev_manifest["schema"]["fields"],
                     extra.get("column_ids") or {},
-                )
-                if "schema" in prev_manifest
-                else None,
+                ),
             )
         )
     _carry_cluster(prev_manifest, extra)
     _carry_deletes(prev_manifest, extra)
-    return _commit(root, parent, "delete", new_segs, extra or None, ref)
+    return _commit(root, parent, "delete", new_segs, extra, ref)
 
 
 def rollback_to(root: str, version: int) -> int:
@@ -2431,10 +2392,8 @@ def rollback_to(root: str, version: int) -> int:
     if not (1 <= version <= head):
         raise ValueError(f"no version {version} to roll back to")
     target = read_manifest(root, version)
-    segs = _parent_segments(root, target)
-    extra: dict = {"rolled_back_to": version}
-    if "schema" in target:
-        extra["schema"] = target["schema"]
+    segs = list(target["segments"])
+    extra: dict = {"rolled_back_to": version, "schema": target["schema"]}
     if target.get("stats_cols"):
         extra["stats_cols"] = list(target["stats_cols"])
     if target.get("partition_spec"):
@@ -2466,9 +2425,7 @@ def _carry_manifest_extras(src: dict, peer: dict | None = None) -> dict:
     ``peer`` manifest is given (the destination chain's old head),
     ``next_column_id`` is max-merged so a retired column ID is never
     re-minted on either chain."""
-    extra: dict = {}
-    if "schema" in src:
-        extra["schema"] = src["schema"]
+    extra: dict = {"schema": src["schema"]}
     for k in (
         "stats_cols",
         "partition_spec",
@@ -2511,7 +2468,7 @@ def create_branch(root: str, name: str, version: int | None = None) -> int:
     extra["fork_version"] = v
     try:
         return _commit(
-            root, 0, "branch", _parent_segments(root, src), extra, name
+            root, 0, "branch", list(src["segments"]), extra, name
         )
     except ConcurrentCommit:
         raise ValueError(f"branch {name!r} already exists") from None
@@ -2642,15 +2599,45 @@ def publish_branch(
         "fork_version": fork,
     }
     return _commit(
-        root, head, "publish", _parent_segments(root, bm), extra
+        root, head, "publish", list(bm["segments"]), extra
     )
 
 
-def table_refs(spark: SparkSession, root: str) -> DataFrame:
-    """Named refs as a metadata table (Iceberg's ``refs``): one row
-    per branch (head version in its own chain + trunk fork point) and
-    per tag (pinned trunk version), plus the implicit trunk. Resolved
-    from O(#refs) small JSON — no data files open."""
+# Metadata tables: one driver-side row assembler per kind, each
+# returning (schema, rows) from manifest/segment JSON alone. The
+# library wraps them in a DataFrame; the ``format("snapshot")``
+# DataSource serves the same rows through ``option("metadata", kind)``.
+_REFS_SCHEMA = (
+    StructType()
+    .add("ref", "string")
+    .add("kind", "string")
+    .add("version", "integer")
+    .add("fork_version", "integer")
+)
+_FILES_SCHEMA = (
+    StructType()
+    .add("file", "string")
+    .add("segment", "string")
+    .add("n_rows", "long")
+    .add("partition", MapType(StringType(), StringType()))
+)
+_HISTORY_SCHEMA = (
+    StructType()
+    .add("version", "integer")
+    .add("parent", "integer")
+    .add("op", "string")
+    .add("committed_at", "long")
+    .add("n_segments", "integer")
+    .add("n_files", "integer")
+    .add("n_pos_delete_files", "integer")
+    .add("n_eq_delete_entries", "integer")
+    .add("stream_id", "string")
+    .add("batch_id", "long")
+    .add("rolled_back_to", "integer")
+)
+
+
+def _refs_table(root: str) -> tuple[StructType, list[tuple]]:
     rows = [("main", "branch", current_version(root), None)]
     for b, head in sorted(list_branches(root).items()):
         try:
@@ -2662,10 +2649,89 @@ def table_refs(spark: SparkSession, root: str) -> DataFrame:
         rows.append((b, "branch", head, fork))
     for t, v in sorted(list_tags(root).items()):
         rows.append((t, "tag", v, None))
-    return spark.createDataFrame(
-        rows, "ref string, kind string, version int, fork_version int"
-    )
+    return _REFS_SCHEMA, rows
 
+
+def _files_table(
+    root: str, version: int, ref: str = "main"
+) -> tuple[StructType, list[tuple]]:
+    rows = []
+    for seg in read_manifest(root, version, ref)["segments"]:
+        obj = _read_segment_obj(root, seg)
+        nrows = obj.get("rows") or {}
+        parts = obj.get("partitions") or {}
+        rows.extend(
+            (f, seg, nrows.get(f), parts.get(f)) for f in obj["files"]
+        )
+    return _FILES_SCHEMA, rows
+
+
+def _partitions_table(
+    root: str, version: int, ref: str = "main"
+) -> tuple[StructType, list[tuple]]:
+    spec = read_manifest(root, version, ref).get("partition_spec")
+    if not spec:
+        raise ValueError(
+            "table has no partition_spec; commit with partition_by first"
+        )
+    groups: dict = {}
+    for _f, _seg, n, pv in _files_table(root, version, ref)[1]:
+        key = tuple((pv or {}).get(c) for c in spec)
+        cnt, total, complete = groups.get(key, (0, 0, True))
+        groups[key] = (cnt + 1, total + (n or 0), complete and n is not None)
+    # per-file counts are null for segments written before row
+    # accounting; a sum would silently skip them and present a
+    # plausible UNDERCOUNT as metadata-exact — null the group's count
+    # instead whenever any of its files lacks one. Files committed
+    # before partition_by was established (or hive-null values) map
+    # to None components; the None-safe sort keeps them first.
+    rows = [
+        key + (cnt, total if complete else None)
+        for key, (cnt, total, complete) in sorted(
+            groups.items(),
+            key=lambda kv: tuple(
+                (v is not None, "" if v is None else str(v)) for v in kv[0]
+            ),
+        )
+    ]
+    schema = StructType()
+    for c in spec:
+        schema.add(c, "string")
+    return schema.add("n_files", "long").add("n_rows", "long"), rows
+
+
+def _history_table(root: str) -> tuple[StructType, list[tuple]]:
+    rows = []
+    for v in range(1, current_version(root) + 1):
+        try:
+            m = read_manifest(root, v)
+        except OSError:
+            continue  # expired by retention
+        rows.append(
+            (
+                v,
+                int(m["parent"]),
+                m["op"],
+                int(m["ts"]),
+                len(m["segments"]),
+                len(manifest_files(root, m)),
+                len(m.get("delete_files") or []),
+                len(m.get("eq_delete_files") or []),
+                m.get("stream_id"),
+                m.get("batch_id"),
+                m.get("rolled_back_to"),
+            )
+        )
+    return _HISTORY_SCHEMA, rows
+
+
+def table_refs(spark: SparkSession, root: str) -> DataFrame:
+    """Named refs as a metadata table (Iceberg's ``refs``): one row
+    per branch (head version in its own chain + trunk fork point) and
+    per tag (pinned trunk version), plus the implicit trunk. Resolved
+    from O(#refs) small JSON — no data files open."""
+    schema, rows = _refs_table(root)
+    return spark.createDataFrame(rows, schema)
 
 
 def table_files(
@@ -2690,22 +2756,8 @@ def table_files(
     if isinstance(version, str):
         version = tag_version(root, version)
     v = current_version(root, ref) if version is None else version
-    m = read_manifest(root, v, ref)
-    rows = []
-    if "segments" in m:
-        for seg in m["segments"]:
-            obj = _read_segment_obj(root, seg)
-            nrows = obj.get("rows") or {}
-            parts = obj.get("partitions") or {}
-            for f in obj["files"]:
-                rows.append((f, seg, nrows.get(f), parts.get(f)))
-    else:  # legacy inline-files manifest
-        rows = [(f, None, None, None) for f in m.get("files", [])]
-    return spark.createDataFrame(
-        rows,
-        "file string, segment string, n_rows long, "
-        "partition map<string,string>",
-    )
+    schema, rows = _files_table(root, v, ref)
+    return spark.createDataFrame(rows, schema)
 
 
 def table_partitions(
@@ -2723,25 +2775,8 @@ def table_partitions(
     if isinstance(version, str):
         version = tag_version(root, version)
     v = current_version(root, ref) if version is None else version
-    spec = read_manifest(root, v, ref).get("partition_spec")
-    if not spec:
-        raise ValueError(
-            "table has no partition_spec; commit with partition_by first"
-        )
-    files = table_files(spark, root, v, ref)
-    keys = [files["partition"][c].alias(c) for c in spec]
-    # per-file counts are null for segments written before row
-    # accounting; sum() would silently skip them and present a
-    # plausible UNDERCOUNT as metadata-exact — null the aggregate
-    # instead whenever any file in the group lacks a count (the
-    # honest answer table_files already gives per file)
-    return files.groupBy(*keys).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_files"),
-        F.when(F.count("n_rows") == F.count(F.lit(1)), F.sum("n_rows"))
-        .cast("bigint")
-        .alias("n_rows"),
-    )
-
+    schema, rows = _partitions_table(root, v, ref)
+    return spark.createDataFrame(rows, schema)
 
 
 def clustered_prune(
@@ -2794,8 +2829,7 @@ def timestamp_version(root: str, t, ref: str = "main") -> int:
     the snapshot a reader at wall-clock ``t`` would have seen.
     ``t`` is epoch seconds (fractional OK), a datetime, or an ISO
     string; commit times compare at microsecond resolution
-    (``ts_us``, strictly increasing along the chain since r10;
-    pre-r10 manifests fall back to whole-second ``ts``).
+    (``ts_us``, strictly increasing along the chain).
 
     Raises ValueError when ``t`` predates the table's first commit,
     and the typed `RetentionExpired` when the target snapshot existed
@@ -2866,8 +2900,8 @@ def read_snapshot(
     return _read_files(spark, root, read_manifest(root, v, ref), prune)
 
 
-# Merge-on-read READ-AMPLIFICATION guard (VERDICT r10 task 6; parity
-# anchor: Iceberg's delete-file metrics / Delta auto-compaction).
+# Merge-on-read READ-AMPLIFICATION guard (parity anchor: Iceberg's
+# delete-file metrics / Delta auto-compaction).
 # Every commit_mor_delete_keys / commit_mor_upsert appends one
 # equality-delete entry scoped to all earlier segments; readers pay
 # one anti-join per entry that covers their scan until `compact`
@@ -2892,7 +2926,7 @@ def read_amplification(
     v = version or current_version(root, ref)
     m = read_manifest(root, v, ref)
     eq = m.get("eq_delete_files") or []
-    segs = _parent_segments(root, m)
+    segs = list(m["segments"])
     seg_counts = {s: 0 for s in segs}
     for e in eq:
         for s in e["scope_segments"]:
@@ -2956,34 +2990,8 @@ def table_history(spark: SparkSession, root: str) -> DataFrame:
     resolved from metadata only — no data files open). The audit
     surface operators and humans both need: what changed, when, by
     which stream, and where a rollback points."""
-    rows = []
-    for v in range(1, current_version(root) + 1):
-        try:
-            m = read_manifest(root, v)
-        except OSError:
-            continue  # expired by retention
-        rows.append(
-            (
-                v,
-                int(m.get("parent", 0)),
-                m.get("op", "unknown"),
-                int(m.get("ts", 0)),
-                len(m.get("segments", [])),
-                len(manifest_files(root, m)),
-                len(m.get("delete_files") or []),
-                len(m.get("eq_delete_files") or []),
-                m.get("stream_id"),
-                m.get("batch_id"),
-                m.get("rolled_back_to"),
-            )
-        )
-    return spark.createDataFrame(
-        rows,
-        "version int, parent int, op string, committed_at long, "
-        "n_segments int, n_files int, n_pos_delete_files int, "
-        "n_eq_delete_entries int, stream_id string, "
-        "batch_id long, rolled_back_to int",
-    )
+    schema, rows = _history_table(root)
+    return spark.createDataFrame(rows, schema)
 
 
 def expire_snapshots(root: str, keep_last: int = 2) -> list[str]:
@@ -3030,7 +3038,7 @@ def expire_snapshots(root: str, keep_last: int = 2) -> list[str]:
         # carrying them: readers resolve scope file names through the
         # segment JSON even after a COW rewrite dropped the segment
         # from the data list
-        segs_v = list(m.get("segments", [])) + [
+        segs_v = list(m["segments"]) + [
             s for e in eq_entries for s in e["scope_segments"]
         ]
         (live_segs if v in keep else expired_segs).update(segs_v)
@@ -3047,7 +3055,7 @@ def expire_snapshots(root: str, keep_last: int = 2) -> list[str]:
             live.update(bm.get("delete_files") or [])
             beq = bm.get("eq_delete_files") or []
             live.update(f for e in beq for f in e["files"])
-            live_segs.update(bm.get("segments", []))
+            live_segs.update(bm["segments"])
             live_segs.update(s for e in beq for s in e["scope_segments"])
     deleted: list[str] = []
     for v in versions:
@@ -3116,7 +3124,7 @@ def expire_snapshots(root: str, keep_last: int = 2) -> list[str]:
 
 
 def vacuum(root: str, keep_last: int = 2) -> list[str]:
-    """Full table maintenance (public op, VERDICT r6 task 7): retention
+    """Full table maintenance (public op): retention
     GC via `expire_snapshots` (manifests + segments + data files under
     the documented age gates) PLUS reclamation of dead writers'
     staging scratch — ``*.tmp-<pid>-*`` files a crashed `_commit` left
@@ -3182,7 +3190,7 @@ def commit_with_retry(
     max_attempts: int = 8,
     base_backoff_sec: float = 0.05,
 ) -> int:
-    """Optimistic-commit retry loop (public, VERDICT r6 task 5): call
+    """Optimistic-commit retry loop (public): call
     ``build_fn()`` — any commit operation that re-reads the head
     itself, e.g. ``lambda: commit_append(spark, root, df)`` — and on
     ConcurrentCommit retry with bounded exponential backoff + jitter
@@ -3228,7 +3236,7 @@ def _commit_segments_with_retry(
     while True:
         parent = current_version(root, ref)
         pm = read_manifest(root, parent, ref) if parent else {}
-        prev = _parent_segments(root, pm) if parent else []
+        prev = list(pm["segments"]) if parent else []
         attempt_extra = dict(extra or {})
         own = list(attempt_extra.get("stats_cols") or [])
         inherited = [
@@ -3385,8 +3393,7 @@ def compact(
     carries every segment added since the compacted parent instead of
     silently dropping it.
 
-    ``cluster_by=[a, b]`` (VERDICT r8 task 6 — Delta OPTIMIZE ZORDER's
-    shape) makes the fold a Z-ORDER-CLUSTERED rewrite: an 8-bit
+    ``cluster_by=[a, b]`` (Delta OPTIMIZE ZORDER's shape) makes the fold a Z-ORDER-CLUSTERED rewrite: an 8-bit
     Morton cell over the two NON-NEGATIVE INTEGER columns (shifts
     derived from the data's maxima, `layout.zorder_shifts`) becomes a
     derived partition column ``cell_col``, the rewrite lands one file
@@ -3410,7 +3417,7 @@ def compact(
     if not parent:
         raise ValueError("cannot compact an empty table")
     base_manifest = read_manifest(root, parent)
-    base_segs = set(_parent_segments(root, base_manifest))
+    base_segs = set(list(base_manifest["segments"]))
     base_files = set(manifest_files(root, base_manifest))
     df = _read_files(spark, root, base_manifest)
     spec = base_manifest.get("partition_spec") or []
@@ -3475,15 +3482,13 @@ def compact(
             folded_ids.get("column_ids")
             or base_manifest.get("column_ids")
             or {},
-        )
-        if "schema" in base_manifest
-        else None,
+        ),
         _collect_file_blooms(root, rewritten, bcols) if bcols else None,
     )
     while True:
         head = current_version(root)
         head_manifest = read_manifest(root, head)
-        head_segs = _parent_segments(root, head_manifest)
+        head_segs = list(head_manifest["segments"])
         head_files = set(manifest_files(root, head_manifest))
         removed = base_files - head_files
         if removed:
@@ -3519,25 +3524,10 @@ def compact(
                 "fold would resurrect the deleted rows — re-run "
                 "compaction on the new head"
             )
-        # Segments added since the compacted base, by RESOLVED FILE
-        # diff, not segment name: `_parent_segments` mints a fresh
-        # s-<uuid> each time it lazily folds a legacy inline-files
-        # manifest, so a name diff against such a head would classify
-        # the entire legacy table as "added" and commit it alongside
-        # the rewrite — doubling every row. A segment whose files are
-        # all in the base carries no new rows and is excluded.
-        added_segs = [
-            s
-            for s in head_segs
-            if s not in base_segs
-            and not set(_read_segment(root, s)) <= base_files
-        ]
-        extra = (
-            {"schema": head_manifest["schema"]}
-            if "schema" in head_manifest
-            else {}
-        )
-        if cluster_spec is not None and "schema" in head_manifest:
+        # segments added since the compacted base
+        added_segs = [s for s in head_segs if s not in base_segs]
+        extra = {"schema": head_manifest["schema"]}
+        if cluster_spec is not None:
             # clustered fold: the committed schema is the head's plus
             # the derived cell column, spec becomes the cell
             fields = [
@@ -3553,12 +3543,9 @@ def compact(
             ]
             extra["schema"] = {"type": "struct", "fields": fields}
             extra["cluster_spec"] = cluster_spec
-        if "schema" in head_manifest:
-            extra.update(
-                _ids_for_commit(
-                    head_manifest, extra["schema"]["fields"]
-                )
-            )
+        extra.update(
+            _ids_for_commit(head_manifest, extra["schema"]["fields"])
+        )
         if head_manifest.get("stats_cols"):
             extra["stats_cols"] = list(head_manifest["stats_cols"])
         if head_manifest.get("bloom_cols"):
@@ -3576,7 +3563,7 @@ def compact(
                 head,
                 "compact",
                 [folded_seg] + added_segs,
-                extra or None,
+                extra,
             )
         except ConcurrentCommit:
             continue
@@ -3601,55 +3588,20 @@ def _retention_floor(root: str, head: int) -> int:
     return 0 if oldest <= 1 else oldest
 
 
-def _append_new_segments(root: str, m: dict, pm: dict) -> list[str]:
-    """The segments an append commit ADDED over its parent — the
-    commit's own new rows, by name diff (both manifests two-tier)."""
-    parent_segs = set(pm["segments"])
-    return [s for s in m["segments"] if s not in parent_segs]
-
-
 def _append_delta(root: str, m: dict, pm: dict) -> dict | None:
     """Sub-manifest carrying EXACTLY the rows an append commit added
-    over its parent, or None when it added nothing. The ONE place the
-    append diff lives — `read_appends`, `read_changes`, and the
-    streaming data source all consume it, so the legacy-boundary rule
-    below cannot drift between them.
-
-    Three manifest-shape cases:
-    - both two-tier: new segments by name diff;
-    - two-tier child over a legacy inline-files parent: the child's
-      lazily-folded segment carries a fresh ``s-<uuid>`` never present
-      in the parent, so a name diff would re-emit the parent's whole
-      row set as this commit's rows; diff by RESOLVED FILES instead —
-      a segment whose files all exist in the parent adds nothing;
-    - legacy child: inline file diff.
+    over its parent ``pm`` (``{}`` for the first commit), or None when
+    it added nothing: its new segments, by name diff. The ONE place
+    the append diff lives — `read_appends`, `read_changes`, and the
+    streaming data source all consume it.
 
     Carried ``delete_files``/``eq_delete_files`` are popped: position
     deletes can only reference files that PREDATE this commit's own
     new rows, and equality deletes scope to segments that predate them
     too, so the anti-joins would match nothing — appends-feed
     semantics anyway serve rows AS OF their append."""
-    if "segments" in m and "segments" in pm:
-        new_segs = _append_new_segments(root, m, pm)
-    elif "segments" in m:
-        parent_files = set(manifest_files(root, pm)) if pm else set()
-        new_segs = [
-            s
-            for s in m["segments"]
-            if not set(_read_segment(root, s)) <= parent_files
-        ]
-    else:  # legacy append commit itself: inline files, no segments
-        parent_files = set(manifest_files(root, pm)) if pm else set()
-        new_files = [
-            f for f in m.get("files", []) if f not in parent_files
-        ]
-        if not new_files:
-            return None
-        sub = dict(m)
-        sub["files"] = new_files
-        sub.pop("delete_files", None)
-        sub.pop("eq_delete_files", None)
-        return sub
+    parent_segs = set(pm.get("segments", []))
+    new_segs = [s for s in m["segments"] if s not in parent_segs]
     if not new_segs:
         return None
     sub = dict(m)
@@ -3681,9 +3633,8 @@ def read_appends(
 
     Raises `RetentionExpired` (typed, naming the oldest readable
     checkpoint) when the window needs manifests `expire_snapshots`
-    already deleted — the Delta CDF contract, instead of the raw
-    FileNotFoundError a lagging consumer used to hit (ADVICE/VERDICT
-    r8). Reconstructing version v's appends also reads v-1 (the
+    already deleted — the Delta CDF contract, instead of a raw
+    FileNotFoundError. Reconstructing version v's appends also reads v-1 (the
     parent diff), so the oldest readable CHECKPOINT equals the oldest
     retained manifest (or 0 when the full history survives)."""
     head = current_version(root)
@@ -3717,8 +3668,6 @@ def read_appends(
 def _align_to(df: DataFrame, manifest: dict) -> DataFrame:
     """Project a frame onto a manifest's committed schema (add-only:
     missing columns null-fill; column order normalized)."""
-    from pyspark.sql.types import StructType
-
     schema = StructType.fromJson(manifest["schema"])
     have = set(df.columns)
     return df.select(
@@ -3790,10 +3739,6 @@ def read_changes(
                 "reseed from a snapshot read instead of the change feed"
             )
         if op == "append":
-            # _append_delta handles the legacy boundary (a two-tier
-            # child over an inline-files parent) by file-subset diff —
-            # a name diff here re-emitted the parent's ENTIRE row set
-            # as inserts of the child commit (ADVICE r9).
             sub = _append_delta(root, m, pm)
             if sub is None:
                 continue

@@ -28,12 +28,14 @@ instead of a library call:
        .option("checkpointLocation", ckpt).start(root))
     # CDC apply: .option("mode", "upsert").option("keys", "id")
 
-Batch reads resolve the manifest exactly like
+Batch reads plan through the same `snapshots.plan_scan` as
 `snapshots.read_snapshot` — committed schema, column-ID evolution
-mapping per file cohort, merge-on-read position deletes — but execute
-as one InputPartition per data file with a pyarrow worker-side kernel
-(columns pruned to the projection, delete positions masked before
-projection), so the scan parallelism is the manifest's file list.
+mapping per file, merge-on-read position and equality deletes — but
+execute as packed slices of data files (one InputPartition per
+~32 MiB of input, `_slice_target_bytes`) with a pyarrow worker-side
+kernel: the slice reads its position-delete set once, masks each
+file's deleted positions before projection, and prunes columns to
+the projection.
 
 The STREAM reader makes the commit log a Structured Streaming source
 with snapshot VERSIONS as offsets: `initialOffset` starts at 0 (or
@@ -103,10 +105,10 @@ class _FileSlice(InputPartition):
     its write-time column metadata and the equality-delete entries
     whose scope covers it (resolved driver-side; [{paths, cols}]
     JSON). ``items`` is [(path, columns_json, eq_json)]; files are
-    packed to ``_slice_target_bytes()`` per task (guide §2.2/§6 —
-    one task per tiny file paid pure scheduling overhead on
-    micro-batch-sized commits, while at scale right-sized files pack
-    one-per-slice and parallelism is unchanged)."""
+    packed to ``_slice_target_bytes()`` per task (one task per tiny
+    file paid pure scheduling overhead on micro-batch-sized commits,
+    while at scale right-sized files pack one-per-slice and
+    parallelism is unchanged)."""
 
     def __init__(self, items, schema_json, ids_json, delete_paths):
         self.items = items
@@ -133,8 +135,9 @@ def _slice_target_bytes() -> int:
 def _arrow_read(part: _FileSlice):
     """Worker kernel: parquet -> (MOR mask) -> ID/name projection ->
     arrow batches matching the target schema exactly, one packed file
-    at a time. Runs inside the Python data source executor; imports
-    stay local."""
+    at a time; the slice's position-delete files are read once and
+    filtered per file. Runs inside the Python data source executor;
+    imports stay local."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -142,6 +145,11 @@ def _arrow_read(part: _FileSlice):
 
     schema = StructType.fromJson(json.loads(part.schema_json))
     ids = json.loads(part.ids_json) if part.ids_json else None
+    dels = (
+        pq.read_table(part.delete_paths, columns=["file_name", "pos"])
+        if part.delete_paths
+        else None
+    )
     for path, columns_json, eq_json in part.items:
         cols_meta = json.loads(columns_json) if columns_json else None
         by_id = (
@@ -162,11 +170,8 @@ def _arrow_read(part: _FileSlice):
             if s is not None and s in present
         ]
         tbl = pq.read_table(path, columns=wanted)  # column pruning
-        if part.delete_paths:
+        if dels is not None:
             fname = os.path.basename(path)
-            dels = pq.read_table(
-                part.delete_paths, columns=["file_name", "pos"]
-            )
             pos = dels.filter(pc.equal(dels["file_name"], fname))["pos"]
             if len(pos):
                 keep = pa.array(
@@ -219,94 +224,49 @@ def _positions_mask(positions, n):
 
 
 def _slices_for_manifest(
-    root: str, manifest: dict, schema_json: str, files: list[str] | None = None
+    root: str, manifest: dict, schema_json: str, prune: dict | None = None
 ) -> list[_FileSlice]:
-    """Driver-side planning: data files PACKED into byte-target slices
-    (greedy, manifest order — deterministic under task retries), each
-    file carrying its segment's write-time column metadata (evolution
-    cohort); the manifest's delete files ride at the slice level.
-    Packing bounds the task count by input bytes instead of file count
-    (guide §2.2/§6): a micro-batch-commit table with dozens of KB-sized
-    files plans a handful of tasks, while production-sized files still
-    land one per slice. File sizes come from the local filesystem
-    (metadata stat, no open); a missing file costs nothing here — the
-    read itself reports it."""
+    """Driver-side packing of `snapshots.plan_scan`'s files into
+    byte-target slices (greedy, manifest order — deterministic under
+    task retries), each file carrying its write-time column mapping
+    and its covering equality-delete entries; the snapshot's position
+    delete files ride at the slice level. Packing bounds the task
+    count by input bytes instead of file count: a micro-batch-commit
+    table with dozens of KB-sized files plans a handful of tasks,
+    while production-sized files still land one per slice. File sizes
+    come from the local filesystem (metadata stat, no open); a missing
+    file costs nothing here — the read itself reports it."""
     ids_json = (
         json.dumps(manifest["column_ids"])
         if manifest.get("column_ids")
         else None
     )
-    delete_paths = [
-        os.path.join(root, f)
-        for f in (manifest.get("delete_files") or [])
+    plan = snap.plan_scan(root, manifest, prune)
+    delete_paths = [os.path.join(root, f) for f in plan.pos_deletes]
+    eq = [
+        {"paths": [os.path.join(root, f) for f in paths], "cols": cols}
+        for paths, cols in plan.eq_deletes
     ]
-    # equality-delete entries with their scope resolved ONCE to file
-    # sets; each slice carries only the entries that cover its file
-    eq_entries = []
-    for e in manifest.get("eq_delete_files") or []:
-        scope: set[str] = set()
-        for s in e["scope_segments"]:
-            scope.update(snap._read_segment(root, s))
-        eq_entries.append(
-            (
-                scope,
-                {
-                    "paths": [os.path.join(root, f) for f in e["files"]],
-                    "cols": list(e["cols"]),
-                },
-            )
-        )
-
-    def _eq_json_for(f: str):
-        if not eq_entries:
-            return None
-        hits = [payload for scope, payload in eq_entries if f in scope]
-        return json.dumps(hits) if hits else None
-
-    only = set(files) if files is not None else None
-    # segments written BEFORE the first evolution carry no per-segment
-    # column metadata; their write-time mapping is the manifest's
-    # legacy_columns snapshot (same fallback the library read uses)
-    legacy_cj = (
-        json.dumps(manifest["legacy_columns"])
-        if manifest.get("legacy_columns")
-        else None
-    )
-    items: list[tuple[str, str | None, str | None]] = []
-    if "segments" in manifest:
-        for seg in manifest["segments"]:
-            obj = snap._read_segment_obj(root, seg)
-            cj = (
-                json.dumps(obj["columns"])
-                if obj.get("columns")
-                else legacy_cj
-            )
-            for f in obj["files"]:
-                if only is not None and f not in only:
-                    continue
-                items.append(
-                    (os.path.join(root, f), cj, _eq_json_for(f))
-                )
-    else:  # legacy inline-files manifest
-        for f in manifest.get("files", []):
-            if only is not None and f not in only:
-                continue
-            items.append(
-                (os.path.join(root, f), legacy_cj, _eq_json_for(f))
-            )
     target = _slice_target_bytes()
     out: list[_FileSlice] = []
     pack: list[tuple[str, str | None, str | None]] = []
     packed = 0
-    for item in items:
+    for f, mapping, eq_idx in plan.files:
+        path = os.path.join(root, f)
         try:
-            size = os.path.getsize(item[0])
+            size = os.path.getsize(path)
         except OSError:
             size = target  # unknown -> own slice; the read reports it
         if pack and packed + size > target:
             out.append(_FileSlice(pack, schema_json, ids_json, delete_paths))
             pack, packed = [], 0
-        pack.append(item)
+        pack.append(
+            (
+                path,
+                json.dumps(mapping) if mapping else None,
+                json.dumps([eq[i] for i in eq_idx]) if eq_idx else None,
+            )
+        )
         packed += size
     if pack:
         out.append(_FileSlice(pack, schema_json, ids_json, delete_paths))
@@ -356,11 +316,6 @@ def _typed_literal(s: str, type_name: str):
 
 def _schema_of(root: str, version: int, ref: str = "main") -> StructType:
     m = snap.read_manifest(root, version, ref)
-    if "schema" not in m:
-        raise ValueError(
-            "legacy table has no committed schema; read it via "
-            "snapshots.read_snapshot"
-        )
     return StructType.fromJson(_nullable_schema_json(m["schema"]))
 
 
@@ -382,16 +337,8 @@ class _BatchReader(DataSourceReader):
         schema_json = json.dumps(
             _nullable_schema_json(self.manifest["schema"])
         )
-        files = None
-        if self.prune:
-            # manifest min/max + partition-tuple + bloom skipping,
-            # resolved BEFORE planning: skipped files are never
-            # listed, opened, or footer-read
-            files = snap.pruned_manifest_files(
-                self.root, self.manifest, self.prune
-            )
         return _slices_for_manifest(
-            self.root, self.manifest, schema_json, files=files
+            self.root, self.manifest, schema_json, self.prune
         )
 
     def read(self, partition):
@@ -520,21 +467,9 @@ class _StreamReader(DataSourceStreamReader):
                 )
 
     def _check_retention(self, start_version: int) -> None:
-        head = snap.current_version(self.root)
-        names = os.listdir(snap._meta_dir(self.root))
-        retained = sorted(
-            int(n[1:-5])
-            for n in names
-            if n.startswith("v") and n.endswith(".json")
-            and n[1:-5].isdigit()
+        min_since = snap._retention_floor(
+            self.root, snap.current_version(self.root)
         )
-        oldest = head
-        for v in reversed(retained):
-            if v in (oldest, oldest - 1):
-                oldest = v
-            elif v < oldest:
-                break
-        min_since = 0 if oldest <= 1 else oldest
         if start_version < min_since:
             raise snap.RetentionExpired(
                 f"stream checkpoint at v{start_version} is behind the "
@@ -545,9 +480,6 @@ class _StreamReader(DataSourceStreamReader):
     def read(self, partition):
         yield from _arrow_read(partition)
 
-    # NOTE: commit(end) is defined above (admission-cursor sync); a
-    # second no-op definition here used to shadow it into dead code.
-
     def stop(self):
         pass
 
@@ -555,200 +487,72 @@ class _StreamReader(DataSourceStreamReader):
 _META_KINDS = ("history", "files", "partitions", "refs", "amplification")
 
 
+_AMPLIFICATION_SCHEMA = (
+    StructType()
+    .add("version", "integer")
+    .add("n_eq_delete_entries", "integer")
+    .add("n_pos_delete_files", "integer")
+    .add("n_segments", "integer")
+    .add("worst_segment_entries", "integer")
+    .add("compact_recommended", "boolean")
+)
+
+
 def _meta_schema_and_rows(root: str, kind: str, version, ref: str):
     """METADATA TABLES through the source (Iceberg's ``snapshots`` /
     ``files`` / ``partitions`` / ``refs``; Delta's DESCRIBE HISTORY):
-    (ddl, pa_fields, rows) for ``option("metadata", <kind>)``. Row
-    assembly is O(metadata) small JSON on the driver — the same
-    numbers as the library's `table_history`/`table_files`/
-    `table_partitions`/`table_refs`/`read_amplification` (pinned
-    equal by tests), served to SQL users who only hold the reader."""
-    import pyarrow as pa
-
+    (schema, rows) for ``option("metadata", <kind>)``, from the same
+    driver-side row assemblers as the library's `table_history`/
+    `table_files`/`table_partitions`/`table_refs`, plus
+    `read_amplification` as a one-row table — served to SQL users who
+    only hold the reader."""
     if isinstance(version, str) and not str(version).isdigit():
         version = snap.tag_version(root, version)
     v = int(version) if version is not None else snap.current_version(
         root, ref
     )
     if kind == "history":
-        ddl = (
-            "version int, parent int, op string, committed_at long, "
-            "n_segments int, n_files int, n_pos_delete_files int, "
-            "n_eq_delete_entries int, stream_id string, batch_id long, "
-            "rolled_back_to int"
-        )
-        fields = [
-            pa.field("version", pa.int32()),
-            pa.field("parent", pa.int32()),
-            pa.field("op", pa.string()),
-            pa.field("committed_at", pa.int64()),
-            pa.field("n_segments", pa.int32()),
-            pa.field("n_files", pa.int32()),
-            pa.field("n_pos_delete_files", pa.int32()),
-            pa.field("n_eq_delete_entries", pa.int32()),
-            pa.field("stream_id", pa.string()),
-            pa.field("batch_id", pa.int64()),
-            pa.field("rolled_back_to", pa.int32()),
-        ]
-        rows = []
-        for hv in range(1, snap.current_version(root) + 1):
-            try:
-                m = snap.read_manifest(root, hv)
-            except OSError:
-                continue  # expired by retention
-            rows.append(
-                (
-                    hv,
-                    int(m.get("parent", 0)),
-                    m.get("op", "unknown"),
-                    int(m.get("ts", 0)),
-                    len(m.get("segments", [])),
-                    len(snap.manifest_files(root, m)),
-                    len(m.get("delete_files") or []),
-                    len(m.get("eq_delete_files") or []),
-                    m.get("stream_id"),
-                    m.get("batch_id"),
-                    m.get("rolled_back_to"),
-                )
-            )
-        return ddl, fields, rows
-    if kind in ("files", "partitions"):
-        m = snap.read_manifest(root, v, ref)
-        frows = []
-        if "segments" in m:
-            for seg in m["segments"]:
-                obj = snap._read_segment_obj(root, seg)
-                nrows = obj.get("rows") or {}
-                parts = obj.get("partitions") or {}
-                for f in obj["files"]:
-                    frows.append((f, seg, nrows.get(f), parts.get(f)))
-        else:
-            frows = [(f, None, None, None) for f in m.get("files", [])]
-        if kind == "files":
-            return (
-                "file string, segment string, n_rows long, "
-                "partition map<string,string>",
-                [
-                    pa.field("file", pa.string()),
-                    pa.field("segment", pa.string()),
-                    pa.field("n_rows", pa.int64()),
-                    pa.field(
-                        "partition", pa.map_(pa.string(), pa.string())
-                    ),
-                ],
-                frows,
-            )
-        spec = m.get("partition_spec")
-        if not spec:
-            raise ValueError(
-                "table has no partition_spec; commit with "
-                "partition_by first"
-            )
-        groups: dict = {}
-        for _f, _seg, n, pv in frows:
-            key = tuple((pv or {}).get(c) for c in spec)
-            cnt, total, complete = groups.get(key, (0, 0, True))
-            groups[key] = (
-                cnt + 1,
-                total + (n or 0),
-                complete and n is not None,
-            )
-        rows = [
-            key + (cnt, total if complete else None)
-            # None-safe sort: files committed before partition_by was
-            # established (or hive-null values) map to None components,
-            # and None vs str tuples don't compare — keep the
-            # unpartitioned group as an explicit leading row.
-            for key, (cnt, total, complete) in sorted(
-                groups.items(),
-                key=lambda kv: tuple(
-                    (v is not None, "" if v is None else str(v))
-                    for v in kv[0]
-                ),
-            )
-        ]
-        ddl = ", ".join(f"{c} string" for c in spec) + (
-            ", n_files bigint, n_rows bigint"
-        )
-        fields = [pa.field(c, pa.string()) for c in spec] + [
-            pa.field("n_files", pa.int64()),
-            pa.field("n_rows", pa.int64()),
-        ]
-        return ddl, fields, rows
+        return snap._history_table(root)
+    if kind == "files":
+        return snap._files_table(root, v, ref)
+    if kind == "partitions":
+        return snap._partitions_table(root, v, ref)
     if kind == "refs":
-        rows = [("main", "branch", snap.current_version(root), None)]
-        for b, head in sorted(snap.list_branches(root).items()):
-            try:
-                fork = int(
-                    snap.read_manifest(root, 1, b).get("fork_version")
-                    or 0
-                )
-            except OSError:
-                continue
-            rows.append((b, "branch", head, fork))
-        for t, tv in sorted(snap.list_tags(root).items()):
-            rows.append((t, "tag", tv, None))
-        return (
-            "ref string, kind string, version int, fork_version int",
-            [
-                pa.field("ref", pa.string()),
-                pa.field("kind", pa.string()),
-                pa.field("version", pa.int32()),
-                pa.field("fork_version", pa.int32()),
-            ],
-            rows,
-        )
+        return snap._refs_table(root)
     if kind == "amplification":
         ra = snap.read_amplification(root, v, ref)
-        return (
-            "version int, n_eq_delete_entries int, "
-            "n_pos_delete_files int, n_segments int, "
-            "worst_segment_entries int, compact_recommended boolean",
-            [
-                pa.field("version", pa.int32()),
-                pa.field("n_eq_delete_entries", pa.int32()),
-                pa.field("n_pos_delete_files", pa.int32()),
-                pa.field("n_segments", pa.int32()),
-                pa.field("worst_segment_entries", pa.int32()),
-                pa.field("compact_recommended", pa.bool_()),
-            ],
-            [
-                (
-                    ra["version"],
-                    ra["n_eq_delete_entries"],
-                    ra["n_pos_delete_files"],
-                    ra["n_segments"],
-                    ra["worst_segment_entries"],
-                    ra["compact_recommended"],
-                )
-            ],
-        )
+        return _AMPLIFICATION_SCHEMA, [
+            tuple(ra[f.name] for f in _AMPLIFICATION_SCHEMA.fields)
+        ]
     raise ValueError(
         f"unknown metadata table {kind!r}; one of {_META_KINDS}"
     )
 
 
 class _MetaSlice(InputPartition):
-    """Driver-assembled metadata rows + their arrow field spec
-    ((name, type) handled by re-resolving in the worker via the kind
-    is unnecessary — the rows and fields pickle whole)."""
+    """Driver-assembled metadata rows and their schema, pickled whole
+    to the worker."""
 
-    def __init__(self, fields, rows):
-        self.fields = fields
+    def __init__(self, schema, rows):
+        self.schema = schema
         self.rows = rows
 
 
 class _MetaReader(DataSourceReader):
-    def __init__(self, fields, rows):
-        self._slice = _MetaSlice(fields, rows)
+    def __init__(self, schema, rows):
+        self._slice = _MetaSlice(schema, rows)
 
     def partitions(self):
         return [self._slice]
 
     def read(self, partition):
         import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        fields = partition.fields
+        fields = [
+            pa.field(f.name, to_arrow_type(f.dataType))
+            for f in partition.schema.fields
+        ]
         rows = partition.rows
         arrays = [
             pa.array([r[i] for r in rows], type=f.type)
@@ -1100,7 +904,7 @@ class SnapshotDataSource(DataSource):
     def schema(self):
         meta = self._meta()
         if meta is not None:
-            return meta[0]  # DDL string
+            return meta[0]
         version, ref = self._pinned()
         return _schema_of(self._root(), version, ref)
 
@@ -1163,7 +967,7 @@ class SnapshotDataSource(DataSource):
     def reader(self, schema):
         meta = self._meta()
         if meta is not None:
-            return _MetaReader(meta[1], meta[2])
+            return _MetaReader(*meta)
         version, ref = self._pinned()
         root = self._root()
         m = snap.read_manifest(root, version, ref)
@@ -1171,7 +975,7 @@ class SnapshotDataSource(DataSource):
             root,
             version,
             ref,
-            self._prune_opts(m.get("schema", {}).get("fields", [])),
+            self._prune_opts(m["schema"]["fields"]),
         )
 
     def writer(self, schema, overwrite):

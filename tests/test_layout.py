@@ -199,6 +199,48 @@ def test_fact_bucketed_join_no_shuffle(spark):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_bucketed_facts_reopen_without_rewrite(spark, tmp_path, monkeypatch):
+    """A session whose catalog lacks the bucketed tables (a new process)
+    registers the stored copies again instead of rewriting them, and
+    the registered tables still join with no exchange."""
+    import glob
+    import os
+
+    from metastore_spark import serve
+
+    monkeypatch.setattr(serve, "_WAREHOUSE", str(tmp_path / "wh"))
+    sf_dir = str(tmp_path / "corpus")
+    spark.range(0, 200).select(
+        F.col("id").alias("o_orderkey")
+    ).write.parquet(f"{sf_dir}/orders.parquet")
+    spark.range(0, 600).select(
+        (F.col("id") % 200).alias("l_orderkey")
+    ).write.parquet(f"{sf_dir}/lineitem.parquet")
+    specs = [("orders", "o_orderkey"), ("lineitem", "l_orderkey")]
+    tbls = layout.ensure_bucketed_facts(spark, sf_dir, specs, buckets=4)
+    done = glob.glob(str(tmp_path / "wh" / "bucketed" / "*" / "_DONE"))
+    assert len(done) == 2
+    stamps = {p: os.stat(p).st_mtime_ns for p in done}
+    for t in tbls.values():
+        spark.sql(f"DROP TABLE {t}")
+    assert layout.ensure_bucketed_facts(spark, sf_dir, specs, buckets=4) == tbls
+    assert {p: os.stat(p).st_mtime_ns for p in done} == stamps
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        o = spark.table(tbls["orders"])
+        li = spark.table(tbls["lineitem"])
+        joined = o.join(li, o.o_orderkey == li.l_orderkey)
+        plan = _explain_simple(joined)
+        assert "SortMergeJoin" in plan
+        assert "Exchange hashpartitioning" not in plan
+        assert joined.count() == 600
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        for t in tbls.values():
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_zorder_box_prunes_partitions(spark):
     """The Z-cell decomposition must reach the scan as PartitionFilters
     and the pruned scan must touch strictly fewer files than the store

@@ -147,36 +147,3 @@ def test_mor_then_compact_feed_emits_once(spark, tmp_path):
     snap.compact(spark, root, target_files=1)
     ch = snap.read_changes(spark, root, 0)
     assert _counts(ch) == {(1, "insert"): 100, (2, "delete"): 10}
-
-
-def _rewrite_as_legacy(root, version):
-    """Rewrite a committed manifest in the round-6 single-tier shape:
-    inline ``files``, no ``segments`` (what old tables on disk hold)."""
-    import json as _json
-
-    m = snap.read_manifest(root, version)
-    legacy = {k: v for k, v in m.items() if k != "segments"} | {
-        "files": snap.manifest_files(root, m)
-    }
-    with open(snap._manifest_path(root, version), "w") as fh:
-        _json.dump(legacy, fh)
-
-
-def test_change_feed_across_legacy_parent_boundary(spark, tmp_path):
-    """ADVICE r9 (medium): an append whose PARENT is a legacy
-    inline-files manifest must emit only its OWN rows as inserts —
-    the child's lazily-folded segment carries the parent's whole file
-    set under a fresh s-<uuid>, and a segment-name diff re-emitted
-    the parent's entire row set as inserts of the child commit.
-    read_appends already file-subset-filtered this boundary; the diff
-    now lives once in _append_delta so the feeds cannot drift."""
-    root = str(tmp_path / "t")
-    snap.commit_append(spark, root, _df(spark, 0, 30))
-    _rewrite_as_legacy(root, 1)
-    snap.commit_append(spark, root, _df(spark, 30, 40))
-    ch = snap.read_changes(spark, root, 1)
-    assert _counts(ch) == {(2, "insert"): 10}
-    assert {r["k"] for r in ch.select("k").collect()} == set(range(30, 40))
-    # and the full-window feed still replays to the live table
-    full = snap.read_changes(spark, root, 0)
-    assert _counts(full) == {(1, "insert"): 30, (2, "insert"): 10}

@@ -112,7 +112,7 @@ def test_concurrent_branch_writers_serialize(spark, tmp_path):
     snap.create_branch(root, "b")
     head = snap.current_version(root, "b")
     m = snap.read_manifest(root, head, "b")
-    segs = snap._parent_segments(root, m)
+    segs = list(m["segments"])
     snap._commit(root, head, "append", segs, None, "b")
     with pytest.raises(snap.ConcurrentCommit):
         snap._commit(root, head, "append", segs, None, "b")

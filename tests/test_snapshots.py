@@ -467,27 +467,6 @@ def test_vacuum_reclaims_crashed_commit_preserves_versions(spark, tmp_path):
     assert snap.read_snapshot(spark, root, 2).count() == 150
 
 
-def test_legacy_inline_files_manifest_still_reads(spark, tmp_path):
-    """Round-6 tables carry inline ``files`` commit files; the v2
-    reader resolves them and the first NEW commit lazily upgrades the
-    parent to a segment."""
-    root = str(tmp_path / "t")
-    snap.commit_append(spark, root, _df(spark, 0, 30))
-    # rewrite v1 as a legacy manifest (what round 6 wrote)
-    m = snap.read_manifest(root, 1)
-    legacy = {
-        k: v for k, v in m.items() if k != "segments"
-    } | {"files": snap.manifest_files(root, m)}
-    with open(snap._manifest_path(root, 1), "w") as fh:
-        import json as _json
-
-        _json.dump(legacy, fh)
-    assert snap.read_snapshot(spark, root, 1).count() == 30
-    v2 = snap.commit_append(spark, root, _df(spark, 30, 40))
-    assert snap.read_snapshot(spark, root, v2).count() == 40
-    assert "segments" in snap.read_manifest(root, v2)
-
-
 def test_pinned_reader_isolated_from_concurrent_writer(spark, tmp_path):
     """VERDICT r6 task 1 (pytest leg): a reader pinned to version 1
     keeps reproducing ITS row set while a concurrent writer thread
@@ -649,7 +628,7 @@ def _race_worker(args):
         def attempt(seg=seg):
             parent = s.current_version(root)
             prev = (
-                s._parent_segments(root, s.read_manifest(root, parent))
+                s.read_manifest(root, parent)["segments"]
                 if parent
                 else []
             )
@@ -680,62 +659,6 @@ def test_commit_race_across_processes(tmp_path):
     files = set(snap.manifest_files(root, head))
     expect = {f"data/w{w}-{i}.parquet" for w in range(4) for i in range(5)}
     assert files == expect  # nothing lost, nothing duplicated
-
-
-def _rewrite_as_legacy(root, version):
-    """Rewrite a committed manifest in the round-6 single-tier shape:
-    inline ``files``, no ``segments`` (what old tables on disk hold)."""
-    import json as _json
-
-    m = snap.read_manifest(root, version)
-    legacy = {k: v for k, v in m.items() if k != "segments"} | {
-        "files": snap.manifest_files(root, m)
-    }
-    with open(snap._manifest_path(root, version), "w") as fh:
-        _json.dump(legacy, fh)
-
-
-def test_compact_legacy_inline_table_does_not_double_rows(spark, tmp_path):
-    """ADVICE r7 (high): compacting a legacy inline-files table must
-    not commit the lazily-folded parent segment ALONGSIDE the rewrite
-    — `_parent_segments` mints a fresh s-<uuid> per call for legacy
-    manifests, so a segment-NAME diff saw the whole table as
-    'concurrently added' and doubled every row."""
-    root = str(tmp_path / "t")
-    snap.commit_append(spark, root, _df(spark, 0, 50).repartition(4))
-    _rewrite_as_legacy(root, 1)
-    v2 = snap.compact(spark, root, target_files=1)
-    assert snap.read_snapshot(spark, root, v2).count() == 50
-    # and the folded head keeps compacting stably
-    v3 = snap.compact(spark, root, target_files=1)
-    assert snap.read_snapshot(spark, root, v3).count() == 50
-
-
-def test_read_appends_across_legacy_parent_boundary(spark, tmp_path):
-    """ADVICE r7 (medium): an append whose PARENT is a legacy
-    inline-files manifest must report only its own rows — the parent's
-    lazily-folded segment is not a new append even though its name is
-    absent from the parent manifest."""
-    root = str(tmp_path / "t")
-    snap.commit_append(spark, root, _df(spark, 0, 30))
-    _rewrite_as_legacy(root, 1)
-    snap.commit_append(spark, root, _df(spark, 30, 40))
-    got = snap.read_appends(spark, root, 1, 2)
-    assert got.count() == 10
-    assert got.agg(F.min("k"), F.max("k")).first() == (30, 39)
-
-
-def test_read_appends_legacy_append_commit(spark, tmp_path):
-    """A legacy append COMMIT itself (inline files, no segments)
-    contributes exactly the files it added over its parent."""
-    root = str(tmp_path / "t")
-    snap.commit_append(spark, root, _df(spark, 0, 30))
-    snap.commit_append(spark, root, _df(spark, 30, 45))
-    _rewrite_as_legacy(root, 1)
-    _rewrite_as_legacy(root, 2)
-    got = snap.read_appends(spark, root, 1, 2)
-    assert got.count() == 15
-    assert got.agg(F.min("k"), F.max("k")).first() == (30, 44)
 
 
 def test_segment_commit_loop_inherits_concurrent_stats_cols(
@@ -1278,20 +1201,6 @@ def test_refresh_from_snapshot_merge_window_advances_checkpoint(
     assert man["segments"] == segs_before  # nothing minted
     assert man["snapshot_version"] == 2
     assert load_segmented(spark, store).num_docs == n_before
-
-
-def test_table_history_reads_legacy_manifests(spark, tmp_path):
-    """A round-6 inline-files manifest still renders in the history
-    (0 segments, correct file count) — the observability surface must
-    not choke on pre-two-tier tables."""
-    root = str(tmp_path / "t")
-    snap.commit_append(spark, root, _df(spark, 0, 30))
-    _rewrite_as_legacy(root, 1)
-    snap.commit_append(spark, root, _df(spark, 30, 40))
-    h = {r["version"]: r for r in snap.table_history(spark, root).collect()}
-    assert h[1]["op"] == "append" and h[1]["n_segments"] == 0
-    assert h[1]["n_files"] >= 1
-    assert h[2]["n_files"] >= h[1]["n_files"]
 
 
 def test_vacuum_reclaims_crashed_merge_scratch(spark, tmp_path, monkeypatch):

@@ -132,19 +132,3 @@ def test_timestamp_resolves_on_branch_chain(spark, tmp_path):
         ).count()
         == 60
     )
-
-
-def test_pre_second_granularity_manifests_still_resolve(
-    spark, tmp_path
-):
-    """Manifests written before ts_us existed fall back to their
-    whole-second ts in the same total order."""
-    root = _three_version_table(spark, tmp_path)
-    p = snap._manifest_path(root, 2)
-    with open(p) as fh:
-        m = json.load(fh)
-    del m["ts_us"]
-    with open(p, "w") as fh:
-        json.dump(m, fh)
-    assert snap.timestamp_version(root, 200) == 2
-    assert snap.timestamp_version(root, 250) == 2
