@@ -1,5 +1,5 @@
 """Physical table layout for 100 TB: partitioning, bucketing,
-incremental maintenance.
+clustering, in-place maintenance.
 
 These writers encode the layout decisions every query in this engine
 assumes:
@@ -8,16 +8,8 @@ assumes:
   partition pruning (scan touches only matching days); the append
   pattern (one new partition per ingest window) never rewrites
   history.
-- **postings → bucketed by term.** Query-time term lookups prune to
-  the term's bucket; two tables bucketed the same way join without a
-  shuffle (index refresh merges old+new postings shuffle-free).
-- **documents → fingerprint-prefix partitions.** Exact dedup becomes
-  partition-local (identical content always lands in the same
-  partition), so the dedup groupBy never crosses partitions.
-- **incremental index refresh**: new event/doc files are drained with
-  availableNow (streaming, bounded) and appended as new index
-  partitions — the ES "analyze at ingest" pattern, restated as a
-  Spark job you can run per window.
+- **facts → bucketed by join key.** Two facts bucketed the same way
+  join without a shuffle on either side.
 """
 
 from __future__ import annotations
@@ -26,8 +18,6 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from metastore_spark.search.analysis import analyze_udf
 
 
 def write_events_by_day(df: DataFrame, path: str, ts_col: str = "ts") -> None:
@@ -84,23 +74,6 @@ def read_events_day_range(
     Spark prunes directories before reading a single row group."""
     return spark.read.parquet(path).filter(
         (F.col("event_date") >= start) & (F.col("event_date") <= end)
-    )
-
-
-def write_postings_bucketed(
-    postings: DataFrame, table: str, buckets: int = 64
-) -> None:
-    """postings → bucketed+sorted managed table, keyed by term.
-
-    Both sides of any postings⋈postings or postings⋈docfreq join that
-    is bucketed identically co-locate without an exchange.
-    """
-    (
-        postings.write.mode("overwrite")
-        .bucketBy(buckets, "term")
-        .sortBy("term")
-        .format("parquet")
-        .saveAsTable(table)
     )
 
 
@@ -167,69 +140,6 @@ def ensure_bucketed_facts(
             )
         out[name] = tbl
     return out
-
-
-def write_documents_by_fp_prefix(
-    df: DataFrame, path: str, text_col: str = "text", prefix_len: int = 1
-) -> None:
-    """documents → partitioned by fingerprint hex prefix (16^prefix_len
-    dirs): content-identical rows always co-locate, so exact dedup is
-    partition-local."""
-    from metastore_spark.text.ops import fingerprint
-
-    (
-        df.withColumn("fp_prefix", F.substring(fingerprint(F.col(text_col)), 1, prefix_len))
-        .repartition("fp_prefix")
-        .write.mode("overwrite")
-        .partitionBy("fp_prefix")
-        .parquet(path)
-    )
-
-
-def refresh_postings_increment(
-    spark: SparkSession,
-    new_docs_dir: str,
-    schema,
-    out_path: str,
-    id_col: str,
-    text_col: str,
-    checkpoint: str,
-) -> None:
-    """Incremental index maintenance: drain newly-arrived document
-    files (availableNow), analyze them (Arrow-batched stemmer), and
-    append their postings as a new increment, in the SAME
-    (term, doc_id, field, tf) shape the full index build writes so
-    consumers can union increments with the base postings. docfreq and
-    avgdl must be re-aggregated after a refresh (both are associative
-    over postings/doclen — a groupBy away); this function maintains
-    postings only.
-    """
-    stream = spark.readStream.schema(schema).format("parquet").load(new_docs_dir)
-
-    def build_increment(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch: the micro-batch is a plain DataFrame, so the
-        # postings aggregation runs with batch semantics (no watermark
-        # needed) and appends one increment per drained batch.
-        toks = batch_df.select(
-            F.col(id_col).alias("doc_id"),
-            analyze_udf(F.col(text_col).cast("string")).alias("toks"),
-        )
-        postings = (
-            toks.select("doc_id", F.explode("toks").alias("term"))
-            .groupBy("term", "doc_id")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("field", F.lit(text_col))
-            .select("term", "doc_id", "field", "tf")
-        )
-        postings.write.mode("append").parquet(out_path)
-
-    q = (
-        stream.writeStream.foreachBatch(build_increment)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def zorder_value(a: Column, b: Column, bits: int = 16) -> Column:

@@ -15,9 +15,8 @@ from pyspark.sql import functions as F
 
 from metastore_spark.queries import query, _t
 from metastore_spark.search.analysis import ENGLISH_STOPWORDS
-from metastore_spark.search.index import build_index
+from metastore_spark.search.refresh import _write_segment, load_segments
 from metastore_spark.search.scoring import bm25_scores
-from metastore_spark.search.serve import load_index, materialize_index
 from metastore_spark.serve import build_once
 
 _Q = "spark join stream"
@@ -36,25 +35,26 @@ _INDEX_CACHE_MAX = 8
 
 def _index_for(spark: SparkSession, sf_dir: str, stem: bool = False):
     """Serving-path index over the documents table: a build-once store
-    (`serve.build_once`, one per corpus content and analysis tier), so
-    every later call in any session or process reopens the bucketed
-    tables instead of re-analyzing the corpus — the analyze-at-ingest
-    trade ES makes (SCALE.md 'Full-text search'). A query touches only
-    term-pruned postings + two vocabulary-sized side tables."""
+    (`serve.build_once`, one per corpus content and analysis tier) that
+    is itself ONE index segment (`search/refresh.py`), so every later
+    call in any session or process reopens the segment's tables instead
+    of re-analyzing the corpus — the analyze-at-ingest trade ES makes
+    (SCALE.md 'Full-text search'). A query touches only term-pruned
+    postings + the docfreq and doclen side tables."""
     path = build_once(
         "serving_index",
-        "documents-stem" if stem else "documents",
+        "docs-segment-stem" if stem else "docs-segment",
         [os.path.join(sf_dir, "documents.parquet")],
-        lambda tmp: materialize_index(
+        lambda tmp: _write_segment(
             spark, _t(spark, sf_dir, "documents"), "doc_id", ["text"], tmp,
-            stem=stem,
+            stem,
         ),
     )
     if path is None:
         raise OSError("search index: the warehouse is not writable")
     key = (spark.sparkContext.applicationId, path)
     if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = load_index(spark, path)
+        _INDEX_CACHE[key] = load_segments(spark, [path])
         while len(_INDEX_CACHE) > _INDEX_CACHE_MAX:
             _INDEX_CACHE.popitem(last=False)  # evict least-recently-used
     _INDEX_CACHE.move_to_end(key)
@@ -342,14 +342,14 @@ def search_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm25_scores form this replaces scanned postings and attached the
     O(docs) doclen table once PER PANEL QUERY — three corpus-sized
     passes fused to one (the panel only grows the fused pass by the
-    extra terms' postings). Score arithmetic is expression-for-
-    expression the bm25_scores formula (boost 1.0 multiplies exactly,
-    per-term query multiplicity via the panel map)."""
+    extra terms' postings). Each posting is weighted by bm25_scores's
+    own `bm25_weight` (boost 1.0 multiplies exactly, per-term query
+    multiplicity via the panel map)."""
     import math
 
     from pyspark.sql import Window
 
-    from metastore_spark.search.scoring import B, K1
+    from metastore_spark.search.scoring import bm25_weight
 
     idx = _index_for(spark, sf_dir)
     d = _t(spark, sf_dir, "documents")
@@ -380,8 +380,6 @@ def search_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         panel_rows, "term string, qid int, mult double"
     )
     all_terms = sorted({t for t, _, _ in panel_rows})
-    n = float(idx.num_docs)
-    avgdl = float(idx.avgdl["text"])
     matched = (
         idx.postings.filter(
             F.col("term").isin(all_terms) & (F.col("field") == "text")
@@ -390,17 +388,10 @@ def search_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(idx.doclen, ["doc_id", "field"])
         .join(F.broadcast(panel), "term")
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(n) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    norm = F.lit(K1) * (
-        F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl)
-    )
-    tf_part = (F.col("tf") * F.lit(K1 + 1.0)) / (F.col("tf") + norm)
+    weight = bm25_weight(idx.num_docs, F.lit(float(idx.avgdl["text"])))
     scored = (
         matched.select(
-            "qid", "doc_id", (idf * tf_part * F.col("mult")).alias("contrib")
+            "qid", "doc_id", (weight * F.col("mult")).alias("contrib")
         )
         .groupBy("qid", "doc_id")
         .agg(F.sum("contrib").alias("score"))

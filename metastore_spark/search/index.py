@@ -13,8 +13,8 @@ same three structures ES maintains, as plain DataFrames:
 - ``doclen``  : (doc_id, field, dl) + per-field avgdl — BM25's length
   normalization.
 
-Scale design: postings are hash-partitioned by term (the query-time
-access path is a semi-join on a handful of terms); docfreq is tiny
+Scale design: the query-time access path to postings is a semi-join
+on a handful of terms; docfreq is tiny
 (vocabulary-sized) and broadcast at query time; the index build is
 one explode + two aggregations per field — partial-agg friendly,
 no row ever leaves the JVM except through the Arrow-batched stemmer.
@@ -38,7 +38,6 @@ class SearchIndex:
     doclen: DataFrame    # doc_id, field, dl
     avgdl: dict[str, float]
     num_docs: int
-    docs: DataFrame      # original rows, keyed by doc_id
 
     def unpersist(self) -> None:
         """Release this index's cached blocks (call when replacing an
@@ -56,7 +55,6 @@ def build_index(
     id_col: str,
     fields: list[str],
     stem: bool = True,
-    num_partitions: int | None = None,
 ) -> SearchIndex:
     """Analyze ``fields`` of ``df`` and build the inverted index.
 
@@ -89,10 +87,8 @@ def build_index(
     postings = (
         flat.groupBy("term", "doc_id", "field")
         .agg(F.count(F.lit(1)).alias("tf"))
+        .persist()
     )
-    if num_partitions:
-        postings = postings.repartition(num_partitions, "term")
-    postings = postings.persist()
 
     # (term, doc_id, field) is unique in postings → df is a plain count.
     docfreq = (
@@ -116,5 +112,4 @@ def build_index(
         doclen=doclen,
         avgdl=avgdl,
         num_docs=num_docs,
-        docs=df,
     )

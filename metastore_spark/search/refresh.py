@@ -1,28 +1,32 @@
-"""Incremental search-index refresh: a segmented postings store for
-streaming corpora (VERDICT r5 task 6).
+"""The on-disk search index: a store of self-contained segments.
 
-`search/serve.py` materializes the index once per corpus — right for
-a static snapshot, wrong for the reference's append-only ``events``
-kind (/root/reference/metastore/models.py:82-85), where per-refresh
-full rebuilds would re-analyze the whole corpus every drain. This
-module is the ingest side, mirroring streaming/ivf.py's store:
+This module is the only writer and reader of the persisted index. A
+segment directory holds ``postings/`` (term, doc_id, field, tf),
+``doclen/`` (doc_id, field, dl), ``docfreq/`` (term, field, df) and
+``stats.json`` (``num_docs`` and per-field ``[dl_sum, count]``). Two
+stores use it:
 
-- every micro-batch of NEW documents becomes a self-contained SEGMENT
-  directory (postings + doclen + per-segment docfreq + per-segment
-  length/count stats) — analysis cost is O(batch), never O(corpus);
-- an atomic ``_MANIFEST.json`` (tmp+rename) lists the live segments;
-  readers resolve through it, so a crashed refresh leaves the old
-  manifest serving the old segment set;
-- BM25's corpus-GLOBAL statistics are derived at load time by
-  merging per-segment partials: doc sets of segments are disjoint, so
-  ``df`` sums exactly, ``num_docs`` sums, and ``avgdl`` is
-  total_dl / total_rows — a vocabulary-sized aggregate, not a corpus
-  re-analysis. This is exactly how Lucene merges per-segment stats
-  under one IndexReader;
-- ``compact_segments`` folds the accumulated tail into one segment
-  (a postings-table rewrite, no re-analysis) with the same
-  manifest-swap + idempotent-retire discipline as
-  streaming/ivf.compact_index — the small-files maintenance job.
+- the served index over a static corpus (`queries_search._index_for`)
+  is ONE segment, written by `_write_segment` inside a build-once
+  store (`serve.build_once`) and opened by `load_segments`;
+- the refreshed index over an append-only corpus (the reference's
+  ``events`` kind, metastore/models.py:82-85) is a directory of
+  segments listed by an atomic ``_MANIFEST.json``:
+
+  - every micro-batch of NEW documents becomes a segment, so analysis
+    cost is O(batch), never O(corpus);
+  - the manifest is swapped by tmp+rename, so a crashed refresh
+    leaves the old manifest serving the old segment set;
+  - BM25's corpus-GLOBAL statistics are merged at load time from the
+    per-segment partials: doc sets of segments are disjoint, so
+    ``df`` sums exactly, ``num_docs`` sums, and ``avgdl`` is
+    total_dl / total_rows. A vocabulary-sized aggregate, not a corpus
+    re-analysis; this is how Lucene merges per-segment stats under
+    one IndexReader;
+  - ``compact_segments`` folds the accumulated tail into one segment
+    (a postings-table rewrite, no re-analysis) with the same
+    manifest-swap + idempotent-retire discipline as
+    streaming/ivf.compact_index.
 
 The merged index is EQUAL to a cold full rebuild (hash-pinned by the
 ``search_stream_index_refresh`` registry query): same postings rows,
@@ -115,10 +119,10 @@ def refresh_segment(
     hook: ``lambda b, bid: refresh_segment(spark, b, path, ...,
     segment_name=str(bid))``.
 
-    Segment growth is BOUNDED (VERDICT r6 task 4): when the publish
-    leaves more than ``max_segments`` live segments, the refresh
-    auto-folds them via `compact_segments` — so `load_segmented`'s
-    plan size and per-segment stats opens stay O(max_segments) no
+    Segment growth is BOUNDED: when the publish leaves more than
+    ``max_segments`` live segments, the refresh auto-folds them via
+    `compact_segments` — so `load_segmented`'s plan size and
+    per-segment stats opens stay O(max_segments) no
     matter how long the ingest runs, the same invariant
     streaming/ivf.py keeps for batch dirs. Pass ``max_segments=0`` to
     disable.
@@ -136,8 +140,8 @@ def refresh_segment(
     that lists the segment — the publish and any caller checkpoint
     (refresh_from_snapshot's ``snapshot_version``) become one atomic
     rename, so no crash can separate "segment visible" from
-    "checkpoint advanced" (ADVICE r8: a commit landing inside that
-    gap made the replay re-index the window under a new name). The
+    "checkpoint advanced" (a commit landing inside that gap would make
+    the replay re-index the window under a new name). The
     folded-replay branch also applies the extra: the batch's rows are
     already indexed, so the checkpoint must still advance.
 
@@ -183,11 +187,9 @@ def refresh_from_snapshot(
     id_col: str,
     fields: list[str],
     stem: bool = True,
-    max_segments: int = 8,
 ) -> int:
-    """Index maintenance CHECKPOINTED BY SNAPSHOT VERSION (VERDICT r7
-    task 6 — the two round-7 systems composed): instead of draining
-    its own stream, the segmented refresh consumes the snapshot
+    """Index maintenance CHECKPOINTED BY SNAPSHOT VERSION: instead of
+    draining its own stream, the segmented refresh consumes the snapshot
     table's append feed. The index manifest records the last indexed
     snapshot version; each call reads `snapshots.read_appends(root,
     since, head)` — exactly the rows appended in the window, O(delta
@@ -195,8 +197,8 @@ def refresh_from_snapshot(
     nothing) — lands them as ONE segment named by the version window,
     and advances the checkpoint. Returns the indexed head version.
 
-    Crash contract (hardened per ADVICE r8): the segment publish and
-    the checkpoint stamp are ONE manifest write (refresh_segment's
+    Crash contract: the segment publish and the checkpoint stamp
+    are ONE manifest write (refresh_segment's
     ``manifest_extra``), so no crash can leave a published-but-
     unstamped window for a later snapshot commit to widen — the race
     where the replay re-indexed the old window under a new name
@@ -246,7 +248,6 @@ def refresh_from_snapshot(
         fields,
         stem=stem,
         segment_name=f"snap-{since + 1}-{head}",
-        max_segments=max_segments,
         # stamped in the SAME manifest write that lists the segment —
         # publish and checkpoint advance are atomic (see docstring)
         manifest_extra={"snapshot_version": head},
@@ -254,33 +255,24 @@ def refresh_from_snapshot(
     return head
 
 
-def load_segmented(
-    spark: SparkSession, path: str, docs: DataFrame | None = None
-) -> SearchIndex:
-    """Open the segment store as ONE SearchIndex: postings/doclen are
-    the (disjoint) segment union; docfreq is the exact per-term sum of
-    segment partials; num_docs/avgdl recombine from the per-segment
-    sums. The merge work is vocabulary-sized — query-time term
-    predicates still push down into every segment's postings scan."""
-    man = _read_manifest(path)
-    if man is None or not man["segments"]:
-        raise FileNotFoundError(f"no segment manifest under {path}")
-    segs = [os.path.join(path, s) for s in man["segments"]]
+def _merge(spark: SparkSession, seg_dirs: list[str]):
+    """The segments' postings, doclen, docfreq and stats as ONE
+    segment's: postings/doclen are the (disjoint) union, docfreq is
+    the exact per-term sum of segment partials and the stats sum. One
+    segment's tables are read as written: its df is already exact."""
 
-    def _union(sub: str) -> DataFrame:
+    def read(sub: str) -> DataFrame:
         return reduce(
             DataFrame.unionByName,
-            [spark.read.parquet(os.path.join(s, sub)) for s in segs],
+            [spark.read.parquet(os.path.join(s, sub)) for s in seg_dirs],
         )
 
-    postings = _union("postings")
-    doclen = _union("doclen")
-    docfreq = (
-        _union("docfreq").groupBy("term", "field").agg(F.sum("df").alias("df"))
-    )
+    docfreq = read("docfreq")
+    if len(seg_dirs) > 1:
+        docfreq = docfreq.groupBy("term", "field").agg(F.sum("df").alias("df"))
     num_docs = 0
     dl: dict[str, list[float]] = {}
-    for s in segs:
+    for s in seg_dirs:
         with open(os.path.join(s, "stats.json")) as fh:
             st = json.load(fh)
         num_docs += int(st["num_docs"])
@@ -288,15 +280,31 @@ def load_segmented(
             agg = dl.setdefault(field, [0.0, 0])
             agg[0] += ssum
             agg[1] += cnt
-    avgdl = {f: (s / c if c else 0.0) for f, (s, c) in dl.items()}
+    stats = {"num_docs": num_docs, "dl_sums": dl}
+    return read("postings"), read("doclen"), docfreq, stats
+
+
+def load_segments(spark: SparkSession, seg_dirs: list[str]) -> SearchIndex:
+    """Open segment directories as ONE SearchIndex; num_docs/avgdl
+    recombine from the per-segment sums. The merge work is
+    vocabulary-sized, and query-time term predicates still push down
+    into every segment's postings scan."""
+    postings, doclen, docfreq, stats = _merge(spark, seg_dirs)
     return SearchIndex(
         postings=postings,
         docfreq=docfreq,
         doclen=doclen,
-        avgdl=avgdl,
-        num_docs=num_docs,
-        docs=docs,
+        avgdl={f: (s / c if c else 0.0) for f, (s, c) in stats["dl_sums"].items()},
+        num_docs=stats["num_docs"],
     )
+
+
+def load_segmented(spark: SparkSession, path: str) -> SearchIndex:
+    """Open the segment store at ``path`` through its manifest."""
+    man = _read_manifest(path)
+    if man is None or not man["segments"]:
+        raise FileNotFoundError(f"no segment manifest under {path}")
+    return load_segments(spark, [os.path.join(path, s) for s in man["segments"]])
 
 
 def compact_segments(spark: SparkSession, path: str) -> None:
@@ -314,39 +322,17 @@ def compact_segments(spark: SparkSession, path: str) -> None:
     dest = os.path.join(path, name)
     tmp = f"{dest}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     segs = [os.path.join(path, s) for s in folded]
-
-    def _union(sub: str) -> DataFrame:
-        return reduce(
-            DataFrame.unionByName,
-            [spark.read.parquet(os.path.join(s, sub)) for s in segs],
-        )
-
-    _union("postings").repartition("term").write.parquet(
-        os.path.join(tmp, "postings")
-    )
+    postings, doclen, docfreq, stats = _merge(spark, segs)
+    postings.repartition("term").write.parquet(os.path.join(tmp, "postings"))
     # doclen is O(corpus docs) and docfreq is vocabulary-sized — a
     # coalesce(1) here would funnel both through ONE task/file at
     # compaction time (the 100 TB serialization point); shuffle them
     # on their natural keys like postings, readers handle multi-file
     # segment dirs already (the stream refresh writes them that way).
-    _union("doclen").repartition("doc_id").write.parquet(
-        os.path.join(tmp, "doclen")
-    )
-    _union("docfreq").groupBy("term", "field").agg(
-        F.sum("df").alias("df")
-    ).repartition("term").write.parquet(os.path.join(tmp, "docfreq"))
-    num_docs = 0
-    dl: dict[str, list[float]] = {}
-    for s in segs:
-        with open(os.path.join(s, "stats.json")) as fh:
-            st = json.load(fh)
-        num_docs += int(st["num_docs"])
-        for field, (ssum, cnt) in st["dl_sums"].items():
-            agg = dl.setdefault(field, [0.0, 0])
-            agg[0] += ssum
-            agg[1] += cnt
+    doclen.repartition("doc_id").write.parquet(os.path.join(tmp, "doclen"))
+    docfreq.repartition("term").write.parquet(os.path.join(tmp, "docfreq"))
     with open(os.path.join(tmp, "stats.json"), "w") as fh:
-        json.dump({"num_docs": num_docs, "dl_sums": dl}, fh)
+        json.dump(stats, fh)
     os.rename(tmp, dest)
     # carry every foreign manifest key (e.g. refresh_from_snapshot's
     # snapshot_version checkpoint) — a fold must never reset another

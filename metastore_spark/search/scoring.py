@@ -20,7 +20,7 @@ of anything corpus-sized.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from metastore_spark.search.analysis import analyze
@@ -28,6 +28,19 @@ from metastore_spark.search.index import SearchIndex
 
 K1 = 1.2
 B = 0.75
+
+
+def bm25_weight(num_docs: int, avgdl: Column) -> Column:
+    """One posting's BM25 weight, idf x saturated tf, over a postings
+    row joined with its docfreq (``df``) and doclen (``dl``)."""
+    n = float(num_docs)
+    idf = F.log(
+        F.lit(1.0)
+        + (F.lit(n) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    )
+    norm = F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / avgdl)
+    tf_part = (F.col("tf") * F.lit(K1 + 1.0)) / (F.col("tf") + norm)
+    return idf * tf_part
 
 
 def bm25_scores(
@@ -56,8 +69,6 @@ def bm25_scores(
             for x in (F.lit(f), F.lit(float(a)))
         ]
     )
-    n = float(index.num_docs)
-
     matched = (
         index.postings.filter(
             F.col("term").isin(list(set(terms)))
@@ -66,15 +77,6 @@ def bm25_scores(
         .join(F.broadcast(index.docfreq), ["term", "field"])
         .join(index.doclen, ["doc_id", "field"])
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(n) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    norm = F.lit(K1) * (
-        F.lit(1.0 - B)
-        + F.lit(B) * F.col("dl") / avgdl_expr[F.col("field")]
-    )
-    tf_part = (F.col("tf") * F.lit(K1 + 1.0)) / (F.col("tf") + norm)
     # repeated query terms multiply their contribution (ES sums each
     # occurrence of the term in the query — pinned by the TF ranking
     # test, tests/test_controllers.py:527-552)
@@ -83,7 +85,9 @@ def bm25_scores(
         *[x for t, m in term_mult.items() for x in (F.lit(t), F.lit(float(m)))]
     )
     contrib = (
-        idf * tf_part * boost_expr[F.col("field")] * mult_expr[F.col("term")]
+        bm25_weight(index.num_docs, avgdl_expr[F.col("field")])
+        * boost_expr[F.col("field")]
+        * mult_expr[F.col("term")]
     )
     return (
         matched.select("doc_id", contrib.alias("contrib"))

@@ -1,6 +1,5 @@
 """Physical layout tests: partition pruning must show in the plan;
-bucketed joins must not exchange; incremental refresh must equal a
-full rebuild.
+bucketed joins must not exchange.
 """
 
 import io
@@ -10,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from metastore_spark import layout
-from metastore_spark.search.analysis import analyze
 
 
 def _explain(df) -> str:
@@ -44,65 +42,6 @@ def test_events_partition_pruning(spark, tmp_path):
         for r in scan.select("event_date").distinct().collect()
     }
     assert got_days == {"2024-01-05", "2024-01-06"}
-
-
-def test_postings_bucketed_join_no_shuffle(spark, tmp_path):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    toks = docs.select(
-        F.col("doc_id"),
-        F.explode(F.array_remove(F.split(F.lower("text"), "[^a-z0-9]+"), "")).alias(
-            "term"
-        ),
-    )
-    postings = toks.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-    layout.write_postings_bucketed(postings, "postings_a", buckets=8)
-    layout.write_postings_bucketed(
-        postings.withColumnRenamed("tf", "tf2"), "postings_b", buckets=8
-    )
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the shuffle-join path: on small inputs the planner
-        # prefers broadcast (which ignores bucketing); at real postings
-        # scale broadcast is off the table and bucketing is what saves
-        # the exchange.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("postings_a").join(spark.table("postings_b"), "term")
-        plan = _explain_simple(joined)
-        assert "SortMergeJoin" in plan
-        # identical bucketing on both sides → no shuffle exchange
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS postings_a")
-        spark.sql("DROP TABLE IF EXISTS postings_b")
-
-
-def test_incremental_refresh_equals_full_build(spark, tmp_path):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    src = str(tmp_path / "incoming")
-    docs.limit(50).repartition(2).write.mode("overwrite").parquet(src)
-
-    out = str(tmp_path / "postings_inc")
-    layout.refresh_postings_increment(
-        spark, src, docs.schema, out, "doc_id", "text",
-        checkpoint=str(tmp_path / "ckpt"),
-    )
-    inc = spark.read.parquet(out)
-
-    subset = spark.read.parquet(src)
-    rows = subset.select("doc_id", "text").collect()
-    want = {}
-    for r in rows:
-        for t in analyze(r["text"]):
-            key = (t, r["doc_id"])
-            want[key] = want.get(key, 0) + 1
-    got = {
-        (r["term"], r["doc_id"]): r["tf"]
-        for r in inc.collect()
-    }
-    assert got == want
 
 
 def test_events_partitioned_probe_and_pruned_query(spark, tmp_path, monkeypatch):

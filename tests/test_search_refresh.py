@@ -1,7 +1,7 @@
-"""Segmented incremental search-index refresh (search/refresh.py):
-merged global statistics must equal a cold rebuild, replay must be
-idempotent, and the compaction manifest swap must keep reads
-consistent through its crash window."""
+"""The search-index segment store (search/refresh.py): one segment and
+merged segments must equal a cold rebuild, replay must be idempotent,
+and the compaction manifest swap must keep reads consistent through
+its crash window."""
 
 import os
 
@@ -30,37 +30,47 @@ def _docs_df(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def _scores(spark, idx):
+def _scores(spark, idx, stem=False):
     return sorted(
         (int(r["doc_id"]), round(float(r["score"]), 6))
         for r in bm25_scores(
-            idx, "spark streams", {"text": 1.0}, stem=False
+            idx, "spark streams", {"text": 1.0}, stem=stem
         ).collect()
     )
 
 
-def test_refreshed_equals_cold_rebuild(spark, tmp_path):
-    store = str(tmp_path / "seg")
+def _two_segments(spark, store, stem=False):
     refresh_segment(
         spark, _docs_df(spark, _DOCS[:3]), store, "doc_id", ["text"],
-        stem=False, segment_name="base",
+        stem=stem, segment_name="base",
     )
     refresh_segment(
         spark, _docs_df(spark, _DOCS[3:]), store, "doc_id", ["text"],
-        stem=False, segment_name="0",
+        stem=stem, segment_name="0",
     )
-    merged = load_segmented(spark, store)
-    cold = build_index(_docs_df(spark, _DOCS), "doc_id", ["text"], stem=False)
 
-    assert merged.num_docs == cold.num_docs == 6
-    assert abs(merged.avgdl["text"] - cold.avgdl["text"]) < 1e-9
-    m_df = sorted(
-        (r["term"], int(r["df"])) for r in merged.docfreq.collect()
-    )
-    c_df = sorted((r["term"], int(r["df"])) for r in cold.docfreq.collect())
-    assert m_df == c_df
-    assert _scores(spark, merged) == _scores(spark, cold)
-    cold.unpersist()
+
+def test_refreshed_equals_cold_rebuild(spark, tmp_path):
+    """Inputs: two refreshed segments, and the same with stemmed
+    analysis of each increment."""
+    for stem in (False, True):
+        _two_segments(spark, str(tmp_path / f"seg-{stem}"), stem=stem)
+    cases = [
+        (False, load_segmented(spark, str(tmp_path / "seg-False"))),
+        (True, load_segmented(spark, str(tmp_path / "seg-True"))),
+    ]
+    for stem, merged in cases:
+        cold = build_index(_docs_df(spark, _DOCS), "doc_id", ["text"], stem=stem)
+        assert merged.num_docs == cold.num_docs == 6
+        assert merged.avgdl["text"] == cold.avgdl["text"]
+        for table in ("postings", "docfreq", "doclen"):
+            got, want = (
+                sorted(map(tuple, getattr(i, table).collect()))
+                for i in (merged, cold)
+            )
+            assert got == want, (stem, table)
+        assert _scores(spark, merged, stem) == _scores(spark, cold, stem)
+        cold.unpersist()
 
 
 def test_replayed_batch_does_not_double_count(spark, tmp_path):
@@ -144,20 +154,18 @@ def test_term_filter_prunes_each_segment_scan(spark, tmp_path):
     """Query-time term predicates must push into every segment's
     postings parquet scan — the access path the store exists for."""
     store = str(tmp_path / "seg")
-    refresh_segment(
-        spark, _docs_df(spark, _DOCS[:3]), store, "doc_id", ["text"],
-        stem=False, segment_name="base",
-    )
-    refresh_segment(
-        spark, _docs_df(spark, _DOCS[3:]), store, "doc_id", ["text"],
-        stem=False, segment_name="0",
-    )
+    _two_segments(spark, store)
     idx = load_segmented(spark, store)
     plan = (
         idx.postings.filter(F.col("term") == "spark")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("PushedFilters: [IsNotNull(term), EqualTo(term,spark)]") == 2
+    plan = (
+        idx.postings.filter(F.col("term").isin(["spark", "join"]))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("In(term, [join,spark])") == 2
 
 
 def test_auto_fold_bounds_segments_scores_equal_cold(spark, tmp_path):

@@ -1,23 +1,30 @@
-"""Persisted-index serving path + k-means IVF tests."""
+"""Served search index (one index segment in a build-once store) +
+k-means IVF tests."""
 
 import math
+from collections import OrderedDict
 
-import pytest
 from pyspark.sql import functions as F
 
 from metastore_spark import similarity as sim
 from metastore_spark.search.index import build_index
+from metastore_spark.search.refresh import _write_segment, load_segments
 from metastore_spark.search.scoring import bm25_scores
-from metastore_spark.search.serve import load_index, materialize_index
+
+
+def _served(spark, docs, path):
+    """The served index's shape (`queries_search._index_for`): one
+    segment written straight into its directory, no manifest."""
+    _write_segment(spark, docs, "doc_id", ["text"], path, False)
+    return load_segments(spark, [path])
 
 
 def test_persisted_index_equals_in_memory(spark, tmp_path):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = str(tmp_path / "idx")
-    materialize_index(spark, docs, "doc_id", ["text"], path, stem=False)
-
+    disk_idx = _served(spark, docs, str(tmp_path / "idx"))
     mem_idx = build_index(docs, "doc_id", ["text"], stem=False)
-    disk_idx = load_index(spark, path)
+    assert disk_idx.num_docs == mem_idx.num_docs
+    assert disk_idx.avgdl["text"] == mem_idx.avgdl["text"]
     q = "spark join stream"
     mem = {
         r["doc_id"]: round(r["score"], 6)
@@ -29,22 +36,18 @@ def test_persisted_index_equals_in_memory(spark, tmp_path):
     }
     assert mem == disk
     assert len(disk) > 0
+    mem_idx.unpersist()
 
 
 def test_postings_term_pushdown(spark, tmp_path):
-    import contextlib
-    import io
-
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = str(tmp_path / "idx2")
-    materialize_index(spark, docs, "doc_id", ["text"], path, stem=False)
-    idx = load_index(spark, path)
-    scan = idx.postings.filter(F.col("term").isin(["spark", "join"]))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        scan.explain("formatted")
-    assert "PushedFilters" in buf.getvalue()
-    assert "In(term" in buf.getvalue()  # the term list reached the scan
+    idx = _served(spark, docs, str(tmp_path / "idx2"))
+    plan = (
+        idx.postings.filter(F.col("term").isin(["spark", "join"]))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "PushedFilters" in plan
+    assert plan.count("In(term, [join,spark])") == 1  # the list reached the scan
 
 
 def _vec(i: int, dim: int = 8) -> list[float]:
@@ -113,4 +116,33 @@ def test_index_for_detects_rewritten_corpus(spark, tmp_path, monkeypatch):
     idx2 = qs._index_for(spark, sf_dir)
     assert idx2.num_docs == 2  # stale index must NOT be served
     siblings = os.listdir(os.path.join(serve._WAREHOUSE, "serving_index"))
-    assert len(siblings) == 1 and siblings[0].startswith("documents-")
+    assert len(siblings) == 1 and siblings[0].startswith("docs-segment-")
+
+
+def test_served_search_reads_one_segment(spark, tmp_path, monkeypatch):
+    """Reopening the served index and ranking `search_bm25_docs`'s
+    top-20 takes 7 Spark jobs: one schema read per segment table plus
+    the query's own. The segment's df is exact, so its docfreq is read
+    as written, with no aggregate."""
+    from metastore_spark import queries_search as qs
+    from metastore_spark import serve
+
+    monkeypatch.setattr(serve, "_WAREHOUSE", str(tmp_path / "wh"))
+    monkeypatch.setattr(qs, "_INDEX_CACHE", OrderedDict())
+    sf = "/root/testdata/sf0.001"
+    qs._index_for(spark, sf)  # build the store
+    qs._INDEX_CACHE.clear()
+
+    sc = spark.sparkContext
+    group = "test-served-search-jobs"
+    sc.setJobGroup(group, "open the served index and rank")
+    try:
+        rows = qs.search_bm25_docs(spark, sf).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 20
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+
+    idx = qs._index_for(spark, sf)
+    plan = idx.docfreq._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" not in plan
