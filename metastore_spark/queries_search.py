@@ -43,7 +43,7 @@ def _index_for(spark: SparkSession, sf_dir: str, stem: bool = False):
     postings + the docfreq and doclen side tables."""
     path = build_once(
         "serving_index",
-        "docs-segment-stem" if stem else "docs-segment",
+        "docs-typed-stem" if stem else "docs-typed",
         [os.path.join(sf_dir, "documents.parquet")],
         lambda tmp: _write_segment(
             spark, _t(spark, sf_dir, "documents"), "doc_id", ["text"], tmp,

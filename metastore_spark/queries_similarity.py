@@ -1098,24 +1098,11 @@ def _ivf_recall_eval(
     trained-quantizer evals — see ann_ivf_recall's docstring for the
     scale shape. ``exact`` injects the served ground-truth top-10
     (`_served_exact_top10`; bit-identical to the in-line fold leg)."""
-    import math
-
     from metastore_spark.operators.topk import grouped_topk
 
-    def _probe(qv: list[float]) -> list[int]:
-        # same arithmetic and (−sim, cid) tie order as sim.ivf_topk /
-        # the oracle's probe CTE (stable sort keeps cid-ascending ties)
-        qn = math.sqrt(sum(x * x for x in qv)) or 1.0
-
-        def s(c: list[float]) -> float:
-            cn = math.sqrt(sum(x * x for x in c)) or 1.0
-            return sum(a * b for a, b in zip(c, qv)) / (cn * qn)
-
-        return sorted(
-            range(len(centroids)), key=lambda ci: -s(centroids[ci])
-        )[:nprobe]
-
-    probes = {qid: _probe(qv) for qid, qv in qvecs}
+    probes = {
+        qid: sim.ivf_probe(centroids, qv, nprobe) for qid, qv in qvecs
+    }
     all_cids = sorted({c for ps in probes.values() for c in ps})
 
     def _cands(src: DataFrame, pruned: bool) -> DataFrame:

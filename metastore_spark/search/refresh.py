@@ -3,8 +3,9 @@
 This module is the only writer and reader of the persisted index. A
 segment directory holds ``postings/`` (term, doc_id, field, tf),
 ``doclen/`` (doc_id, field, dl), ``docfreq/`` (term, field, df) and
-``stats.json`` (``num_docs`` and per-field ``[dl_sum, count]``). Two
-stores use it:
+``stats.json`` (``num_docs``, per-field ``[dl_sum, count]`` and each
+table's ``schemas`` entry, so opening a segment runs no schema-inference
+job). Two stores use it:
 
 - the served index over a static corpus (`queries_search._index_for`)
   is ONE segment, written by `_write_segment` inside a build-once
@@ -44,6 +45,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from metastore_spark.search.index import SearchIndex, build_index
 
@@ -69,6 +71,18 @@ def _write_manifest(path: str, man: dict) -> None:
     os.rename(tmp, os.path.join(path, _MANIFEST))
 
 
+def _write_tables(seg_dir: str, tables: dict[str, DataFrame]) -> dict:
+    """Write a segment's tables; return their schemas for stats.json
+    (nullable, as a parquet read reports them)."""
+    schemas = {}
+    for sub, df in tables.items():
+        df.write.mode("overwrite").parquet(os.path.join(seg_dir, sub))
+        schemas[sub] = StructType(
+            [StructField(f.name, f.dataType, True) for f in df.schema]
+        ).jsonValue()
+    return schemas
+
+
 def _write_segment(
     spark: SparkSession,
     df: DataFrame,
@@ -81,12 +95,13 @@ def _write_segment(
     segment: postings, doclen, per-segment docfreq, and the partial
     stats global BM25 needs (per-field dl sum/count, doc count)."""
     idx = build_index(df, id_col, fields, stem=stem)
-    idx.postings.write.mode("overwrite").parquet(
-        os.path.join(seg_dir, "postings")
-    )
-    idx.doclen.write.mode("overwrite").parquet(os.path.join(seg_dir, "doclen"))
-    idx.docfreq.write.mode("overwrite").parquet(
-        os.path.join(seg_dir, "docfreq")
+    schemas = _write_tables(
+        seg_dir,
+        {
+            "postings": idx.postings,
+            "doclen": idx.doclen,
+            "docfreq": idx.docfreq,
+        },
     )
     sums = {
         r["field"]: (float(r["s"]), int(r["c"]))
@@ -94,7 +109,7 @@ def _write_segment(
         .agg(F.sum("dl").alias("s"), F.count(F.lit(1)).alias("c"))
         .collect()
     }
-    stats = {"num_docs": idx.num_docs, "dl_sums": sums}
+    stats = {"num_docs": idx.num_docs, "dl_sums": sums, "schemas": schemas}
     with open(os.path.join(seg_dir, "stats.json"), "w") as fh:
         json.dump(stats, fh)
     idx.unpersist()
@@ -259,12 +274,21 @@ def _merge(spark: SparkSession, seg_dirs: list[str]):
     """The segments' postings, doclen, docfreq and stats as ONE
     segment's: postings/doclen are the (disjoint) union, docfreq is
     the exact per-term sum of segment partials and the stats sum. One
-    segment's tables are read as written: its df is already exact."""
+    segment's tables are read as written: its df is already exact.
+    Every table opens under the schema its stats.json records."""
+    seg_stats = []
+    for s in seg_dirs:
+        with open(os.path.join(s, "stats.json")) as fh:
+            seg_stats.append(json.load(fh))
 
     def read(sub: str) -> DataFrame:
         return reduce(
             DataFrame.unionByName,
-            [spark.read.parquet(os.path.join(s, sub)) for s in seg_dirs],
+            [
+                spark.read.schema(StructType.fromJson(st["schemas"][sub]))
+                .parquet(os.path.join(s, sub))
+                for s, st in zip(seg_dirs, seg_stats)
+            ],
         )
 
     docfreq = read("docfreq")
@@ -272,9 +296,7 @@ def _merge(spark: SparkSession, seg_dirs: list[str]):
         docfreq = docfreq.groupBy("term", "field").agg(F.sum("df").alias("df"))
     num_docs = 0
     dl: dict[str, list[float]] = {}
-    for s in seg_dirs:
-        with open(os.path.join(s, "stats.json")) as fh:
-            st = json.load(fh)
+    for st in seg_stats:
         num_docs += int(st["num_docs"])
         for field, (ssum, cnt) in st["dl_sums"].items():
             agg = dl.setdefault(field, [0.0, 0])
@@ -323,14 +345,19 @@ def compact_segments(spark: SparkSession, path: str) -> None:
     tmp = f"{dest}.build-{os.getpid()}-{uuid.uuid4().hex[:8]}"
     segs = [os.path.join(path, s) for s in folded]
     postings, doclen, docfreq, stats = _merge(spark, segs)
-    postings.repartition("term").write.parquet(os.path.join(tmp, "postings"))
     # doclen is O(corpus docs) and docfreq is vocabulary-sized — a
     # coalesce(1) here would funnel both through ONE task/file at
     # compaction time (the 100 TB serialization point); shuffle them
     # on their natural keys like postings, readers handle multi-file
     # segment dirs already (the stream refresh writes them that way).
-    doclen.repartition("doc_id").write.parquet(os.path.join(tmp, "doclen"))
-    docfreq.repartition("term").write.parquet(os.path.join(tmp, "docfreq"))
+    stats["schemas"] = _write_tables(
+        tmp,
+        {
+            "postings": postings.repartition("term"),
+            "doclen": doclen.repartition("doc_id"),
+            "docfreq": docfreq.repartition("term"),
+        },
+    )
     with open(os.path.join(tmp, "stats.json"), "w") as fh:
         json.dump(stats, fh)
     os.rename(tmp, dest)

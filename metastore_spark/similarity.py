@@ -573,6 +573,24 @@ def kmeans_centroids(
     return centroids
 
 
+def ivf_probe(
+    centroids: list[list[float]], qvec: list[float], nprobe: int
+) -> list[int]:
+    """The ``nprobe`` centroid ids closest to ``qvec`` by cosine, ties
+    to the lower id (a stable sort on −sim keeps ids ascending) — the
+    coarse routing every IVF search shares, and the order the SQL
+    oracles' probe CTEs reproduce."""
+    qnorm = math.sqrt(sum(x * x for x in qvec)) or 1.0
+
+    def centroid_sim(c: list[float]) -> float:
+        cn = math.sqrt(sum(x * x for x in c)) or 1.0
+        return sum(a * b for a, b in zip(c, qvec)) / (cn * qnorm)
+
+    return sorted(
+        range(len(centroids)), key=lambda ci: -centroid_sim(centroids[ci])
+    )[:nprobe]
+
+
 def ivf_topk(
     indexed: DataFrame,
     centroids: list[list[float]],
@@ -588,15 +606,7 @@ def ivf_topk(
     With the index table partitioned by centroid_id, the probe filter
     is partition pruning — the scan touches nprobe/k of the data.
     """
-    qnorm = math.sqrt(sum(x * x for x in qvec)) or 1.0
-
-    def centroid_sim(c: list[float]) -> float:
-        cn = math.sqrt(sum(x * x for x in c)) or 1.0
-        return sum(a * b for a, b in zip(c, qvec)) / (cn * qnorm)
-
-    probe = sorted(
-        range(len(centroids)), key=lambda ci: -centroid_sim(centroids[ci])
-    )[:nprobe]
+    probe = ivf_probe(centroids, qvec, nprobe)
     sim = F.round(cosine_sim_lit(F.col(vec_col), qvec), round_dp)
     return (
         indexed.filter(F.col("centroid_id").isin(probe))
@@ -876,16 +886,7 @@ def ivf_pq_topk(
     oracle reproduces recall misses of unprobed lists AND
     quantization-induced candidate misses bit-for-bit.
     """
-    qnorm = math.sqrt(sum(x * x for x in qvec)) or 1.0
-
-    def centroid_sim(c: list[float]) -> float:
-        cn = math.sqrt(sum(x * x for x in c)) or 1.0
-        return sum(a * b for a, b in zip(c, qvec)) / (cn * qnorm)
-
-    probe = sorted(
-        range(len(coarse_centroids)),
-        key=lambda ci: -centroid_sim(coarse_centroids[ci]),
-    )[:nprobe]
+    probe = ivf_probe(coarse_centroids, qvec, nprobe)
     probed = indexed.filter(F.col("centroid_id").isin(probe))
     scored = _pq_adc_scores(
         probed, qvec, pq_centroids, maxabs, n_sub, id_col, vec_col
@@ -1265,18 +1266,7 @@ def ivf_pq_topk_books(
     train_pq_codebooks output) instead of float prototype vectors —
     the fully-trained serving composition. Same probe-prune / ADC /
     rerank shape and determinism contract."""
-    import math
-
-    qnorm = math.sqrt(sum(x * x for x in qvec)) or 1.0
-
-    def centroid_sim(c: list[float]) -> float:
-        cn = math.sqrt(sum(x * x for x in c)) or 1.0
-        return sum(a * b for a, b in zip(c, qvec)) / (cn * qnorm)
-
-    probe = sorted(
-        range(len(coarse_centroids)),
-        key=lambda ci: -centroid_sim(coarse_centroids[ci]),
-    )[:nprobe]
+    probe = ivf_probe(coarse_centroids, qvec, nprobe)
     probed = indexed.filter(F.col("centroid_id").isin(probe))
     scored = pq_adc_scores_panel_books(
         probed, [(0, qvec)], books, maxabs, id_col, vec_col

@@ -34,6 +34,18 @@ Design parallels (public formats):
   serve.py winner-keeps rename) establish the crash-safety idiom;
   this module adds multi-version retention + optimistic concurrency.
 
+One commit path: every commit op builds its manifest metadata with
+`_inherit` (schema and column-ID lineage, the stats/bloom opt-ins, the
+partition and cluster specs and the delete lists a commit carries
+from its parent; an op that drops one names it) and the segment of the
+files it writes with `_new_segment` (one footer open per new file for
+rows, stats and column names, plus the bloom column reads).
+Copy-on-write rewrites carry a partly affected segment's kept files
+with their recorded metadata (`_segments_after_removal`). Commits of
+already-written files (the DataSource writers, `snapshot_sink`) stage
+their segment once and retry the link on the new head through
+`_commit_segments_with_retry`.
+
 Crash contract: a crash before the commit-file link leaves orphan
 data files and/or orphan segment JSONs only (age-gated `vacuum`
 reclaims them); a crash after it is a completed commit. There is no
@@ -177,36 +189,68 @@ def _segment_path(root: str, name: str) -> str:
     return os.path.join(_meta_dir(root), f"{name}.json")
 
 
-def _write_segment(
-    root: str,
-    files: list[str],
-    stats: dict | None = None,
-    partitions: dict | None = None,
-    columns: dict | None = None,
-    blooms: dict | None = None,
-) -> str:
-    """Persist an immutable segment (bounded file list, optional
-    per-file column min/max stats, per-file partition tuples, and the
-    files' write-time column metadata {name: {id, type}} for
-    column-ID schema evolution) and return its name. Written BEFORE
-    the commit file that references it — a crash in between leaves an
-    orphan JSON for `vacuum`, never a torn read."""
+def _write_segment(root: str, files: list[str], meta: dict) -> str:
+    """Persist an immutable segment and return its name: the file list
+    plus ``meta`` — per-file ``stats`` (column min/max), ``partitions``
+    (partition tuples), ``blooms`` and ``rows`` maps, and the files'
+    write-time ``columns`` {name: {id, type}} for column-ID schema
+    evolution; empty entries are omitted. Written BEFORE the commit
+    file that references it — a crash in between leaves an orphan
+    JSON for `vacuum`, never a torn read. Its two callers are
+    `_new_segment` (newly written files) and `_segments_after_removal`
+    (kept files, metadata carried)."""
     name = f"s-{uuid.uuid4().hex[:16]}"
-    seg: dict = {"files": sorted(files)}
-    if stats:
-        seg["stats"] = stats
-    if partitions:
-        seg["partitions"] = partitions
-    if columns:
-        seg["columns"] = columns
-    if blooms:
-        seg["blooms"] = blooms
-    rows = _collect_file_rows(root, files)
-    if rows:
-        seg["rows"] = rows
+    seg = {"files": sorted(files), **{k: v for k, v in meta.items() if v}}
     with open(_segment_path(root, name), "w") as fh:
         json.dump(seg, fh)
     return name
+
+
+# per-file maps of a segment JSON ({file: value}); `columns` is per segment
+_FILE_KEYS = ("stats", "partitions", "blooms", "rows")
+
+
+def _new_segment(root: str, files: list[str], extra: dict) -> str:
+    """The segment of just-written ``files`` under a commit's manifest
+    ``extra`` (built by `_inherit`). Each file's footer is opened ONCE
+    for its row count (the Iceberg manifest-entry ``record_count``,
+    which powers metadata-only row accounting), the min/max of
+    ``stats_cols`` and its column names; ``bloom_cols`` cost one column
+    read per file. Partition tuples come from the ``partition_spec``
+    path components, the write-time column mapping from the committed
+    schema's IDs. A file whose footer is unreadable gets no entries
+    (readers see null rows and never skip it)."""
+    import pyarrow.parquet as pq
+
+    scols = extra.get("stats_cols") or []
+    bcols = extra.get("bloom_cols") or []
+    rows: dict[str, int] = {}
+    stats: dict[str, dict] = {}
+    blooms: dict[str, dict] = {}
+    for f in files:
+        try:
+            pf = pq.ParquetFile(os.path.join(root, f))
+        except Exception:
+            continue
+        rows[f] = int(pf.metadata.num_rows)
+        if scols and (fstats := _file_stats(pf.metadata, scols)):
+            stats[f] = fstats
+        if bcols and (fblooms := _file_blooms(pf, bcols)):
+            blooms[f] = fblooms
+    fields = extra.get("schema", {}).get("fields", [])
+    return _write_segment(
+        root,
+        files,
+        {
+            "stats": stats,
+            "partitions": _spec_partitions(
+                files, extra.get("partition_spec") or []
+            ),
+            "columns": _columns_meta(fields, extra.get("column_ids")),
+            "blooms": blooms,
+            "rows": rows,
+        },
+    )
 
 
 def _bloom_key(v) -> bytes:
@@ -278,58 +322,25 @@ def _bloom_test(bloom: dict, v) -> bool:
     return True
 
 
-def _collect_file_blooms(
-    root: str, files: list[str], cols: list[str]
-) -> dict | None:
-    """Per-file bloom filters over ``cols`` (one arrow column read per
-    delta file — O(delta) at commit, like stats collection): equality
-    probes (`prune={col: [values]}`) can then skip files whose min/max
-    range COVERS a scattered key that is not actually present — the
+def _file_blooms(pf, cols: list[str]) -> dict:
+    """One file's bloom filters over ``cols`` (one arrow column read —
+    O(delta) at commit, like stats collection): equality probes
+    (`prune={col: [values]}`) can then skip files whose min/max range
+    COVERS a scattered key that is not actually present — the
     point-lookup/GDPR-erasure gap range stats cannot close."""
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    out: dict[str, dict[str, dict]] = {}
-    for f in files:
-        path = os.path.join(root, f)
+    names = set(pf.schema_arrow.names)
+    want = [c for c in cols if c in names]
+    if not want:
+        return {}
+    tbl = pf.read(columns=want)
+    out = {}
+    for c in want:
         try:
-            names = set(pq.ParquetFile(path).schema_arrow.names)
-        except Exception:
-            continue
-        want = [c for c in cols if c in names]
-        if not want:
-            continue
-        tbl = pq.read_table(path, columns=want)
-        fblooms = {}
-        for c in want:
-            try:
-                distinct = pc.unique(tbl[c]).to_pylist()
-                fblooms[c] = _bloom_build(distinct)
-            except TypeError:
-                continue  # unsupported type: no bloom, never skipped
-        if fblooms:
-            out[f] = fblooms
-    return out or None
-
-
-def _collect_file_rows(root: str, files: list[str]) -> dict[str, int]:
-    """Per-file row counts lifted from the parquet FOOTERS at segment-
-    write time (one metadata read per delta file, no data scan) — the
-    Iceberg manifest-entry ``record_count``. Powers metadata-only
-    row accounting (`table_files` / `table_partitions`): COUNT-shaped
-    questions answer from O(#files) JSON without opening data. A file
-    whose footer is unreadable maps to nothing (readers see null and
-    fall back to scanning)."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, int] = {}
-    for f in files:
-        try:
-            out[f] = int(
-                pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            )
-        except Exception:
-            continue
+            out[c] = _bloom_build(pc.unique(tbl[c]).to_pylist())
+        except TypeError:
+            continue  # unsupported type: no bloom, never skipped
     return out
 
 
@@ -346,37 +357,28 @@ def _spec_partitions(files: list[str], spec: list[str]) -> dict | None:
     return out or None
 
 
-def _collect_file_stats(
-    root: str, files: list[str], cols: list[str]
-) -> dict:
-    """Per-file [min, max] of ``cols`` lifted from the PARQUET FOOTERS
-    (pyarrow metadata read — no data scan): the Iceberg manifest-stats
-    idea, giving readers file skipping WITHOUT opening data files.
-    A column whose footer lacks stats in some row group maps to null
-    (that file is never skipped)."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, dict[str, list]] = {}
-    for f in files:
-        md = pq.ParquetFile(os.path.join(root, f)).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        fstats: dict[str, list] = {}
-        for col in cols:
-            if col not in idx:
-                continue
-            lo = hi = None
-            ok = True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if ok and lo is not None:
-                fstats[col] = [lo, hi]
-        if fstats:
-            out[f] = fstats
+def _file_stats(md, cols: list[str]) -> dict:
+    """One file's [min, max] of ``cols`` lifted from its PARQUET
+    FOOTER (no data scan): the Iceberg manifest-stats idea, giving
+    readers file skipping WITHOUT opening data files. A column whose
+    footer lacks stats in some row group gets no entry (that file is
+    never skipped on it)."""
+    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    out: dict[str, list] = {}
+    for col in cols:
+        if col not in idx:
+            continue
+        lo = hi = None
+        ok = True
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx[col]).statistics
+            if st is None or not st.has_min_max:
+                ok = False
+                break
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        if ok and lo is not None:
+            out[col] = [lo, hi]
     return out
 
 
@@ -521,40 +523,77 @@ def _commit(
     return version
 
 
-def _carry_deletes(src_manifest: dict, extra: dict) -> None:
-    """Position-delete files inherit like cluster_spec: every commit
-    that carries its parent's row set forward must carry the parent's
-    delete set, or merge-on-read deleted rows silently resurrect.
-    Compaction is the ONE deliberate non-carrier — it folds with the
-    deletes applied and clears the list (it carries bloom_cols
-    explicitly and rebuilds blooms for the fold).
-
-    ``bloom_cols`` rides along here for the same never-lapse reason
-    as stats_cols: files a rewrite produces without blooms are merely
-    unskippable (conservative), but the COLUMN OPT-IN itself must
-    survive every commit so appends and compactions keep building
-    them."""
-    if src_manifest.get("delete_files") and "delete_files" not in extra:
-        extra["delete_files"] = list(src_manifest["delete_files"])
-    if (
-        src_manifest.get("eq_delete_files")
-        and "eq_delete_files" not in extra
-    ):
-        extra["eq_delete_files"] = list(src_manifest["eq_delete_files"])
-    if src_manifest.get("bloom_cols") and "bloom_cols" not in extra:
-        extra["bloom_cols"] = list(src_manifest["bloom_cols"])
+def _fields(df: DataFrame) -> list[dict]:
+    """A frame's schema as schema-JSON fields."""
+    return json.loads(df.schema.json())["fields"]
 
 
-def _carry_cluster(src_manifest: dict, extra: dict) -> None:
-    """cluster_spec inherits exactly like partition_spec: once a
-    clustered compaction records it, every later commit carries it so
-    probes can always decompose boxes against the recorded shifts."""
-    if src_manifest.get("cluster_spec") and "cluster_spec" not in extra:
-        extra["cluster_spec"] = src_manifest["cluster_spec"]
+def _inherit(
+    parent: dict,
+    fields: list[dict] | None = None,
+    clear: tuple[str, ...] = (),
+    **own,
+) -> dict:
+    """THE rule for a commit's manifest ``extra``: what it inherits from
+    ``parent`` (the manifest whose row set it carries forward — the
+    head, or the rollback/fork/publish source) given its own values.
 
+    - ``schema``: ``fields`` (default: the parent's). Column-ID
+      lineage: the parent's ``column_ids`` propagate and new columns
+      get fresh IDs; ``next_column_id`` is the max of the parent's and
+      an ``own`` one (the destination chain's head, so a retired ID is
+      never re-minted). Tables that never evolved carry no IDs.
+    - ``stats_cols`` / ``bloom_cols``: the caller's columns plus the
+      inherited ones — once set, an opt-in never silently lapses.
+    - ``partition_spec`` / ``cluster_spec``: the caller's, else the
+      inherited one.
+    - ``delete_files`` / ``eq_delete_files``: the inherited entries
+      plus the caller's new ones — a commit carrying its parent's rows
+      must carry their deletes, or merge-on-read deleted rows
+      resurrect.
 
-def _schema_extra(df: DataFrame) -> dict:
-    return {"schema": json.loads(df.schema.json())}
+    An op that drops an inherited key on purpose names it in
+    ``clear`` (compaction folds the deletes in; a full overwrite also
+    drops the cluster spec). Every other ``own`` key belongs to the
+    op alone (``sort_spec``, ``rolled_back_to``, ``stream_id``, ...)
+    and is recorded when not None."""
+    if fields is None:
+        fields = parent["schema"]["fields"]
+    extra: dict = {"schema": {"type": "struct", "fields": fields}}
+    nxt = int(own.pop("next_column_id", None) or 0)
+    if parent.get("column_ids"):
+        ids = dict(parent["column_ids"])
+        nxt = max(
+            nxt,
+            int(
+                parent.get("next_column_id")
+                or max(ids.values(), default=0) + 1
+            ),
+        )
+        for f in fields:
+            if f["name"] not in ids:
+                ids[f["name"]] = nxt
+                nxt += 1
+        extra["column_ids"] = ids
+        if parent.get("legacy_columns"):
+            extra["legacy_columns"] = parent["legacy_columns"]
+    if nxt:
+        extra["next_column_id"] = nxt
+    for key in ("stats_cols", "bloom_cols"):
+        cols = list(own.pop(key, None) or [])
+        cols += [c for c in parent.get(key) or [] if c not in cols]
+        extra[key] = cols
+    for key in ("partition_spec", "cluster_spec"):
+        extra[key] = own.pop(key, None) or parent.get(key)
+    for key in ("delete_files", "eq_delete_files"):
+        extra[key] = list(parent.get(key) or []) + list(
+            own.pop(key, None) or []
+        )
+    for key in clear:
+        extra[key] = None
+    extra = {k: v for k, v in extra.items() if v}
+    extra.update({k: v for k, v in own.items() if v is not None})
+    return extra
 
 
 # ---- column-ID schema evolution ------------------------------------
@@ -581,31 +620,7 @@ _WIDENINGS = {
 }
 
 
-def _ids_for_commit(prev_manifest: dict, fields: list[dict]) -> dict:
-    """Evolution keys for a data commit writing ``fields`` (schema
-    JSON field list): propagate the parent's mapping, assign fresh IDs
-    to new columns. Empty dict when the table has never evolved — IDs
-    are born at the first evolution op, so untouched tables pay zero
-    metadata and take today's single-read fast path."""
-    ids = prev_manifest.get("column_ids")
-    if not ids:
-        return {}
-    ids = dict(ids)
-    nxt = int(
-        prev_manifest.get("next_column_id")
-        or max(ids.values(), default=0) + 1
-    )
-    for f in fields:
-        if f["name"] not in ids:
-            ids[f["name"]] = nxt
-            nxt += 1
-    out = {"column_ids": ids, "next_column_id": nxt}
-    if prev_manifest.get("legacy_columns"):
-        out["legacy_columns"] = prev_manifest["legacy_columns"]
-    return out
-
-
-def _columns_meta(fields: list[dict], ids: dict) -> dict | None:
+def _columns_meta(fields: list[dict], ids: dict | None) -> dict | None:
     """Per-segment ``columns`` metadata ({name: {id, type}}) for files
     about to be written under the current schema; None pre-IDs."""
     if not ids:
@@ -670,20 +685,18 @@ def _evolve(root: str, transform) -> int:
         # path via Spark's implicit cast, the pyarrow DataSource path
         # via an explicit cast in spark_source._arrow_read (all legal
         # widenings are lossless, so equality is preserved).
-    extra: dict = {
-        "schema": schema,
-        "column_ids": ids,
-        "next_column_id": int(nxt),
-    }
-    if legacy:
-        extra["legacy_columns"] = legacy
-    if scols:
-        extra["stats_cols"] = scols
-    if spec:
-        extra["partition_spec"] = spec
-    _carry_cluster(m, extra)
-    _carry_deletes(m, extra)
-    return _commit(root, head, "evolve", list(m["segments"]), extra)
+    # the evolved head is what the commit inherits from
+    evolved = dict(
+        m,
+        schema=schema,
+        column_ids=ids,
+        next_column_id=int(nxt),
+        legacy_columns=legacy,
+        partition_spec=spec,
+        stats_cols=scols,
+    )
+    segs = list(m["segments"])
+    return _commit(root, head, "evolve", segs, _inherit(evolved))
 
 
 def rename_column(root: str, old: str, new: str) -> int:
@@ -762,10 +775,7 @@ def _check_add_only(parent_manifest: dict, df: DataFrame) -> None:
     """Add-only schema evolution: every parent column must survive
     with its type. New columns are fine — the stored snapshot schema
     null-fills them when reading older files."""
-    _check_add_only_fields(
-        parent_manifest,
-        [json.loads(f.json()) for f in df.schema.fields],
-    )
+    _check_add_only_fields(parent_manifest, _fields(df))
 
 
 def _check_add_only_fields(
@@ -1498,34 +1508,18 @@ def commit_append(
     parent = current_version(root, ref)
     prev_manifest = read_manifest(root, parent, ref) if parent else {}
     _check_add_only(prev_manifest, df)
-    prev_segs = list(prev_manifest["segments"]) if parent else []
-    scols = stats_cols or prev_manifest.get("stats_cols") or []
-    bcols = bloom_cols or prev_manifest.get("bloom_cols") or []
-    spec = partition_by or prev_manifest.get("partition_spec") or []
-    files = _write_data_files(df, root, spec or None)
-    stats = _collect_file_stats(root, files, scols) if scols else None
-    extra = _schema_extra(df)
-    ev = _ids_for_commit(prev_manifest, extra["schema"]["fields"])
-    extra.update(ev)
-    seg = _write_segment(
-        root,
-        files,
-        stats,
-        _spec_partitions(files, spec),
-        _columns_meta(
-            extra["schema"]["fields"], ev.get("column_ids") or {}
-        ),
-        _collect_file_blooms(root, files, bcols) if bcols else None,
+    extra = _inherit(
+        prev_manifest,
+        _fields(df),
+        stats_cols=stats_cols,
+        bloom_cols=bloom_cols,
+        partition_spec=partition_by,
     )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if bcols:
-        extra["bloom_cols"] = list(bcols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)
-    return _commit(root, parent, "append", prev_segs + [seg], extra, ref)
+    files = _write_data_files(df, root, extra.get("partition_spec"))
+    segs = prev_manifest.get("segments", []) + [
+        _new_segment(root, files, extra)
+    ]
+    return _commit(root, parent, "append", segs, extra, ref)
 
 
 # ---- file-based commits (the Python DataSource WRITE path) ---------
@@ -1555,38 +1549,26 @@ def commit_append_files(
     """Commit ALREADY-WRITTEN table-relative parquet files as an
     append. ``schema`` is the frame's schema JSON (StructType.json());
     add-only evolution is enforced against the head exactly like
-    `commit_append`, and stats/bloom/partition specs inherit from the
-    head (caller values only seed a new table). Retries on concurrent
-    commits re-link the staged segment (write-once data)."""
+    `commit_append`, and the specs follow `_inherit` (the caller's
+    stats/bloom columns join the head's; its partition spec seeds a
+    new table). Retries on concurrent commits re-link the staged
+    segment (write-once data)."""
     if ref != "main" and not current_version(root, ref):
         raise ValueError(f"no branch {ref!r}; create_branch first")
     create_table(root)
-    head = current_version(root, ref)
-    hm = read_manifest(root, head, ref) if head else {}
-    _check_add_only_fields(hm, schema["fields"])
-    scols = stats_cols or hm.get("stats_cols") or []
-    bcols = bloom_cols or hm.get("bloom_cols") or []
-    spec = partition_by or hm.get("partition_spec") or []
-    extra: dict = {"schema": schema}
-    ev = _ids_for_commit(hm, schema["fields"])
-    extra.update(ev)
-    seg = _write_segment(
-        root,
-        files,
-        _collect_file_stats(root, files, scols) if scols else None,
-        _spec_partitions(files, spec),
-        _columns_meta(schema["fields"], ev.get("column_ids") or {}),
-        _collect_file_blooms(root, files, bcols) if bcols else None,
-    )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if bcols:
-        extra["bloom_cols"] = list(bcols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    if extra_meta:
-        extra.update(extra_meta)
-    return _commit_segments_with_retry(root, "append", [seg], extra, ref)
+
+    def build(pm: dict) -> tuple[list[str], dict]:
+        _check_add_only_fields(pm, schema["fields"])
+        return pm.get("segments", []), _inherit(
+            pm,
+            schema["fields"],
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+            partition_spec=partition_by,
+            **(extra_meta or {}),
+        )
+
+    return _commit_segments_with_retry(root, "append", files, build, ref)
 
 
 def commit_overwrite_files(
@@ -1610,36 +1592,20 @@ def commit_overwrite_files(
     STREAMS skip the commit (op != append) — Delta's
     ignoreChanges-style contract, documented not silent."""
     create_table(root)
-    while True:
-        parent = current_version(root)
-        pm = read_manifest(root, parent) if parent else {}
+
+    def build(pm: dict) -> tuple[list[str], dict]:
         _check_add_only_fields(pm, schema["fields"])
-        scols = stats_cols or pm.get("stats_cols") or []
-        bcols = bloom_cols or pm.get("bloom_cols") or []
-        spec = partition_by or pm.get("partition_spec") or []
-        extra: dict = {"schema": schema}
-        ev = _ids_for_commit(pm, schema["fields"])
-        extra.update(ev)
-        seg = _write_segment(
-            root,
-            files,
-            _collect_file_stats(root, files, scols) if scols else None,
-            _spec_partitions(files, spec),
-            _columns_meta(schema["fields"], ev.get("column_ids") or {}),
-            _collect_file_blooms(root, files, bcols) if bcols else None,
+        return [], _inherit(
+            pm,
+            schema["fields"],
+            clear=("cluster_spec", "delete_files", "eq_delete_files"),
+            stats_cols=stats_cols,
+            bloom_cols=bloom_cols,
+            partition_spec=partition_by,
+            **(extra_meta or {}),
         )
-        if scols:
-            extra["stats_cols"] = list(scols)
-        if bcols:
-            extra["bloom_cols"] = list(bcols)
-        if spec:
-            extra["partition_spec"] = list(spec)
-        if extra_meta:
-            extra.update(extra_meta)
-        try:
-            return _commit(root, parent, "overwrite", [seg], extra)
-        except ConcurrentCommit:
-            continue
+
+    return _commit_segments_with_retry(root, "overwrite", files, build)
 
 
 def commit_mor_upsert_files(
@@ -1664,13 +1630,12 @@ def commit_mor_upsert_files(
     missing = [c for c in key_cols if c not in incoming]
     if missing:
         raise ValueError(f"key column(s) {missing} not in the frame")
-    while True:
-        parent = current_version(root)
-        if not parent:
+
+    def build(pm: dict) -> tuple[list[str], dict]:
+        if not pm:
             raise ValueError(
                 "cannot upsert into an empty table; append first"
             )
-        pm = read_manifest(root, parent)
         committed = {f["name"] for f in pm["schema"]["fields"]}
         alien = [c for c in key_cols if c not in committed]
         if alien:
@@ -1678,47 +1643,22 @@ def commit_mor_upsert_files(
                 f"key column(s) {alien} not in the committed schema"
             )
         _check_add_only_fields(pm, schema["fields"])
-        prev_segs = list(pm["segments"])
-        scols = pm.get("stats_cols") or []
-        bcols = pm.get("bloom_cols") or []
-        spec = pm.get("partition_spec") or []
-        extra: dict = {"schema": schema}
-        ev = _ids_for_commit(pm, schema["fields"])
-        extra.update(ev)
-        seg = _write_segment(
-            root,
-            files,
-            _collect_file_stats(root, files, scols) if scols else None,
-            _spec_partitions(files, spec),
-            _columns_meta(schema["fields"], ev.get("column_ids") or {}),
-            _collect_file_blooms(root, files, bcols) if bcols else None,
+        extra = _inherit(
+            pm,
+            schema["fields"],
+            eq_delete_files=[
+                {
+                    "files": list(key_files),
+                    "cols": list(key_cols),
+                    "scope_segments": list(pm["segments"]),
+                }
+            ],
+            **(extra_meta or {}),
         )
-        if scols:
-            extra["stats_cols"] = list(scols)
-        if bcols:
-            extra["bloom_cols"] = list(bcols)
-        if spec:
-            extra["partition_spec"] = list(spec)
-        _carry_cluster(pm, extra)
-        _carry_deletes(pm, extra)  # position deletes; eq below
-        extra["eq_delete_files"] = list(
-            pm.get("eq_delete_files") or []
-        ) + [
-            {
-                "files": list(key_files),
-                "cols": list(key_cols),
-                "scope_segments": list(prev_segs),
-            }
-        ]
-        if extra_meta:
-            extra.update(extra_meta)
         _warn_read_amplification(len(extra["eq_delete_files"]), root)
-        try:
-            return _commit(
-                root, parent, "upsert-mor", prev_segs + [seg], extra
-            )
-        except ConcurrentCommit:
-            continue
+        return list(pm["segments"]), extra
+
+    return _commit_segments_with_retry(root, "upsert-mor", files, build)
 
 
 def commit_delete_where(
@@ -1770,50 +1710,21 @@ def commit_delete_where(
     affected = {
         os.path.relpath(r["_src"], root) for r in affected_df.collect()
     }
-    schema_extra = {"schema": prev_manifest["schema"]}
-    schema_extra.update(
-        _ids_for_commit(prev_manifest, prev_manifest["schema"]["fields"])
-    )
-    spec = prev_manifest.get("partition_spec") or []
+    extra = _inherit(prev_manifest)
     if not affected:
-        extra = dict(schema_extra)
-        if prev_manifest.get("stats_cols"):
-            extra["stats_cols"] = list(prev_manifest["stats_cols"])
-        if spec:
-            extra["partition_spec"] = list(spec)
-        _carry_cluster(prev_manifest, extra)
-        _carry_deletes(prev_manifest, extra)
         return _commit(root, parent, "delete", prev_segs, extra, ref)
     survivors = (
         with_file.join(F.broadcast(affected_df), "_src", "left_semi")
         .filter(~hit)
         .drop("_src")
     )
-    scols = prev_manifest.get("stats_cols") or []
-    rewritten = _write_data_files(survivors, root, spec or None)
+    rewritten = _write_data_files(
+        survivors, root, extra.get("partition_spec")
+    )
     new_segs = _segments_after_removal(root, prev_segs, affected)
     if rewritten:
-        new_segs.append(
-            _write_segment(
-                root,
-                rewritten,
-                _collect_file_stats(root, rewritten, scols)
-                if scols
-                else None,
-                _spec_partitions(rewritten, spec),
-                _columns_meta(
-                    prev_manifest["schema"]["fields"],
-                    schema_extra.get("column_ids") or {},
-                ),
-            )
-        )
-    if scols:
-        schema_extra["stats_cols"] = list(scols)
-    if spec:
-        schema_extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, schema_extra)
-    _carry_deletes(prev_manifest, schema_extra)
-    return _commit(root, parent, "delete", new_segs, schema_extra, ref)
+        new_segs.append(_new_segment(root, rewritten, extra))
+    return _commit(root, parent, "delete", new_segs, extra, ref)
 
 
 def commit_mor_delete(
@@ -1864,20 +1775,7 @@ def commit_mor_delete(
     # of two small columns — 16 writers keep the write parallel while
     # capping the per-commit delete-file count
     written = _write_data_files(positions.coalesce(16), root)
-    extra: dict = {"schema": prev_manifest["schema"]}
-    extra.update(
-        _ids_for_commit(prev_manifest, prev_manifest["schema"]["fields"])
-    )
-    if prev_manifest.get("stats_cols"):
-        extra["stats_cols"] = list(prev_manifest["stats_cols"])
-    if prev_manifest.get("partition_spec"):
-        extra["partition_spec"] = list(prev_manifest["partition_spec"])
-    _carry_cluster(prev_manifest, extra)
-    extra["delete_files"] = (
-        list(prev_manifest.get("delete_files") or []) + written
-    )
-    if prev_manifest.get("eq_delete_files"):
-        extra["eq_delete_files"] = list(prev_manifest["eq_delete_files"])
+    extra = _inherit(prev_manifest, delete_files=written)
     return _commit(root, parent, "delete-mor", prev_segs, extra, ref)
 
 
@@ -1937,20 +1835,7 @@ def commit_mor_delete_keys(
         "cols": cols,
         "scope_segments": list(prev_segs),
     }
-    extra: dict = {"schema": prev_manifest["schema"]}
-    extra.update(
-        _ids_for_commit(prev_manifest, prev_manifest["schema"]["fields"])
-    )
-    if prev_manifest.get("stats_cols"):
-        extra["stats_cols"] = list(prev_manifest["stats_cols"])
-    if prev_manifest.get("partition_spec"):
-        extra["partition_spec"] = list(prev_manifest["partition_spec"])
-    _carry_cluster(prev_manifest, extra)
-    if prev_manifest.get("delete_files"):
-        extra["delete_files"] = list(prev_manifest["delete_files"])
-    extra["eq_delete_files"] = list(
-        prev_manifest.get("eq_delete_files") or []
-    ) + [entry]
+    extra = _inherit(prev_manifest, eq_delete_files=[entry])
     _warn_read_amplification(len(extra["eq_delete_files"]), root)
     return _commit(root, parent, "delete-mor-eq", prev_segs, extra, ref)
 
@@ -2007,10 +1892,9 @@ def commit_mor_upsert(
         )
     _check_add_only(prev_manifest, df)
     prev_segs = list(prev_manifest["segments"])
-    scols = prev_manifest.get("stats_cols") or []
-    bcols = prev_manifest.get("bloom_cols") or []
-    spec = prev_manifest.get("partition_spec") or []
-    files = _write_data_files(df, root, spec or None)
+    files = _write_data_files(
+        df, root, prev_manifest.get("partition_spec")
+    )
     # Derive the key sidecar from the JUST-STAGED files, not from
     # ``df`` again: evaluating ``df`` twice re-executes its whole
     # upstream plan (for a CDC micro-batch, a second pass over the
@@ -2026,43 +1910,21 @@ def commit_mor_upsert(
     key_files = _write_data_files(
         key_src.dropDuplicates().coalesce(4), root
     )
-    stats = _collect_file_stats(root, files, scols) if scols else None
-    extra = _schema_extra(df)
-    ev = _ids_for_commit(prev_manifest, extra["schema"]["fields"])
-    extra.update(ev)
-    seg = _write_segment(
-        root,
-        files,
-        stats,
-        _spec_partitions(files, spec),
-        _columns_meta(
-            extra["schema"]["fields"], ev.get("column_ids") or {}
-        ),
-        _collect_file_blooms(root, files, bcols) if bcols else None,
+    extra = _inherit(
+        prev_manifest,
+        _fields(df),
+        eq_delete_files=[
+            {
+                "files": key_files,
+                "cols": list(key_cols),
+                "scope_segments": list(prev_segs),
+            }
+        ],
+        **(extra_meta or {}),  # e.g. the (stream_id, batch_id) ledger
     )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if bcols:
-        extra["bloom_cols"] = list(bcols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)  # position deletes; eq below
-    extra["eq_delete_files"] = list(
-        prev_manifest.get("eq_delete_files") or []
-    ) + [
-        {
-            "files": key_files,
-            "cols": list(key_cols),
-            "scope_segments": list(prev_segs),
-        }
-    ]
-    if extra_meta:
-        extra.update(extra_meta)  # e.g. the (stream_id, batch_id) ledger
     _warn_read_amplification(len(extra["eq_delete_files"]), root)
-    return _commit(
-        root, parent, "upsert-mor", prev_segs + [seg], extra, ref
-    )
+    segs = prev_segs + [_new_segment(root, files, extra)]
+    return _commit(root, parent, "upsert-mor", segs, extra, ref)
 
 
 def commit_overwrite_where(
@@ -2109,17 +1971,8 @@ def commit_overwrite_where(
     affected = {
         os.path.relpath(r["_src"], root) for r in affected_df.collect()
     }
-    scols = prev_manifest.get("stats_cols") or []
-    spec = prev_manifest.get("partition_spec") or []
-    extra = _schema_extra(df)
-    ev = _ids_for_commit(prev_manifest, extra["schema"]["fields"])
-    extra.update(ev)
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)
+    extra = _inherit(prev_manifest, _fields(df))
+    spec = extra.get("partition_spec")
     new_segs = _segments_after_removal(root, prev_segs, affected)
     if affected:
         survivors = (
@@ -2127,38 +1980,15 @@ def commit_overwrite_where(
             .filter(~hit)
             .drop("_src")
         )
-        rewritten = _write_data_files(survivors, root, spec or None)
+        rewritten = _write_data_files(survivors, root, spec)
         if rewritten:
+            # survivors keep the parent's columns (the insert may add)
             new_segs.append(
-                _write_segment(
-                    root,
-                    rewritten,
-                    _collect_file_stats(root, rewritten, scols)
-                    if scols
-                    else None,
-                    _spec_partitions(rewritten, spec),
-                    _columns_meta(
-                        prev_manifest["schema"]["fields"],
-                        ev.get("column_ids") or {},
-                    ),
-                )
+                _new_segment(root, rewritten, _inherit(prev_manifest))
             )
-    inserted = _write_data_files(df, root, spec or None)
+    inserted = _write_data_files(df, root, spec)
     if inserted:
-        new_segs.append(
-            _write_segment(
-                root,
-                inserted,
-                _collect_file_stats(root, inserted, scols)
-                if scols
-                else None,
-                _spec_partitions(inserted, spec),
-                _columns_meta(
-                    extra["schema"]["fields"],
-                    ev.get("column_ids") or {},
-                ),
-            )
-        )
+        new_segs.append(_new_segment(root, inserted, extra))
     return _commit(root, parent, "overwrite", new_segs, extra, ref)
 
 
@@ -2168,8 +1998,9 @@ def _segments_after_removal(
     """The COW carry rule every rewrite commit shares: untouched
     segments carry by NAME; partially-affected segments are replaced
     by one that lists only their kept files, with those files'
-    existing stats/partition tuples carried forward (files unchanged
-    -> metadata unchanged); fully-affected segments vanish."""
+    existing stats, partition tuples, blooms, row counts and
+    write-time columns carried forward; fully-affected segments
+    vanish."""
     new_segs: list[str] = []
     for seg in prev_segs:
         obj = _read_segment_obj(root, seg)
@@ -2178,20 +2009,14 @@ def _segments_after_removal(
         if len(kept) == len(seg_files):
             new_segs.append(seg)
         elif kept:
-            old_stats = obj.get("stats", {})
-            old_parts = obj.get("partitions", {})
-            new_segs.append(
-                _write_segment(
-                    root,
-                    kept,
-                    {f: old_stats[f] for f in kept if f in old_stats}
-                    or None,
-                    {f: old_parts[f] for f in kept if f in old_parts}
-                    or None,
-                    # files unchanged -> write-time columns unchanged
-                    obj.get("columns"),
-                )
-            )
+            # files unchanged -> metadata unchanged, footers unopened
+            meta = {
+                k: {f: obj[k][f] for f in kept if f in obj[k]}
+                for k in _FILE_KEYS
+                if k in obj
+            }
+            meta["columns"] = obj.get("columns")
+            new_segs.append(_write_segment(root, kept, meta))
     return new_segs
 
 
@@ -2232,8 +2057,6 @@ def commit_merge(
     prev_manifest = read_manifest(root, parent, ref)
     _check_add_only(prev_manifest, source)
     prev_segs = list(prev_manifest["segments"])
-    spec = prev_manifest.get("partition_spec") or []
-    scols = prev_manifest.get("stats_cols") or []
 
     # NULL-keyed source rows are excluded from the duplicate guard:
     # NULL keys never match any target row (SQL join semantics), so
@@ -2278,28 +2101,12 @@ def commit_merge(
     # null-fills the survivors' missing columns (the committed schema
     # below is the source's — readers resolve columns by name)
     incoming = survivors.unionByName(source, allowMissingColumns=True)
-    rewritten = _write_data_files(incoming, root, spec or None)
-    new_segs = _segments_after_removal(root, prev_segs, affected)
-    extra = _schema_extra(source)
-    ev = _ids_for_commit(prev_manifest, extra["schema"]["fields"])
-    extra.update(ev)
-    new_segs.append(
-        _write_segment(
-            root,
-            rewritten,
-            _collect_file_stats(root, rewritten, scols) if scols else None,
-            _spec_partitions(rewritten, spec),
-            _columns_meta(
-                extra["schema"]["fields"], ev.get("column_ids") or {}
-            ),
-        )
+    extra = _inherit(prev_manifest, _fields(source))
+    rewritten = _write_data_files(
+        incoming, root, extra.get("partition_spec")
     )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if spec:
-        extra["partition_spec"] = list(spec)
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)
+    new_segs = _segments_after_removal(root, prev_segs, affected)
+    new_segs.append(_new_segment(root, rewritten, extra))
     return _commit(root, parent, "merge", new_segs, extra, ref)
 
 
@@ -2329,8 +2136,6 @@ def commit_delete_keys(
         raise ValueError("cannot delete from an empty table or branch")
     prev_manifest = read_manifest(root, parent, ref)
     prev_segs = list(prev_manifest["segments"])
-    spec = prev_manifest.get("partition_spec") or []
-    scols = prev_manifest.get("stats_cols") or []
     kdf = keys.select(*key_cols).distinct()
     with_file = _read_files(
         spark, root, prev_manifest, prune=scan_prune, with_source=True
@@ -2343,42 +2148,20 @@ def commit_delete_keys(
     affected = {
         os.path.relpath(r["_src"], root) for r in affected_df.collect()
     }
-    extra: dict = {"schema": prev_manifest["schema"]}
-    extra.update(
-        _ids_for_commit(prev_manifest, prev_manifest["schema"]["fields"])
-    )
-    if scols:
-        extra["stats_cols"] = list(scols)
-    if spec:
-        extra["partition_spec"] = list(spec)
+    extra = _inherit(prev_manifest)
     if not affected:
-        _carry_cluster(prev_manifest, extra)
-        _carry_deletes(prev_manifest, extra)
         return _commit(root, parent, "delete", prev_segs, extra, ref)
     survivors = (
         with_file.join(F.broadcast(affected_df), "_src", "left_semi")
         .join(F.broadcast(kdf), key_cols, "left_anti")
         .drop("_src")
     )
-    rewritten = _write_data_files(survivors, root, spec or None)
+    rewritten = _write_data_files(
+        survivors, root, extra.get("partition_spec")
+    )
     new_segs = _segments_after_removal(root, prev_segs, affected)
     if rewritten:
-        new_segs.append(
-            _write_segment(
-                root,
-                rewritten,
-                _collect_file_stats(root, rewritten, scols)
-                if scols
-                else None,
-                _spec_partitions(rewritten, spec),
-                _columns_meta(
-                    prev_manifest["schema"]["fields"],
-                    extra.get("column_ids") or {},
-                ),
-            )
-        )
-    _carry_cluster(prev_manifest, extra)
-    _carry_deletes(prev_manifest, extra)
+        new_segs.append(_new_segment(root, rewritten, extra))
     return _commit(root, parent, "delete", new_segs, extra, ref)
 
 
@@ -2392,59 +2175,15 @@ def rollback_to(root: str, version: int) -> int:
     if not (1 <= version <= head):
         raise ValueError(f"no version {version} to roll back to")
     target = read_manifest(root, version)
-    segs = list(target["segments"])
-    extra: dict = {"rolled_back_to": version, "schema": target["schema"]}
-    if target.get("stats_cols"):
-        extra["stats_cols"] = list(target["stats_cols"])
-    if target.get("partition_spec"):
-        extra["partition_spec"] = list(target["partition_spec"])
     # rolling back across an evolution restores the target's schema
     # AND mapping; next_column_id stays at the table-wide max so a
     # retired ID is never re-minted
-    for k in (
-        "column_ids", "legacy_columns", "cluster_spec", "delete_files",
-        "eq_delete_files", "bloom_cols",
-    ):
-        if target.get(k):
-            extra[k] = target[k]
-    head_m = read_manifest(root, head)
-    nxt = max(
-        int(target.get("next_column_id") or 0),
-        int(head_m.get("next_column_id") or 0),
+    extra = _inherit(
+        target,
+        next_column_id=read_manifest(root, head).get("next_column_id"),
+        rolled_back_to=version,
     )
-    if nxt:
-        extra["next_column_id"] = nxt
-    return _commit(root, head, "rollback", segs, extra)
-
-
-def _carry_manifest_extras(src: dict, peer: dict | None = None) -> dict:
-    """The metadata a segment-carrying commit (branch fork, publish,
-    rollback) must inherit from its source manifest so readers of the
-    new commit resolve schema, stats, partition spec, cluster spec and
-    column-ID mapping exactly as they did at the source. When a
-    ``peer`` manifest is given (the destination chain's old head),
-    ``next_column_id`` is max-merged so a retired column ID is never
-    re-minted on either chain."""
-    extra: dict = {"schema": src["schema"]}
-    for k in (
-        "stats_cols",
-        "partition_spec",
-        "column_ids",
-        "legacy_columns",
-        "cluster_spec",
-        "delete_files",
-        "eq_delete_files",
-        "bloom_cols",
-    ):
-        if src.get(k):
-            extra[k] = src[k]
-    nxt = max(
-        int(src.get("next_column_id") or 0),
-        int((peer or {}).get("next_column_id") or 0),
-    )
-    if nxt:
-        extra["next_column_id"] = nxt
-    return extra
+    return _commit(root, head, "rollback", list(target["segments"]), extra)
 
 
 def create_branch(root: str, name: str, version: int | None = None) -> int:
@@ -2464,8 +2203,7 @@ def create_branch(root: str, name: str, version: int | None = None) -> int:
     if not (1 <= v <= head):
         raise ValueError(f"no trunk version {v} to branch from")
     src = read_manifest(root, v)
-    extra = _carry_manifest_extras(src)
-    extra["fork_version"] = v
+    extra = _inherit(src, fork_version=v)
     try:
         return _commit(
             root, 0, "branch", list(src["segments"]), extra, name
@@ -2592,12 +2330,15 @@ def publish_branch(
             "allow_diverged=True"
         )
     head_m = read_manifest(root, head) if head else {}
-    extra = _carry_manifest_extras(bm, head_m)
-    extra["published_from"] = {
-        "branch": name,
-        "branch_version": bh,
-        "fork_version": fork,
-    }
+    extra = _inherit(
+        bm,
+        next_column_id=head_m.get("next_column_id"),
+        published_from={
+            "branch": name,
+            "branch_version": bh,
+            "fork_version": fork,
+        },
+    )
     return _commit(
         root, head, "publish", list(bm["segments"]), extra
     )
@@ -3215,52 +2956,32 @@ def commit_with_retry(
 
 
 def _commit_segments_with_retry(
-    root: str,
-    op: str,
-    new_segments: list[str],
-    extra: dict | None = None,
-    ref: str = "main",
+    root: str, op: str, files: list[str], build, ref: str = "main"
 ) -> int:
-    """Append-shaped commit loop: on ConcurrentCommit, re-read the new
-    head and retry — new_segments are immutable, so only the carried
-    prefix changes. Write-once: the data AND segment files are staged
-    exactly once; each retry re-links an O(#segments) commit file.
+    """The commit loop for ALREADY-WRITTEN ``files`` (the DataSource
+    writers and `snapshot_sink`): each attempt reads the head and calls
+    ``build(parent_manifest) -> (carried segments, extra)``; the files'
+    segment is staged ONCE, under the first attempt's extra, and every
+    retry re-links an O(#segments) commit file on the new head. Data
+    and segment are written once; only the carried prefix and the
+    inherited metadata change.
 
-    stats_cols inheritance is re-derived from the CURRENT parent on
-    every attempt (merged with the caller's own): if a concurrent
-    commit establishes stats_cols between the caller's head read and
-    the winning retry, the inheritance guarantee ("once set, never
-    silently lapses") still holds for this and all later commits. The
-    already-staged segments may lack stats for the newly-inherited
-    columns — safe: stats-less files are conservatively never skipped."""
+    Because ``build`` derives ``extra`` from the CURRENT parent on
+    every attempt (`_inherit`), a stats/bloom opt-in or column-ID
+    mapping that a concurrent commit establishes before the winning
+    retry is inherited — "once set, never silently lapses" holds under
+    the race. The staged segment may then lack stats or blooms for
+    the newly inherited columns: stats-less files are conservatively
+    never skipped."""
+    seg = None
     while True:
         parent = current_version(root, ref)
         pm = read_manifest(root, parent, ref) if parent else {}
-        prev = list(pm["segments"]) if parent else []
-        attempt_extra = dict(extra or {})
-        own = list(attempt_extra.get("stats_cols") or [])
-        inherited = [
-            c for c in (pm.get("stats_cols") or []) if c not in own
-        ]
-        if own or inherited:
-            attempt_extra["stats_cols"] = own + inherited
-        if "partition_spec" not in attempt_extra and pm.get(
-            "partition_spec"
-        ):
-            attempt_extra["partition_spec"] = list(pm["partition_spec"])
-        _carry_cluster(pm, attempt_extra)
-        _carry_deletes(pm, attempt_extra)
-        # column-ID inheritance mirrors stats_cols: if a concurrent
-        # commit established IDs between the caller's head read and
-        # the winning retry, re-derive the mapping from the current
-        # parent so the ID lineage never silently lapses
-        if "column_ids" not in attempt_extra and pm.get("column_ids"):
-            fields = attempt_extra.get("schema", {}).get("fields", [])
-            attempt_extra.update(_ids_for_commit(pm, fields))
+        carried, extra = build(pm)
+        if seg is None:
+            seg = _new_segment(root, files, extra)
         try:
-            return _commit(
-                root, parent, op, prev + new_segments, attempt_extra, ref
-            )
+            return _commit(root, parent, op, carried + [seg], extra, ref)
         except ConcurrentCommit:
             continue
 
@@ -3272,7 +2993,9 @@ def snapshot_sink(root: str, stream_id: str):
     the manifest link and the checkpoint commit) is recognized and
     skipped. A crash between the data write and the manifest link
     re-runs the batch — the first attempt's files are unreferenced
-    orphans, never double-counted. Usage:
+    orphans, never double-counted. A batch that drops or retypes a
+    committed column raises `SchemaEvolutionError`, like any append.
+    Usage:
 
         stream.writeStream.foreachBatch(snapshot_sink(root, sid))
               .option("checkpointLocation", ckpt)
@@ -3285,28 +3008,17 @@ def snapshot_sink(root: str, stream_id: str):
         create_table(root)
         head = current_version(root)
         hm = read_manifest(root, head) if head else {}
-        scols = hm.get("stats_cols") or []
-        spec = hm.get("partition_spec") or []
-        files = _write_data_files(batch_df, root, spec or None)
-        extra = {
-            "stream_id": stream_id,
-            "batch_id": batch_id,
-            **_schema_extra(batch_df),
-        }
-        ev = _ids_for_commit(hm, extra["schema"]["fields"])
-        extra.update(ev)
-        seg = _write_segment(
-            root,
-            files,
-            _collect_file_stats(root, files, scols) if scols else None,
-            _spec_partitions(files, spec),
-            _columns_meta(
-                extra["schema"]["fields"], ev.get("column_ids") or {}
-            ),
-        )
-        if scols:
-            extra["stats_cols"] = list(scols)
-        _commit_segments_with_retry(root, "append", [seg], extra)
+        files = _write_data_files(batch_df, root, hm.get("partition_spec"))
+        fields = _fields(batch_df)
+
+        def build(pm: dict) -> tuple[list[str], dict]:
+            _check_add_only_fields(pm, fields)
+            extra = _inherit(
+                pm, fields, stream_id=stream_id, batch_id=batch_id
+            )
+            return pm.get("segments", []), extra
+
+        _commit_segments_with_retry(root, "append", files, build)
 
     return write_batch
 
@@ -3465,25 +3177,14 @@ def compact(
         )
     else:
         rewritten = _write_data_files(df.coalesce(target_files), root)
-    scols = base_manifest.get("stats_cols") or []
-    bcols = base_manifest.get("bloom_cols") or []
-    written_schema = json.loads(df.schema.json())
-    folded_ids = _ids_for_commit(base_manifest, written_schema["fields"])
-    folded_seg = _write_segment(
+    # the fold physically rewrites rows under the base's COMMITTED
+    # schema (+ the cluster cell column) — evolution collapses out of
+    # the rewritten files
+    written = _fields(df)
+    folded_seg = _new_segment(
         root,
         rewritten,
-        _collect_file_stats(root, rewritten, scols) if scols else None,
-        _spec_partitions(rewritten, spec),
-        # the fold physically rewrites rows under the base's COMMITTED
-        # schema (+ the cluster cell column) — evolution collapses out
-        # of the rewritten files
-        _columns_meta(
-            written_schema["fields"],
-            folded_ids.get("column_ids")
-            or base_manifest.get("column_ids")
-            or {},
-        ),
-        _collect_file_blooms(root, rewritten, bcols) if bcols else None,
+        _inherit(base_manifest, written, partition_spec=spec),
     )
     while True:
         head = current_version(root)
@@ -3526,37 +3227,22 @@ def compact(
             )
         # segments added since the compacted base
         added_segs = [s for s in head_segs if s not in base_segs]
-        extra = {"schema": head_manifest["schema"]}
+        fields = head_manifest["schema"]["fields"]
         if cluster_spec is not None:
             # clustered fold: the committed schema is the head's plus
-            # the derived cell column, spec becomes the cell
-            fields = [
-                f
-                for f in head_manifest["schema"]["fields"]
-                if f["name"] != cell_col
-            ] + [
-                next(
-                    f
-                    for f in written_schema["fields"]
-                    if f["name"] == cell_col
-                )
+            # the derived cell column
+            fields = [f for f in fields if f["name"] != cell_col] + [
+                f for f in written if f["name"] == cell_col
             ]
-            extra["schema"] = {"type": "struct", "fields": fields}
-            extra["cluster_spec"] = cluster_spec
-        extra.update(
-            _ids_for_commit(head_manifest, extra["schema"]["fields"])
+        extra = _inherit(
+            head_manifest,
+            fields,
+            clear=("delete_files", "eq_delete_files"),
+            # a clustered fold records the cell as the spec, and shifts
+            partition_spec=spec if cluster_spec else None,
+            cluster_spec=cluster_spec,
+            sort_spec=list(sort_by) if sort_by else None,
         )
-        if head_manifest.get("stats_cols"):
-            extra["stats_cols"] = list(head_manifest["stats_cols"])
-        if head_manifest.get("bloom_cols"):
-            extra["bloom_cols"] = list(head_manifest["bloom_cols"])
-        if cluster_spec is not None:
-            extra["partition_spec"] = list(spec)
-        elif head_manifest.get("partition_spec"):
-            extra["partition_spec"] = list(head_manifest["partition_spec"])
-        if sort_by:
-            extra["sort_spec"] = list(sort_by)
-        _carry_cluster(head_manifest, extra)
         try:
             return _commit(
                 root,

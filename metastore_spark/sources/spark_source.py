@@ -675,9 +675,10 @@ class _SnapshotBatchWriter(DataSourceArrowWriter):
     `snapshots.commit_append_files` (mode=append) or
     `commit_overwrite_files` (mode=overwrite) — one atomic manifest
     commit, add-only schema contract, stats/bloom/partition specs
-    inherited from the head. First write on a NEW table may seed the
-    specs via writer options ``partition_by`` / ``stats_cols`` /
-    ``bloom_cols`` (comma-separated column lists).
+    inherited from the head (`snapshots._inherit`). Writer options
+    ``stats_cols`` / ``bloom_cols`` add columns to the table's opt-ins;
+    ``partition_by`` seeds a new table's spec (comma-separated column
+    lists).
     ``option("ref", <branch>)`` appends to a branch created by
     `create_branch` — write-audit-publish through ``df.write``
     (Iceberg's WAP); overwrite stays trunk-only (publishing a branch

@@ -32,6 +32,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from metastore_spark.streaming.gens import (
+    _gen_below,
+    _latest_gen,
+    _prune_gens,
+)
 from metastore_spark.ts import ts_us
 
 # Canonical wire shape (current testdata: parquet timestamp[us] →
@@ -176,32 +181,23 @@ def cdc_apply_stream(
     an append-only change feed, via foreachBatch generation swapping.
 
     Each micro-batch compacts to its per-user latest row (max_by over
-    the (event-time, event_id) total order), merges with the current
-    state generation, and writes generation N+1 — readers always open
-    the highest complete generation, the writer never overwrites the
-    files it is reading (the atomic-swap discipline a real lakehouse
-    MERGE INTO encodes). Because the per-key latest under a total
-    order is associative over batches, the final state equals the
-    batch computation regardless of how the feed splits into
-    micro-batches. Returns the final generation's path.
+    the (event-time, event_id) total order), merges with the newest
+    state generation below its batch id, and writes ``gen=<batch_id>``
+    (streaming/gens.py) — readers always open the highest complete
+    generation, the writer never overwrites the files it is reading
+    (the atomic-swap discipline a real lakehouse MERGE INTO encodes),
+    and a replayed batch rebuilds from the same predecessor. Because
+    the per-key latest under a total order is associative over
+    batches, the final state equals the batch computation regardless
+    of how the feed splits into micro-batches. Returns the final
+    generation's path.
 
     At scale: each merge shuffles |state-keys| + |batch-keys| rows on
     the key — the state table would be bucketed by key so the merge
-    co-locates; generations are retained for time travel / rollback
-    and pruned by retention policy.
+    co-locates. Only the newest generation and its predecessor are
+    kept.
     """
     import os
-
-    def _gens() -> list[int]:
-        if not os.path.isdir(state_root):
-            return []
-        out = []
-        for d in os.listdir(state_root):
-            if d.startswith("gen=") and os.path.exists(
-                os.path.join(state_root, d, "_SUCCESS")
-            ):
-                out.append(int(d.split("=")[1]))
-        return sorted(out)
 
     stream = read_event_stream(spark, src_path, max_files_per_trigger)
 
@@ -218,11 +214,9 @@ def cdc_apply_stream(
         latest = b.groupBy("user_id").agg(
             F.max_by(payload, ord_col).alias("st")
         )
-        gens = _gens()
-        if gens:
-            cur = spark.read.parquet(
-                os.path.join(state_root, f"gen={gens[-1]}")
-            )
+        prev = _gen_below(state_root, batch_id)
+        if prev:
+            cur = spark.read.parquet(prev)
             # state rows re-enter the same max_by under the same total
             # order — idempotent, associative merge
             reord = F.struct(
@@ -233,10 +227,10 @@ def cdc_apply_stream(
                 .groupBy("user_id")
                 .agg(F.max_by(F.col("st"), reord).alias("st"))
             )
-        nxt = (gens[-1] + 1) if gens else 0
         latest.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"gen={nxt}")
+            os.path.join(state_root, f"gen={batch_id}")
         )
+        _prune_gens(state_root, batch_id)
 
     q = (
         stream.writeStream.foreachBatch(merge)
@@ -247,5 +241,5 @@ def cdc_apply_stream(
         .start()
     )
     q.awaitTermination()
-    gens = _gens()
-    return os.path.join(state_root, f"gen={gens[-1]}") if gens else ""
+    final = _latest_gen(state_root)
+    return "" if final is None else os.path.join(state_root, f"gen={final}")

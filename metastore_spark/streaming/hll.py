@@ -5,12 +5,12 @@ micro-batches.
 The register MAX is associative, commutative, and idempotent, so the
 drained state is provably independent of how the feed was batched,
 ordered, or replayed — the property that makes HLL the sketch of
-choice for streaming cardinality. The store follows the same
-generation-swap discipline as streaming/neardup.py: each batch writes
-registers to ``gen=<batch_id>`` after merging with the newest
-generation BELOW its id, so an at-least-once replay rebuilds from the
-same predecessor the first attempt saw and converges to the identical
-state.
+choice for streaming cardinality. The store follows the
+generation-swap discipline every streaming store shares
+(streaming/gens.py): each batch writes registers to ``gen=<batch_id>``
+after merging with the newest generation BELOW its id, so an
+at-least-once replay rebuilds from the same predecessor the first
+attempt saw and converges to the identical state.
 
 After the drain, the estimate over the final registers must equal the
 batch computation on the raw corpus (the ``events_user_hll_registers``
@@ -24,22 +24,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from metastore_spark.operators import hll
-from metastore_spark.streaming.neardup import _all_gens, _latest_gen
-
-
-def _prune_gens(reg_root: str, newest: int) -> None:
-    """Bound state: after gen=``newest`` lands, drop every generation
-    below ``newest - 1``. A replayed batch id B rebuilds from the
-    newest generation BELOW B; availableNow replays only re-run the
-    last in-flight batch, so one predecessor suffices — without this a
-    long-lived stream accumulates one full register copy per batch."""
-    import shutil
-
-    for g in _all_gens(reg_root):
-        if g < newest - 1:
-            shutil.rmtree(
-                os.path.join(reg_root, f"gen={g}"), ignore_errors=True
-            )
+from metastore_spark.streaming.gens import (
+    _gen_below,
+    _latest_gen,
+    _prune_gens,
+)
 
 
 def apply_hll_batch(
@@ -54,10 +43,9 @@ def apply_hll_batch(
     the newest generation below this batch id; module-level so tests
     can REPLAY a batch directly and assert idempotence."""
     delta = hll.day_registers(batch_df, ts_col, key_col)
-    gens = [g for g in _all_gens(reg_root) if g < batch_id]
-    if gens:
-        prev = spark.read.parquet(os.path.join(reg_root, f"gen={max(gens)}"))
-        merged = hll.merge_registers(prev, delta)
+    prev = _gen_below(reg_root, batch_id)
+    if prev:
+        merged = hll.merge_registers(spark.read.parquet(prev), delta)
     else:
         merged = delta
     merged.write.mode("overwrite").parquet(
@@ -120,11 +108,11 @@ def apply_histogram_batch(
         .groupBy("d", "b")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    gens = [g for g in _all_gens(reg_root) if g < batch_id]
-    if gens:
-        prev = spark.read.parquet(os.path.join(reg_root, f"gen={max(gens)}"))
+    prev = _gen_below(reg_root, batch_id)
+    if prev:
         merged = (
-            prev.unionByName(delta)
+            spark.read.parquet(prev)
+            .unionByName(delta)
             .groupBy("d", "b")
             .agg(F.sum("cnt").alias("cnt"))
         )

@@ -38,22 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metastore_spark.dedup import ops as dd
-
-
-def _all_gens(root: str) -> list[int]:
-    if not os.path.isdir(root):
-        return []
-    return [
-        int(d.split("=")[1])
-        for d in os.listdir(root)
-        if d.startswith("gen=")
-        and os.path.exists(os.path.join(root, d, "_SUCCESS"))
-    ]
-
-
-def _latest_gen(root: str) -> int | None:
-    gens = _all_gens(root)
-    return max(gens) if gens else None
+from metastore_spark.streaming.gens import (
+    _gen_below,
+    _latest_gen,
+    _prune_gens,
+)
 
 
 def apply_neardup_batch(
@@ -126,21 +115,13 @@ def apply_neardup_batch(
     )
     # predecessor = newest generation BELOW this batch id, so a
     # replayed batch rebuilds from the same input it saw first time
-    gens = [
-        g
-        for g in (
-            _all_gens(labels_root) if os.path.isdir(labels_root) else []
-        )
-        if g < batch_id
-    ]
+    prev = _gen_below(labels_root, batch_id)
     new_labels = batch.select("doc_id").withColumn(
         "dup_of_history", F.lit(False)
     )
     labels = (
-        spark.read.parquet(
-            os.path.join(labels_root, f"gen={max(gens)}")
-        ).unionByName(new_labels)
-        if gens
+        spark.read.parquet(prev).unionByName(new_labels)
+        if prev
         else new_labels
     )
     merged = (
@@ -155,6 +136,7 @@ def apply_neardup_batch(
     merged.write.mode("overwrite").parquet(
         os.path.join(labels_root, f"gen={batch_id}")
     )
+    _prune_gens(labels_root, batch_id)
     # write AFTER the label job consumed allsigs (overwrite of the
     # batch-keyed subdir = replay-idempotent)
     delta.write.mode("overwrite").parquet(

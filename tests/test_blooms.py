@@ -105,8 +105,9 @@ def test_bloom_survives_rename_probe_under_new_name(spark, tmp_path):
 
 
 def test_unbloomed_rewrites_are_conservative(spark, tmp_path):
-    """A COW rewrite doesn't rebuild blooms (compaction does); its
-    files must simply never be skipped."""
+    """A COW rewrite carries the bloom opt-in and builds blooms for
+    the files it writes (like every commit, through the one segment
+    writer); a probe for a surviving key must still find its row."""
     root = _store(spark, tmp_path, n=10000)
     snap.commit_delete_where(spark, root, F.col("uid") % 1000 == 7)
     m = snap.read_manifest(root, 2)

@@ -137,7 +137,7 @@ def _open_fixture(spark, sf):
 _KINDS = {
     "serve": ("race", "events", _open_parquet_store),
     "tables": ("race", "events", _open_snapshot_store),
-    "serving_index": ("docs-segment", "documents", _open_index),
+    "serving_index": ("docs-typed", "documents", _open_index),
     "events_by_day": ("events", "events", _open_layout),
     "snapshots": ("events-owbase1", "events", _open_fixture),
 }

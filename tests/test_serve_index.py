@@ -116,14 +116,15 @@ def test_index_for_detects_rewritten_corpus(spark, tmp_path, monkeypatch):
     idx2 = qs._index_for(spark, sf_dir)
     assert idx2.num_docs == 2  # stale index must NOT be served
     siblings = os.listdir(os.path.join(serve._WAREHOUSE, "serving_index"))
-    assert len(siblings) == 1 and siblings[0].startswith("docs-segment-")
+    assert len(siblings) == 1 and siblings[0].startswith("docs-typed-")
 
 
 def test_served_search_reads_one_segment(spark, tmp_path, monkeypatch):
     """Reopening the served index and ranking `search_bm25_docs`'s
-    top-20 takes 7 Spark jobs: one schema read per segment table plus
-    the query's own. The segment's df is exact, so its docfreq is read
-    as written, with no aggregate."""
+    top-20 takes 4 Spark jobs, the query's own: the segment's tables
+    open under the schemas its stats.json records, with no inference
+    job. The segment's df is exact, so its docfreq is read as written,
+    with no aggregate."""
     from metastore_spark import queries_search as qs
     from metastore_spark import serve
 
@@ -141,7 +142,7 @@ def test_served_search_reads_one_segment(spark, tmp_path, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 20
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
 
     idx = qs._index_for(spark, sf)
     plan = idx.docfreq._jdf.queryExecution().executedPlan().toString()

@@ -371,18 +371,18 @@ def test_publish_loses_put_if_absent_race(spark, tmp_path, monkeypatch):
     root = _table(spark, tmp_path)
     snap.create_branch(root, "b")
     snap.commit_delete_where(spark, root, F.col("g") == 1, ref="b")
-    orig = snap._carry_manifest_extras
+    orig = snap._inherit
     state = {"raced": False}
 
-    def hooked(src, peer=None):
-        out = orig(src, peer)
-        if not state["raced"] and peer is not None:
+    def hooked(parent, *args, **own):
+        out = orig(parent, *args, **own)
+        if not state["raced"] and "published_from" in own:
             state["raced"] = True
-            monkeypatch.setattr(snap, "_carry_manifest_extras", orig)
+            monkeypatch.setattr(snap, "_inherit", orig)
             snap.commit_append(spark, root, _df(spark, 90, 95))
         return out
 
-    monkeypatch.setattr(snap, "_carry_manifest_extras", hooked)
+    monkeypatch.setattr(snap, "_inherit", hooked)
     with pytest.raises(snap.ConcurrentCommit):
         snap.publish_branch(root, "b")
     # the racer's append is the head, untouched

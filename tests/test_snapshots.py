@@ -65,7 +65,7 @@ def test_concurrent_commit_rejected(spark, tmp_path):
     # a racing writer advances the head between our parent snapshot
     # and our pointer swap
     files = snap._write_data_files(_df(spark, 10, 20), root)
-    seg = snap._write_segment(root, files)
+    seg = snap._new_segment(root, files, {})
     snap.commit_append(spark, root, _df(spark, 20, 30))  # the racer wins
     with pytest.raises(snap.ConcurrentCommit):
         snap._commit(root, parent=1, op="append", segments=[seg])
@@ -436,7 +436,7 @@ def test_vacuum_reclaims_crashed_commit_preserves_versions(spark, tmp_path):
     # inject the crash window: data written, segment written, tmp
     # manifest staged — death before os.link
     files = snap._write_data_files(_df(spark, 500, 600), root)
-    seg = snap._write_segment(root, files)
+    seg = snap._new_segment(root, files, {})
     reaped = subprocess.Popen(["true"])
     reaped.wait()
     tmp_manifest = os.path.join(
@@ -623,7 +623,7 @@ def _race_worker(args):
 
     out = []
     for i in range(5):
-        seg = s._write_segment(root, [f"data/w{w}-{i}.parquet"])
+        seg = s._new_segment(root, [f"data/w{w}-{i}.parquet"], {})
 
         def attempt(seg=seg):
             parent = s.current_version(root)
@@ -665,24 +665,33 @@ def test_segment_commit_loop_inherits_concurrent_stats_cols(
     spark, tmp_path
 ):
     """ADVICE r7 (low): stats_cols established by a concurrent commit
-    must be inherited by a stream commit whose own extra predates it —
-    `_commit_segments_with_retry` re-derives inheritance from the
+    must be inherited by a stream commit whose first attempt predates
+    it — `_commit_segments_with_retry` re-derives inheritance from the
     CURRENT parent each attempt, so the 'never silently lapses'
     guarantee holds under the race."""
     root = str(tmp_path / "t")
-    # v1 establishes stats_cols AFTER the sink would have read the
-    # (empty) head — simulate by committing it first and calling the
-    # loop with extra that carries none
-    snap.commit_append(spark, root, _df(spark, 0, 10), stats_cols=["k"])
+    snap.commit_append(spark, root, _df(spark, 0, 10))
     files = snap._write_data_files(_df(spark, 10, 20), root)
-    seg = snap._write_segment(root, files)
-    v2 = snap._commit_segments_with_retry(
-        root, "append", [seg], {"stream_id": "s", "batch_id": 0}
-    )
-    assert snap.read_manifest(root, v2)["stats_cols"] == ["k"]
-    # and a later plain append keeps inheriting
-    v3 = snap.commit_append(spark, root, _df(spark, 20, 30))
+    parents = []
+
+    def build(pm):
+        if not parents:
+            # the racer lands between this attempt's head read and link
+            snap.commit_append(
+                spark, root, _df(spark, 20, 30), stats_cols=["k"]
+            )
+        parents.append(pm["version"])
+        return pm["segments"], snap._inherit(
+            pm, stream_id="s", batch_id=0
+        )
+
+    v3 = snap._commit_segments_with_retry(root, "append", files, build)
+    assert parents == [1, 2]  # lost once, re-derived on the new head
     assert snap.read_manifest(root, v3)["stats_cols"] == ["k"]
+    assert snap.read_snapshot(spark, root, v3).count() == 30
+    # and a later plain append keeps inheriting
+    v4 = snap.commit_append(spark, root, _df(spark, 30, 40))
+    assert snap.read_manifest(root, v4)["stats_cols"] == ["k"]
 
 
 def _cells_df(spark, lo, hi):

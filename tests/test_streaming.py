@@ -1,5 +1,7 @@
 """Streaming pipeline tests: availableNow drain must equal batch."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -401,6 +403,51 @@ def test_neardup_batch_replay_is_idempotent(spark, tmp_path):
     assert snapshot() == before
     assert dict(before[0]) == {1: False, 2: False, 7: True}
     assert before[1] == [1, 2, 7]
+    # a 4-batch drain keeps only the newest generation and its
+    # predecessor, not one labels copy per batch
+    for bid, doc in ((2, 8), (3, 9)):
+        apply_neardup_batch(
+            spark,
+            spark.createDataFrame([(doc, "en", "c", f"words of {doc}")], cols),
+            bid,
+            sig_store,
+            labels_root,
+        )
+    gens = sorted(d for d in os.listdir(labels_root) if d.startswith("gen="))
+    assert gens == ["gen=2", "gen=3"]
+    assert {
+        r["doc_id"]
+        for r in spark.read.parquet(f"{labels_root}/gen=3").collect()
+    } == {1, 2, 7, 8, 9}
+
+
+def test_cdc_apply_stream_keeps_two_generations(
+    spark, stream_dir, tmp_path
+):
+    """The CDC apply names each generation by its batch id and keeps
+    only the newest and its predecessor; the drained state still
+    equals the batch latest-per-user."""
+    state = str(tmp_path / "state")
+    final = ev.cdc_apply_stream(
+        spark, stream_dir, state, max_files_per_trigger=1
+    )
+    gens = sorted(d for d in os.listdir(state) if d.startswith("gen="))
+    assert gens == ["gen=2", "gen=3"] and final.endswith("gen=3")
+    raw = spark.read.parquet(stream_dir)
+    us = F.unix_micros(ev.event_time_col(raw))
+    want = {
+        r["user_id"]: r["e"]
+        for r in raw.groupBy("user_id")
+        .agg(F.max_by("event_id", F.struct(us, F.col("event_id"))).alias("e"))
+        .collect()
+    }
+    got = {
+        r["user_id"]: r["e"]
+        for r in spark.read.parquet(final)
+        .select("user_id", F.col("st.event_id").alias("e"))
+        .collect()
+    }
+    assert got == want
 
 
 def test_hll_batch_replay_and_batching_invariance(spark, tmp_path):
