@@ -15,7 +15,8 @@ manifest head, not listing a directory mid-write. `load_table` serves
 ``events`` from a snapshot-format table (built once per corpus
 content via `serve.snapshot_store`, reopened forever); the raw scan
 remains the fallback when the warehouse is unwritable and the
-explicit opt-out for debugging (``SPARK_GRAFT_RAW_TABLES=1``).
+explicit opt-out for debugging (``SPARK_GRAFT_RAW_TABLES=1``; ``0`` or
+unset is the snapshot path, any other value raises).
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from metastore_spark.session import env_setting
 from metastore_spark.ts import normalize_ts
 
 TABLES = (
@@ -114,9 +116,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     encoding (timestamp[us] vs legacy bigint nanos) — at commit time
     on the snapshot path, at scan time on the raw path.
     """
-    if name in SNAPSHOT_KINDS and not os.environ.get(
-        "SPARK_GRAFT_RAW_TABLES"
-    ):
+    if name in SNAPSHOT_KINDS and env_setting("SPARK_GRAFT_RAW_TABLES") == "0":
         root = snapshot_root(spark, sf_dir, name)
         if root is not None:
             from metastore_spark.sources import snapshots

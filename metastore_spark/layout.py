@@ -142,56 +142,6 @@ def ensure_bucketed_facts(
     return out
 
 
-def zorder_value(a: Column, b: Column, bits: int = 16) -> Column:
-    """Morton (Z-order) interleave of two non-negative integer columns:
-    bit i of `a` lands at position 2i, bit i of `b` at 2i+1.
-
-    Sorting by this single value clusters rows so that BOTH dimensions
-    have locality — parquet row-group min/max stats then become tight
-    on either column, and a predicate on just one of them skips most
-    row groups. Pure codegen (shift/and/or chain, 2*bits terms); at
-    more than two dimensions the same construction interleaves
-    round-robin."""
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(
-                F.shiftright(a.cast("long"), i).bitwiseAND(F.lit(1)), 2 * i
-            )
-        )
-        z = z.bitwiseOR(
-            F.shiftleft(
-                F.shiftright(b.cast("long"), i).bitwiseAND(F.lit(1)),
-                2 * i + 1,
-            )
-        )
-    return z
-
-
-def write_events_zordered(
-    df: DataFrame,
-    path: str,
-    c1: str = "user_id",
-    c2: str = "event_id",
-    n_files: int = 8,
-) -> None:
-    """Rewrite a table Z-ordered on (c1, c2): range-partition by the
-    interleaved key, sort within partitions, one file per range.
-
-    This is the data-skipping compaction step a 100 TB table runs
-    periodically: scans filtered on EITHER clustered column read the
-    few row groups whose min/max intervals intersect the predicate
-    (verified against real parquet footer stats in
-    tests/test_layout_zorder.py) instead of the whole table."""
-    out = (
-        df.withColumn("_z", zorder_value(F.col(c1), F.col(c2)))
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    out.write.mode("overwrite").parquet(path)
-
-
 def compact_parquet(
     spark: SparkSession,
     src: str,

@@ -596,6 +596,48 @@ def _inherit(
     return extra
 
 
+# Inherited keys that name columns: (key, the fields of its value that
+# do — None when the value is itself a name list —, whether a drop is
+# refused). A rename follows into every one. The opt-in lists forget a
+# dropped column; the layout specs refuse it, since their files were
+# laid out by its values.
+_NAME_BOUND = (
+    ("stats_cols", None, False),
+    ("bloom_cols", None, False),
+    ("partition_spec", None, True),
+    ("cluster_spec", ("cols", "cell_col"), True),
+)
+
+
+def _rebind(m: dict, moved: dict[str, str | None]) -> dict:
+    """The name-bound keys of manifest ``m`` with ``moved`` applied
+    (old name -> new name, or None for a dropped column)."""
+
+    def move(key: str, refuse_drop: bool, names: list[str]) -> list[str]:
+        gone = [c for c in names if c in moved and moved[c] is None]
+        if gone and refuse_drop:
+            raise SchemaEvolutionError(
+                f"column(s) {gone} are in the table's {key}; evolve the "
+                "spec before dropping them"
+            )
+        return [moved.get(c, c) for c in names if c not in gone]
+
+    out = {}
+    for key, fields, refuse_drop in _NAME_BOUND:
+        val = m.get(key)
+        if not val:
+            continue
+        if fields is None:
+            out[key] = move(key, refuse_drop, val)
+            continue
+        out[key] = dict(val)
+        for f in fields:
+            one = isinstance(val[f], str)
+            names = move(key, refuse_drop, [val[f]] if one else val[f])
+            out[key][f] = names[0] if one else names
+    return out
+
+
 # ---- column-ID schema evolution ------------------------------------
 #
 # Iceberg's idea, expressed in manifest JSON: every column gets a
@@ -634,9 +676,10 @@ def _columns_meta(fields: list[dict], ids: dict | None) -> dict | None:
 
 def _evolve(root: str, transform) -> int:
     """Shared metadata-only evolution commit: ``transform(schema,
-    ids, spec, scols)`` mutates-and-returns the four pieces; segments
-    carry by name, so the commit is O(#segments) regardless of table
-    size."""
+    ids)`` mutates-and-returns both plus the columns it moved
+    ({old: new, or None when dropped}), which `_rebind` applies to
+    every name-bound key; segments carry by name, so the commit is
+    O(#segments) regardless of table size."""
     head = current_version(root)
     if not head:
         raise ValueError("cannot evolve an empty table")
@@ -656,12 +699,7 @@ def _evolve(root: str, transform) -> int:
             f["name"]: {"id": ids[f["name"]], "type": f["type"]}
             for f in schema["fields"]
         }
-    schema, ids, spec, scols = transform(
-        schema,
-        ids,
-        list(m.get("partition_spec") or []),
-        list(m.get("stats_cols") or []),
-    )
+    schema, ids, moved = transform(schema, ids)
     # live equality-delete key files bind column NAMES at their
     # commit time — renaming or dropping a referenced key column
     # would silently detach the delete from its rows
@@ -692,8 +730,7 @@ def _evolve(root: str, transform) -> int:
         column_ids=ids,
         next_column_id=int(nxt),
         legacy_columns=legacy,
-        partition_spec=spec,
-        stats_cols=scols,
+        **_rebind(m, moved),
     )
     segs = list(m["segments"])
     return _commit(root, head, "evolve", segs, _inherit(evolved))
@@ -702,9 +739,9 @@ def _evolve(root: str, transform) -> int:
 def rename_column(root: str, old: str, new: str) -> int:
     """Rename ``old`` to ``new`` (metadata-only). Old files keep the
     old physical name; readers resolve them through the column's ID.
-    Partition-spec and stats-cols references follow the rename."""
+    Every name-bound key (`_NAME_BOUND`) follows the rename."""
 
-    def transform(schema, ids, spec, scols):
+    def transform(schema, ids):
         names = [f["name"] for f in schema["fields"]]
         if old not in names:
             raise SchemaEvolutionError(f"no column {old!r} to rename")
@@ -714,9 +751,7 @@ def rename_column(root: str, old: str, new: str) -> int:
             if f["name"] == old:
                 f["name"] = new
         ids[new] = ids.pop(old)
-        spec = [new if c == old else c for c in spec]
-        scols = [new if c == old else c for c in scols]
-        return schema, ids, spec, scols
+        return schema, ids, {old: new}
 
     return _evolve(root, transform)
 
@@ -725,27 +760,21 @@ def drop_column(root: str, name: str) -> int:
     """Drop ``name`` (metadata-only; the bytes stay in old files but
     no reader resolves them — retention GC reclaims rewrites). The ID
     retires permanently: a later add of the same name gets a FRESH ID,
-    so old files' bytes can never leak into the new column. Partition
-    columns must be un-spec'd first (their values are baked into the
-    data layout)."""
+    so old files' bytes can never leak into the new column. The stats
+    and bloom opt-ins forget it; partition and cluster columns must be
+    un-spec'd first (their values are baked into the data layout)."""
 
-    def transform(schema, ids, spec, scols):
+    def transform(schema, ids):
         names = [f["name"] for f in schema["fields"]]
         if name not in names:
             raise SchemaEvolutionError(f"no column {name!r} to drop")
         if len(names) == 1:
             raise SchemaEvolutionError("cannot drop the only column")
-        if name in spec:
-            raise SchemaEvolutionError(
-                f"column {name!r} is in the partition spec; evolve the "
-                "spec before dropping it"
-            )
         schema["fields"] = [
             f for f in schema["fields"] if f["name"] != name
         ]
         ids.pop(name, None)
-        scols = [c for c in scols if c != name]
-        return schema, ids, spec, scols
+        return schema, ids, {name: None}
 
     return _evolve(root, transform)
 
@@ -756,7 +785,7 @@ def widen_column(root: str, name: str, new_type: str) -> int:
     Old files keep the narrow physical type; readers cast up, so
     every historical value round-trips exactly."""
 
-    def transform(schema, ids, spec, scols):
+    def transform(schema, ids):
         for f in schema["fields"]:
             if f["name"] == name:
                 if (f["type"], new_type) not in _WIDENINGS:
@@ -765,7 +794,7 @@ def widen_column(root: str, name: str, new_type: str) -> int:
                         f"{new_type!r}; allowed: {sorted(_WIDENINGS)}"
                     )
                 f["type"] = new_type
-                return schema, ids, spec, scols
+                return schema, ids, {}
         raise SchemaEvolutionError(f"no column {name!r} to widen")
 
     return _evolve(root, transform)

@@ -38,10 +38,12 @@ def _frame(spark, lo, hi, parts=2):
 def parent_table(spark, tmp_path_factory):
     """A head that sets every inherited key: a stats opt-in, a
     clustered compaction's partition and cluster specs, column IDs
-    from a rename, position and equality deletes, then a bloom opt-in
-    added by an append."""
+    from a rename (of a stats column), position and equality deletes,
+    then a bloom opt-in added by an append."""
     root = str(tmp_path_factory.mktemp("inherit") / "t")
-    snap.commit_append(spark, root, _frame(spark, 0, 40), stats_cols=["k"])
+    snap.commit_append(
+        spark, root, _frame(spark, 0, 40), stats_cols=["k", "v"]
+    )
     snap.compact(spark, root, cluster_by=["x", "y"])
     snap.rename_column(root, "v", "val")
     snap.commit_mor_delete(spark, root, F.col("k") == 1)
@@ -130,7 +132,6 @@ _OPS = {
     "rollback": lambda spark, r: snap.rollback_to(
         r, snap.current_version(r)
     ),
-    "evolve": lambda spark, r: snap.rename_column(r, "val", "w"),
     "compact": lambda spark, r: snap.compact(spark, r),
     "sink": lambda spark, r: snap.snapshot_sink(r, "s")(
         _batch(spark, r, 10, 15), 0
@@ -142,11 +143,46 @@ _OPS = {
     ),
 }
 
+# evolve rows: the columns each moves (old -> new, None when dropped);
+# every name-bound key must follow
+_MOVES = {
+    "evolve": {"val": "w"},
+    "rename_bloom": {"uid": "user"},
+    "rename_cluster": {"x": "x2"},
+    "rename_cell": {"zcell": "cell"},
+    "drop_bloom": {"uid": None},
+    "drop_stats": {"val": None},
+}
+for _op, _mv in _MOVES.items():
+    _OPS[_op] = lambda spark, r, mv=_mv: [
+        snap.rename_column(r, old, new) if new else snap.drop_column(r, old)
+        for old, new in mv.items()
+    ]
+
 # the only clears an op may make, each named at its call site
 _CLEARS = {
     "compact": {"delete_files", "eq_delete_files"},
     "overwrite_files": {"cluster_spec", "delete_files", "eq_delete_files"},
+    "drop_bloom": {"bloom_cols"},  # its one bloom column is gone
 }
+
+
+def _moved(pm, moved):
+    """The parent's name-bound keys with ``moved`` applied."""
+
+    def names(cols):
+        return [moved.get(c, c) for c in cols if moved.get(c, c)]
+
+    cs = pm["cluster_spec"]
+    return dict(
+        pm,
+        stats_cols=names(pm["stats_cols"]),
+        bloom_cols=names(pm["bloom_cols"]),
+        partition_spec=names(pm["partition_spec"]),
+        cluster_spec=dict(
+            cs, cols=names(cs["cols"]), cell_col=names([cs["cell_col"]])[0]
+        ),
+    )
 
 
 @pytest.mark.parametrize("op", sorted(_OPS) + ["branch"])
@@ -166,16 +202,35 @@ def test_every_commit_inherits_by_one_rule(
     cleared = _CLEARS.get(op, set())
     for key in _INHERITED:
         assert (key in m) == (key not in cleared), (op, key)
+    moved = _MOVES.get(op, {})
+    want = _moved(pm, moved)
     for key in ("stats_cols", "bloom_cols"):
-        assert set(pm[key]) <= set(m[key])
+        assert set(want[key]) <= set(m.get(key, [])), (op, key)
     for key in ("partition_spec", "cluster_spec", "legacy_columns"):
         if key not in cleared:
-            assert m[key] == pm[key], (op, key)
+            assert m[key] == want[key], (op, key)
     for key in ("delete_files", "eq_delete_files"):
         if key not in cleared:
             assert m[key][: len(pm[key])] == pm[key], (op, key)
-    assert set(pm["column_ids"].values()) <= set(m["column_ids"].values())
+    retired = {pm["column_ids"][c] for c, new in moved.items() if not new}
+    assert set(pm["column_ids"].values()) - retired <= set(
+        m["column_ids"].values()
+    )
     assert m["next_column_id"] >= pm["next_column_id"]
+
+
+@pytest.mark.parametrize("col", ["x", "y", "zcell"])
+def test_evolve_refuses_to_drop_a_layout_column(
+    spark, parent_table, tmp_path, col
+):
+    """A partition or cluster column cannot be dropped: the files were
+    laid out by its values."""
+    src, pm = parent_table
+    root = str(tmp_path / "t")
+    shutil.copytree(src, root)
+    with pytest.raises(snap.SchemaEvolutionError, match="spec"):
+        snap.drop_column(root, col)
+    assert snap.current_version(root) == pm["version"]
 
 
 def _bloom_table(spark, tmp_path):

@@ -16,6 +16,7 @@ WATCHED = (
     "spark.sql.adaptive.enabled",
     "spark.sql.session.timeZone",
     "spark.sql.ansi.enabled",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold",
 )
 
 

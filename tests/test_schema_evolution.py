@@ -204,3 +204,87 @@ def test_read_appends_across_rename_unions_by_widest_schema(
     assert ra.count() == 8
     assert ra.filter(F.col("v").isNotNull()).count() == 5
     assert ra.filter(F.col("val").isNotNull()).count() == 3
+
+
+def _uid_frame(spark, lo, hi, uid="uid"):
+    return spark.range(lo, hi, numPartitions=2).selectExpr(
+        "id as k", f"id * 7 % 101 as {uid}"
+    )
+
+
+def test_rename_carries_the_bloom_opt_in(spark, tmp_path):
+    """A renamed bloom column stays opted in under its new name, so
+    files appended after the rename still get blooms."""
+    root = str(tmp_path / "t")
+    snap.commit_append(
+        spark, root, _uid_frame(spark, 0, 40), bloom_cols=["uid"]
+    )
+    snap.rename_column(root, "uid", "user")
+    v = snap.commit_append(spark, root, _uid_frame(spark, 40, 60, "user"))
+    m = snap.read_manifest(root, v)
+    assert m["bloom_cols"] == ["user"]
+    seg = snap._read_segment_obj(root, m["segments"][-1])
+    assert seg["files"] and set(seg["blooms"]) == set(seg["files"])
+    assert all(set(b) == {"user"} for b in seg["blooms"].values())
+
+
+def test_drop_forgets_a_bloom_column(spark, tmp_path):
+    root = str(tmp_path / "t")
+    snap.commit_append(
+        spark, root, _uid_frame(spark, 0, 40), bloom_cols=["uid", "k"]
+    )
+    v = snap.drop_column(root, "uid")
+    assert snap.read_manifest(root, v)["bloom_cols"] == ["k"]
+    v = snap.commit_append(spark, root, spark.range(40, 50).selectExpr("id as k"))
+    assert snap.read_manifest(root, v)["bloom_cols"] == ["k"]
+
+
+def _clustered(spark, root):
+    """16 rows on a 4x4 grid, cluster-compacted: one file per cell."""
+    snap.commit_append(
+        spark,
+        root,
+        spark.range(16, numPartitions=1).selectExpr(
+            "id as k", "id % 4 as a", "id div 4 as b"
+        ),
+    )
+    return snap.compact(spark, root, cluster_by=["a", "b"])
+
+
+def _box_files(root):
+    m = snap.read_manifest(root, snap.current_version(root))
+    return set(
+        snap.pruned_manifest_files(
+            root, m, snap.clustered_prune(root, 0, 1, 2, 3)
+        )
+    )
+
+
+def test_rename_keeps_clustered_pruning(spark, tmp_path):
+    """Renaming a clustering column or the cell column keeps the
+    cluster spec bound: a box probe keeps the same files as before."""
+    root = str(tmp_path / "t")
+    v = _clustered(spark, root)
+    before = _box_files(root)
+    assert 0 < len(before) < len(snap.files_of(root, v))
+    snap.rename_column(root, "a", "a2")
+    snap.rename_column(root, "zcell", "cell")
+    assert _box_files(root) == before
+    m = snap.read_manifest(root, snap.current_version(root))
+    assert m["cluster_spec"]["cols"] == ["a2", "b"]
+    assert m["cluster_spec"]["cell_col"] == "cell"
+    assert m["partition_spec"] == ["cell"]
+    box = F.col("a2").between(0, 1) & F.col("b").between(2, 3)
+    got = snap.read_snapshot(
+        spark, root, prune=snap.clustered_prune(root, 0, 1, 2, 3)
+    ).filter(box)
+    assert sorted(r.k for r in got.collect()) == [8, 9, 12, 13]
+
+
+@pytest.mark.parametrize("col", ["a", "b", "zcell"])
+def test_drop_refuses_a_cluster_column(spark, tmp_path, col):
+    root = str(tmp_path / "t")
+    v = _clustered(spark, root)
+    with pytest.raises(snap.SchemaEvolutionError, match="spec"):
+        snap.drop_column(root, col)
+    assert snap.current_version(root) == v

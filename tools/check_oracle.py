@@ -78,7 +78,9 @@ def main() -> int:
         # depends on get_spark()'s configuration (the round-2 lesson).
         from pyspark.sql import SparkSession
 
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        from metastore_spark.session import env_setting
+
+        cpus = env_setting("SPARK_GRAFT_CPUS")
         spark = (
             SparkSession.builder.appName("oracle-check-vanilla")
             .master(f"local[{cpus}]")
