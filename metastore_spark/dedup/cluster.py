@@ -69,14 +69,3 @@ def connected_components(
         if changed == 0:
             break
     return labels.select(F.col("vid").alias(id_col), F.col("label").alias("cluster_id"))
-
-
-def dedup_survivors_by_cluster(
-    ids: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """One survivor per near-dup cluster (the cluster_id itself — the
-    minimum member id), plus every singleton."""
-    cc = connected_components(ids, pairs, id_col)
-    return cc.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)

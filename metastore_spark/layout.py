@@ -1,5 +1,5 @@
 """Physical table layout for 100 TB: partitioning, bucketing,
-clustering, in-place maintenance.
+clustering.
 
 These writers encode the layout decisions every query in this engine
 assumes:
@@ -67,16 +67,6 @@ def events_partitioned(spark: SparkSession, sf_dir: str):
     return flat(), False
 
 
-def read_events_day_range(
-    spark: SparkSession, path: str, start: str, end: str
-) -> DataFrame:
-    """Date-range scan — the predicate is on the partition column, so
-    Spark prunes directories before reading a single row group."""
-    return spark.read.parquet(path).filter(
-        (F.col("event_date") >= start) & (F.col("event_date") <= end)
-    )
-
-
 def ensure_bucketed_facts(
     spark: SparkSession,
     sf_dir: str,
@@ -140,49 +130,6 @@ def ensure_bucketed_facts(
             )
         out[name] = tbl
     return out
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dest: str,
-    target_mb: int = 256,
-    order_by: list[str] | None = None,
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into
-    ~``target_mb``-sized files. Returns the output file count.
-
-    The operational fix for streaming/incremental ingest at scale —
-    thousands of KB-sized files turn every scan into an open()/footer
-    storm and bloat the driver's split planning. Sizing comes from the
-    ACTUAL on-disk bytes (not row counts, which mispredict with
-    compression); ``order_by`` uses repartitionByRange + sortWithin-
-    Partitions so min/max row-group stats become selective for later
-    range predicates (poor man's clustering). Write-then-swap isn't
-    atomic here on purpose: production would write to a new dated dir
-    and flip a catalog pointer (the events_by_day append pattern).
-    """
-    import math
-
-    total = 0
-    for root, _dirs, files in os.walk(src):
-        for name in files:
-            if not name.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, name))
-    n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(src)
-    if order_by:
-        df = df.repartitionByRange(n, *order_by).sortWithinPartitions(
-            *order_by
-        )
-    else:
-        df = df.repartition(n)
-    df.write.mode("overwrite").parquet(dest)
-    return sum(
-        1
-        for f in os.listdir(dest)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
 
 
 def zorder_cell(a: Column, b: Column, a_shift: int, b_shift: int) -> Column:

@@ -32,34 +32,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("uri", StringType()),
-        StructField("media_type", StringType()),  # image|audio|video
-        StructField("content", BinaryType()),
-        StructField(
-            "meta",
-            StructType(
-                [
-                    StructField("width", IntegerType()),
-                    StructField("height", IntegerType()),
-                    StructField("duration_ms", IntegerType()),
-                    StructField("codec", StringType()),
-                ]
-            ),
-        ),
-    ]
-)
 
 _MAGIC = b"FAKEIMG1"
 
@@ -124,26 +96,6 @@ def synth_jpeg_bytes(media_id: int, width: int, height: int) -> bytes:
         width, height, synth_block_pixels(media_id, width, height), 1,
         quant=[1] * 64,
     )
-
-
-def make_media_df(spark, n: int, width: int = 32, height: int = 24) -> DataFrame:
-    """Synthetic media table (deterministic, seed-free)."""
-    rows = [
-        {
-            "media_id": i,
-            "uri": f"synth://images/{i}.img",
-            "media_type": "image",
-            "content": synth_image_bytes(i, width, height),
-            "meta": {
-                "width": width,
-                "height": height,
-                "duration_ms": None,
-                "codec": "fake",
-            },
-        }
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 IMAGE_FEATURES_SCHEMA = (
@@ -293,18 +245,6 @@ def decode_image_features(df: DataFrame) -> DataFrame:
     )
 
 
-def media_exact_dedup_keys(df: DataFrame) -> DataFrame:
-    """Exact media dedup: sha2 over bytes, JVM-side (no Python), one
-    partial-agg shuffle — identical shape to text exact dedup."""
-    return (
-        df.select(
-            F.col("media_id"), F.sha2(F.col("content"), 256).alias("content_hash")
-        )
-        .groupBy("content_hash")
-        .agg(F.min("media_id").alias("keep_id"))
-    )
-
-
 def _decode_pixels(content: bytes) -> tuple[int, int, int, bytes]:
     """(width, height, channels, raw pixels) via the same magic
     dispatch as _decode_one — PNG decodes for real, the synthetic
@@ -352,29 +292,6 @@ def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
                 {
                     "media_id": pdf["media_id"],
                     "content": out,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.select("media_id", "content").mapInPandas(
-        run, "media_id bigint, content binary, width int, height int"
-    )
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Legacy resize stub (re-synthesize at target dims) — kept for the
-    synthetic-format tests; new code uses :func:`resize_media`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": [
-                        synth_image_bytes(int(m), width, height)
-                        for m in pdf["media_id"]
-                    ],
                     "width": width,
                     "height": height,
                 }

@@ -1,4 +1,4 @@
-"""Skew-mitigation helpers: salted joins and salted aggregation.
+"""Skew mitigation: the salted join.
 
 AQE's skew-join splitting handles most cases at runtime
 (spark.sql.adaptive.skewJoin.enabled — on in this engine's sessions);
@@ -49,17 +49,3 @@ def salted_join(
     )
     out = big_salted.join(small_salted, [key, "_salt"], how)
     return out.drop("_salt")
-
-
-def salted_count(df: DataFrame, key: str, num_salts: int = 8) -> DataFrame:
-    """Two-phase count for heavily skewed keys: count per (key, salt)
-    map-side, then sum per key — the hot key's final combine touches
-    num_salts rows, not N.
-
-    (Spark's partial aggregation already does this for simple counts;
-    the explicit form matters for aggregates partial-agg can't shrink,
-    e.g. collect_list/set — demonstrated with count for testability.)
-    """
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.rand(seed=7)), F.lit(num_salts)))
-    partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("_c"))
-    return partial.groupBy(key).agg(F.sum("_c").alias("n"))

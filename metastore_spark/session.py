@@ -78,14 +78,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster
-    is configured; on a real deployment the cluster manager supplies it.
+    ``master`` defaults to ``$SPARK_MASTER``, else to
+    ``local[$SPARK_GRAFT_CPUS]``; the local-only defaults follow it.
     """
     local = f"local[{env_setting('SPARK_GRAFT_CPUS')}]"
     effective_master = master or os.environ.get("SPARK_MASTER") or local
-    builder = SparkSession.builder.appName(app_name)
-    if master or not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(effective_master)
+    builder = SparkSession.builder.appName(app_name).master(effective_master)
     confs = {
         # local mode: driver == executor JVM, and Spark's 1g default heap
         # OOMs once tens of queries accumulate cached frames/broadcasts.

@@ -1,4 +1,4 @@
-"""Document ingestion: schema-flexible JSON + typed CSV sources.
+"""Document ingestion: the schema-flexible JSON source.
 
 The reference ingests arbitrary nested JSON documents ("returned
 document content structure are not defined by this module",
@@ -10,7 +10,7 @@ README.md:7). The Spark equivalent keeps BOTH views of every row:
   get_json_object / from_json without re-ingesting — the dynamic-
   schema contract (SURVEY.md §1.2, risk #3).
 
-Both readers are plain DataFrame sources: schema inference is off by
+The reader is a plain DataFrame source: schema inference is off by
 default at scale (pass an explicit schema; inference = an extra full
 scan), multiline JSON off (line-splittable files parallelize), and
 corrupt records are quarantined to a column instead of failing the
@@ -54,41 +54,3 @@ def read_json_docs(
             "_raw", F.to_json(F.struct(*[F.col(c) for c in good]))
         )
     return df
-
-
-def read_csv_docs(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """Typed CSV reader — explicit schema required (inference is a
-    full extra pass at scale); malformed rows quarantined."""
-    return (
-        spark.read.format("csv")
-        .schema(schema if isinstance(schema, str) else schema)
-        .option("header", str(header).lower())
-        .option("delimiter", delimiter)
-        .option("mode", "PERMISSIVE")
-        .load(path)
-    )
-
-
-def json_field(df: DataFrame, raw_col: str, json_path: str, out: str) -> DataFrame:
-    """Late-bound field access on the raw document column: pull an
-    undeclared field out of ``_raw`` (O6 on dynamic schema)."""
-    return df.withColumn(out, F.get_json_object(F.col(raw_col), json_path))
-
-
-def read_orc_docs(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar ORC source — schema travels with the file (no
-    inference pass); predicate pushdown and column pruning work as
-    with parquet. Useful when upstream Hive/Trino pipelines hand over
-    ORC instead of parquet."""
-    return spark.read.format("orc").load(path)
-
-
-def write_orc_docs(df: DataFrame, path: str) -> None:
-    """ORC sink (snappy, the interoperable default)."""
-    df.write.mode("overwrite").format("orc").save(path)

@@ -39,11 +39,14 @@ One commit path: every commit op builds its manifest metadata with
 partition and cluster specs and the delete lists a commit carries
 from its parent; an op that drops one names it) and the segment of the
 files it writes with `_new_segment` (one footer open per new file for
-rows, stats and column names, plus the bloom column reads).
-Copy-on-write rewrites carry a partly affected segment's kept files
-with their recorded metadata (`_segments_after_removal`). Commits of
-already-written files (the DataSource writers, `snapshot_sink`) stage
-their segment once and retry the link on the new head through
+rows, stats and column names, plus the bloom column reads; a write
+without rows adds no segment). The copy-on-write ops are one kernel,
+`_rewrite_matching`, and pass it only a match and the rows to insert:
+delete-where a predicate (`_where`), delete-keys a key frame
+(`_keyed`), overwrite-where a predicate and its replacement rows,
+merge the source's keys and the source. Commits of already-written
+files (the DataSource writers, `snapshot_sink`) stage their segment
+once and retry the link on the new head through
 `_commit_segments_with_retry`.
 
 Crash contract: a crash before the commit-file link leaves orphan
@@ -198,7 +201,7 @@ def _write_segment(root: str, files: list[str], meta: dict) -> str:
     file that references it — a crash in between leaves an orphan
     JSON for `vacuum`, never a torn read. Its two callers are
     `_new_segment` (newly written files) and `_segments_after_removal`
-    (kept files, metadata carried)."""
+    (the copy-on-write kernel's kept files, metadata carried)."""
     name = f"s-{uuid.uuid4().hex[:16]}"
     seg = {"files": sorted(files), **{k: v for k, v in meta.items() if v}}
     with open(_segment_path(root, name), "w") as fh:
@@ -210,20 +213,24 @@ def _write_segment(root: str, files: list[str], meta: dict) -> str:
 _FILE_KEYS = ("stats", "partitions", "blooms", "rows")
 
 
-def _new_segment(root: str, files: list[str], extra: dict) -> str:
+def _new_segment(root: str, files: list[str], extra: dict) -> list[str]:
     """The segment of just-written ``files`` under a commit's manifest
-    ``extra`` (built by `_inherit`). Each file's footer is opened ONCE
-    for its row count (the Iceberg manifest-entry ``record_count``,
-    which powers metadata-only row accounting), the min/max of
-    ``stats_cols`` and its column names; ``bloom_cols`` cost one column
-    read per file. Partition tuples come from the ``partition_spec``
-    path components, the write-time column mapping from the committed
-    schema's IDs. A file whose footer is unreadable gets no entries
-    (readers see null rows and never skip it)."""
+    ``extra`` (built by `_inherit`), as a list of zero or one names.
+    Each file's footer is opened ONCE for its row count (the Iceberg
+    manifest-entry ``record_count``, which powers metadata-only row
+    accounting), the min/max of ``stats_cols`` and its column names;
+    ``bloom_cols`` cost one column read per file. Partition tuples come
+    from the ``partition_spec`` path components, the write-time column
+    mapping from the committed schema's IDs. A file whose footer is
+    unreadable gets no entries (readers see null rows and never skip
+    it). A file that holds no rows is left out (Spark's first write
+    task leaves one even for an empty frame), and a write without rows
+    gives no segment."""
     import pyarrow.parquet as pq
 
     scols = extra.get("stats_cols") or []
     bcols = extra.get("bloom_cols") or []
+    listed: list[str] = []
     rows: dict[str, int] = {}
     stats: dict[str, dict] = {}
     blooms: dict[str, dict] = {}
@@ -231,26 +238,34 @@ def _new_segment(root: str, files: list[str], extra: dict) -> str:
         try:
             pf = pq.ParquetFile(os.path.join(root, f))
         except Exception:
+            listed.append(f)
             continue
+        if not pf.metadata.num_rows:
+            continue
+        listed.append(f)
         rows[f] = int(pf.metadata.num_rows)
         if scols and (fstats := _file_stats(pf.metadata, scols)):
             stats[f] = fstats
         if bcols and (fblooms := _file_blooms(pf, bcols)):
             blooms[f] = fblooms
+    if not listed:
+        return []
     fields = extra.get("schema", {}).get("fields", [])
-    return _write_segment(
-        root,
-        files,
-        {
-            "stats": stats,
-            "partitions": _spec_partitions(
-                files, extra.get("partition_spec") or []
-            ),
-            "columns": _columns_meta(fields, extra.get("column_ids")),
-            "blooms": blooms,
-            "rows": rows,
-        },
-    )
+    return [
+        _write_segment(
+            root,
+            listed,
+            {
+                "stats": stats,
+                "partitions": _spec_partitions(
+                    listed, extra.get("partition_spec") or []
+                ),
+                "columns": _columns_meta(fields, extra.get("column_ids")),
+                "blooms": blooms,
+                "rows": rows,
+            },
+        )
+    ]
 
 
 def _bloom_key(v) -> bytes:
@@ -1545,9 +1560,9 @@ def commit_append(
         partition_spec=partition_by,
     )
     files = _write_data_files(df, root, extra.get("partition_spec"))
-    segs = prev_manifest.get("segments", []) + [
-        _new_segment(root, files, extra)
-    ]
+    segs = prev_manifest.get("segments", []) + _new_segment(
+        root, files, extra
+    )
     return _commit(root, parent, "append", segs, extra, ref)
 
 
@@ -1690,6 +1705,106 @@ def commit_mor_upsert_files(
     return _commit_segments_with_retry(root, "upsert-mor", files, build)
 
 
+def _hit(predicate):
+    """SQL DELETE's rule: only TRUE matches; NULL keeps, like FALSE."""
+    return F.coalesce(predicate.cast("boolean"), F.lit(False))
+
+
+def _where(predicate):
+    """A `_rewrite_matching` match on ``predicate``'s `_hit` rows."""
+    hit = _hit(predicate)
+    return lambda frame, how: frame.filter(
+        hit if how == "left_semi" else ~hit
+    )
+
+
+def _keyed(keys: DataFrame, key_cols: list[str]):
+    """A `_rewrite_matching` match on ``keys``' distinct ``key_cols``
+    (a broadcast join; NULL keys never match)."""
+    k = F.broadcast(keys.select(*key_cols).distinct())
+    return lambda frame, how: frame.join(k, key_cols, how)
+
+
+def _segments_after_removal(
+    root: str, prev_segs: list[str], affected: set[str]
+) -> list[str]:
+    """The COW carry rule: untouched segments carry by NAME;
+    partially-affected segments are replaced by one that lists only
+    their kept files, with those files' existing stats, partition
+    tuples, blooms, row counts and write-time columns carried forward;
+    fully-affected segments vanish."""
+    new_segs: list[str] = []
+    for seg in prev_segs:
+        obj = _read_segment_obj(root, seg)
+        seg_files = obj["files"]
+        kept = [f for f in seg_files if f not in affected]
+        if len(kept) == len(seg_files):
+            new_segs.append(seg)
+        elif kept:
+            # files unchanged -> metadata unchanged, footers unopened
+            meta = {
+                k: {f: obj[k][f] for f in kept if f in obj[k]}
+                for k in _FILE_KEYS
+                if k in obj
+            }
+            meta["columns"] = obj.get("columns")
+            new_segs.append(_write_segment(root, kept, meta))
+    return new_segs
+
+
+def _rewrite_matching(
+    spark: SparkSession,
+    root: str,
+    ref: str,
+    op: str,
+    match,
+    insert: DataFrame | None = None,
+    scan_prune: dict | None = None,
+) -> int:
+    """THE copy-on-write commit on ``ref``'s head (Iceberg's "rewrite
+    the data files that hold matching rows"): drop the rows ``match``
+    selects and add ``insert``'s, as one commit named ``op``.
+    ``match(frame, how)`` returns the matching rows for "left_semi"
+    and the others for "left_anti" (`_where`, `_keyed`).
+
+    One scan of the head, through the hidden file path and optionally
+    ``scan_prune``-scoped, lists the AFFECTED files on the driver; only
+    they are re-read (a broadcast semi-join on that set) and their
+    surviving rows rewritten, with ``insert`` (add-only, so it holds
+    every head column), by one write into at most one new segment.
+    Untouched segments carry by name (`_segments_after_removal`)."""
+    parent = current_version(root, ref)
+    pm = read_manifest(root, parent, ref)
+    if insert is not None:
+        _check_add_only(pm, insert)
+    with_file = _read_files(
+        spark, root, pm, prune=scan_prune, with_source=True
+    )
+    affected_df = match(with_file, "left_semi").select("_src").distinct()
+    affected = {
+        os.path.relpath(r["_src"], root) for r in affected_df.collect()
+    }
+    extra = _inherit(pm, None if insert is None else _fields(insert))
+    segs = list(pm["segments"])
+    rows = insert
+    if affected:
+        segs = _segments_after_removal(root, segs, affected)
+        # a USING join moves its keys first; survivors keep the layout
+        survivors = match(
+            with_file.join(F.broadcast(affected_df), "_src", "left_semi"),
+            "left_anti",
+        ).select(*[f["name"] for f in pm["schema"]["fields"]])
+        rows = (
+            survivors
+            if insert is None
+            else survivors.unionByName(insert, allowMissingColumns=True)
+        )
+    if rows is not None:
+        written = _write_data_files(rows, root, extra.get("partition_spec"))
+        segs += _new_segment(root, written, extra)
+    return _commit(root, parent, op, segs, extra, ref)
+
+
 def commit_delete_where(
     spark: SparkSession,
     root: str,
@@ -1697,63 +1812,22 @@ def commit_delete_where(
     scan_prune: dict | None = None,
     ref: str = "main",
 ) -> int:
-    """Copy-on-write delete: rewrite ONLY files containing matching
-    rows (survivor rows to a fresh dir), carry untouched SEGMENTS by
-    name and untouched files of affected segments into replacement
-    segments. Affected files are found with one scan of the hidden
-    ``_metadata.file_path`` column — no per-file probe jobs — and the
-    survivor filter subsets the scan with a broadcast semi-join on the
-    affected set (kept distributed; no O(affected) IN-literal in the
-    plan). Only the MANIFEST DIFF — the affected paths themselves —
-    is enumerated on the driver, because rewriting the affected
-    segments requires exactly that set and nothing more.
+    """Copy-on-write delete of the rows where ``predicate`` (a Column
+    over the table schema) is TRUE: only the files holding such rows
+    are rewritten (`_rewrite_matching`). SQL DELETE semantics: a row
+    where it evaluates NULL is KEPT, exactly like FALSE.
 
-    ``predicate`` is a Column over the table schema; rows where it
-    evaluates TRUE are deleted as of the new snapshot. SQL DELETE
-    semantics: rows where it evaluates NULL (e.g. a NULL column in the
-    condition) are KEPT, exactly like FALSE — only TRUE removes.
-
-    ``scan_prune`` scopes the AFFECTED-FILE SCAN to files matching a
+    ``scan_prune`` scopes the affected-file scan to files matching a
     `pruned_manifest_files` bound (range or value set) — the
     partition-scoped delete: a GDPR erasure on a cell-partitioned
-    table scans only the victim's cells, everything else is carried by
-    metadata untouched. Contract (caller-owed, like read pruning):
-    the predicate must be FALSE on every row of every pruned-out file,
-    else those matching rows silently survive.
-    """
-    parent = current_version(root, ref)
-    if not parent:
+    table scans only the victim's cells. Contract (caller-owed, like
+    read pruning): the predicate is FALSE on every row of every
+    pruned-out file, else those matching rows silently survive."""
+    if not current_version(root, ref):
         raise ValueError("cannot delete from an empty table or branch")
-    prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = list(prev_manifest["segments"])
-    # three-valued logic pinned once and reused by BOTH the affected-
-    # file scan and the survivor filter, so they can never disagree on
-    # a NULL-predicate row
-    hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
-    # _metadata.file_path spells the local path as file:/... — strip
-    # the scheme so manifest-relative paths compare cleanly
-    with_file = _read_files(
-        spark, root, prev_manifest, prune=scan_prune, with_source=True
+    return _rewrite_matching(
+        spark, root, ref, "delete", _where(predicate), scan_prune=scan_prune
     )
-    affected_df = with_file.filter(hit).select("_src").distinct()
-    affected = {
-        os.path.relpath(r["_src"], root) for r in affected_df.collect()
-    }
-    extra = _inherit(prev_manifest)
-    if not affected:
-        return _commit(root, parent, "delete", prev_segs, extra, ref)
-    survivors = (
-        with_file.join(F.broadcast(affected_df), "_src", "left_semi")
-        .filter(~hit)
-        .drop("_src")
-    )
-    rewritten = _write_data_files(
-        survivors, root, extra.get("partition_spec")
-    )
-    new_segs = _segments_after_removal(root, prev_segs, affected)
-    if rewritten:
-        new_segs.append(_new_segment(root, rewritten, extra))
-    return _commit(root, parent, "delete", new_segs, extra, ref)
 
 
 def commit_mor_delete(
@@ -1789,7 +1863,7 @@ def commit_mor_delete(
         raise ValueError("cannot delete from an empty table or branch")
     prev_manifest = read_manifest(root, parent, ref)
     prev_segs = list(prev_manifest["segments"])
-    hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
+    hit = _hit(predicate)
     live = _read_files(
         spark, root, prev_manifest, prune=scan_prune, with_pos=True
     )
@@ -1952,7 +2026,7 @@ def commit_mor_upsert(
         **(extra_meta or {}),  # e.g. the (stream_id, batch_id) ledger
     )
     _warn_read_amplification(len(extra["eq_delete_files"]), root)
-    segs = prev_segs + [_new_segment(root, files, extra)]
+    segs = prev_segs + _new_segment(root, files, extra)
     return _commit(root, parent, "upsert-mor", segs, extra, ref)
 
 
@@ -1974,79 +2048,20 @@ def commit_overwrite_where(
     Validates Delta's replaceWhere contract: every ``df`` row must
     satisfy ``predicate`` (otherwise the "overwrite day X" commit
     would smuggle rows into other days — raise instead). Same COW
-    cost model as `commit_delete_where` (affected files only;
-    ``scan_prune`` scopes the scan with the same caller-owed bound),
-    plus one fresh segment for the replacement rows. The changelog
-    treats an overwrite like a delete — a restatement is not an
-    append-feed event; incremental consumers reseed from a snapshot.
-    """
-    parent = current_version(root, ref)
-    if not parent:
+    rewrite and ``scan_prune`` contract as `commit_delete_where`; the
+    replacement rows land in the rewrite's one new segment. The
+    changelog treats an overwrite like a delete: a restatement is not
+    an append-feed event."""
+    if not current_version(root, ref):
         raise ValueError("cannot overwrite in an empty table or branch")
-    prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = list(prev_manifest["segments"])
-    _check_add_only(prev_manifest, df)
-    hit = F.coalesce(predicate.cast("boolean"), F.lit(False))
-    stray = df.filter(~F.coalesce(predicate.cast("boolean"), F.lit(False)))
-    if stray.limit(1).count():
+    if df.filter(~_hit(predicate)).limit(1).count():
         raise ValueError(
             "replacement rows must satisfy the overwrite predicate "
             "(Delta replaceWhere contract); found rows outside it"
         )
-    with_file = _read_files(
-        spark, root, prev_manifest, prune=scan_prune, with_source=True
+    return _rewrite_matching(
+        spark, root, ref, "overwrite", _where(predicate), df, scan_prune
     )
-    affected_df = with_file.filter(hit).select("_src").distinct()
-    affected = {
-        os.path.relpath(r["_src"], root) for r in affected_df.collect()
-    }
-    extra = _inherit(prev_manifest, _fields(df))
-    spec = extra.get("partition_spec")
-    new_segs = _segments_after_removal(root, prev_segs, affected)
-    if affected:
-        survivors = (
-            with_file.join(F.broadcast(affected_df), "_src", "left_semi")
-            .filter(~hit)
-            .drop("_src")
-        )
-        rewritten = _write_data_files(survivors, root, spec)
-        if rewritten:
-            # survivors keep the parent's columns (the insert may add)
-            new_segs.append(
-                _new_segment(root, rewritten, _inherit(prev_manifest))
-            )
-    inserted = _write_data_files(df, root, spec)
-    if inserted:
-        new_segs.append(_new_segment(root, inserted, extra))
-    return _commit(root, parent, "overwrite", new_segs, extra, ref)
-
-
-def _segments_after_removal(
-    root: str, prev_segs: list[str], affected: set[str]
-) -> list[str]:
-    """The COW carry rule every rewrite commit shares: untouched
-    segments carry by NAME; partially-affected segments are replaced
-    by one that lists only their kept files, with those files'
-    existing stats, partition tuples, blooms, row counts and
-    write-time columns carried forward; fully-affected segments
-    vanish."""
-    new_segs: list[str] = []
-    for seg in prev_segs:
-        obj = _read_segment_obj(root, seg)
-        seg_files = obj["files"]
-        kept = [f for f in seg_files if f not in affected]
-        if len(kept) == len(seg_files):
-            new_segs.append(seg)
-        elif kept:
-            # files unchanged -> metadata unchanged, footers unopened
-            meta = {
-                k: {f: obj[k][f] for f in kept if f in obj[k]}
-                for k in _FILE_KEYS
-                if k in obj
-            }
-            meta["columns"] = obj.get("columns")
-            new_segs.append(_write_segment(root, kept, meta))
-    return new_segs
 
 
 def commit_merge(
@@ -2063,35 +2078,21 @@ def commit_merge(
     source row; source rows with no target match are APPENDED. One
     commit, snapshot-isolated like every other op.
 
-    COW shape, same cost model as `commit_delete_where`: one scan of
-    the target (optionally ``scan_prune``-scoped — a key-clustered
-    table merges in O(matching files)) finds the files holding
-    matched keys; only those files rewrite (their unmatched survivor
-    rows + nothing else), untouched segments carry by name, and the
-    source lands with the rewrite in one fresh segment. The match is
-    a broadcast semi-join when the source is batch-sized (the
-    overwhelmingly common upsert), falling back to a shuffle join
-    automatically via the optimizer's threshold.
+    Same COW rewrite and ``scan_prune`` contract as
+    `commit_delete_where`; the source lands with the affected files'
+    survivors in one new segment, and the key match is a broadcast
+    join while the source is batch-sized.
 
     Contract: ``key_cols`` must be unique IN THE SOURCE (the classic
     MERGE multiple-match error is raised here rather than silently
     multiplying rows); target duplicates are all replaced by the one
     source row. NULL keys never match (SQL join semantics) — a NULL-
-    keyed source row inserts.
-    """
-    parent = current_version(root, ref)
-    if not parent:
+    keyed source row inserts."""
+    if not current_version(root, ref):
         # empty table: a merge is just the first append
         return commit_append(spark, root, source, ref=ref)
-    prev_manifest = read_manifest(root, parent, ref)
-    _check_add_only(prev_manifest, source)
-    prev_segs = list(prev_manifest["segments"])
-
-    # NULL-keyed source rows are excluded from the duplicate guard:
-    # NULL keys never match any target row (SQL join semantics), so
-    # each such row is an unconditional insert — two of them are not
-    # a multiple-match hazard (groupBy treats NULLs as equal and
-    # would raise here).
+    # NULL keys never match, so NULL-keyed source rows are plain
+    # inserts, not a multiple-match hazard (groupBy would pair them)
     all_keys_set = reduce(
         lambda a, b: a & b, [F.col(c).isNotNull() for c in key_cols]
     )
@@ -2109,34 +2110,10 @@ def commit_merge(
             f"{key_cols!r} — each target row may match at most one "
             "source row"
         )
-
-    keys = source.select(*key_cols).distinct()
-    with_file = _read_files(
-        spark, root, prev_manifest, prune=scan_prune, with_source=True
+    return _rewrite_matching(
+        spark, root, ref, "merge", _keyed(source, key_cols), source,
+        scan_prune,
     )
-    matched = with_file.join(F.broadcast(keys), key_cols, "left_semi")
-    affected_df = matched.select("_src").distinct()
-    affected = {
-        os.path.relpath(r["_src"], root) for r in affected_df.collect()
-    }
-    # survivors of affected files: rows whose key has NO source match
-    survivors = (
-        with_file.join(F.broadcast(affected_df), "_src", "left_semi")
-        .join(F.broadcast(keys), key_cols, "left_anti")
-        .drop("_src")
-    )
-    # one fresh segment: survivors + the full source (updates and
-    # inserts alike); by-name union so an add-only widened source
-    # null-fills the survivors' missing columns (the committed schema
-    # below is the source's — readers resolve columns by name)
-    incoming = survivors.unionByName(source, allowMissingColumns=True)
-    extra = _inherit(prev_manifest, _fields(source))
-    rewritten = _write_data_files(
-        incoming, root, extra.get("partition_spec")
-    )
-    new_segs = _segments_after_removal(root, prev_segs, affected)
-    new_segs.append(_new_segment(root, rewritten, extra))
-    return _commit(root, parent, "merge", new_segs, extra, ref)
 
 
 def commit_delete_keys(
@@ -2155,43 +2132,15 @@ def commit_delete_keys(
     stays a broadcast-joined DataFrame at any size the optimizer can
     broadcast, falling back to a shuffle join beyond that.
 
-    Same COW mechanics and cost model as `commit_delete_where`
-    (affected files found by one optionally ``scan_prune``-scoped
-    scan; only they rewrite; untouched segments carry by name), and
-    the same NULL rule: NULL keys never match, so NULL-keyed target
+    Same COW rewrite and ``scan_prune`` contract as
+    `commit_delete_where`. NULL keys never match, so NULL-keyed target
     rows always survive."""
-    parent = current_version(root, ref)
-    if not parent:
+    if not current_version(root, ref):
         raise ValueError("cannot delete from an empty table or branch")
-    prev_manifest = read_manifest(root, parent, ref)
-    prev_segs = list(prev_manifest["segments"])
-    kdf = keys.select(*key_cols).distinct()
-    with_file = _read_files(
-        spark, root, prev_manifest, prune=scan_prune, with_source=True
+    return _rewrite_matching(
+        spark, root, ref, "delete", _keyed(keys, key_cols),
+        scan_prune=scan_prune,
     )
-    affected_df = (
-        with_file.join(F.broadcast(kdf), key_cols, "left_semi")
-        .select("_src")
-        .distinct()
-    )
-    affected = {
-        os.path.relpath(r["_src"], root) for r in affected_df.collect()
-    }
-    extra = _inherit(prev_manifest)
-    if not affected:
-        return _commit(root, parent, "delete", prev_segs, extra, ref)
-    survivors = (
-        with_file.join(F.broadcast(affected_df), "_src", "left_semi")
-        .join(F.broadcast(kdf), key_cols, "left_anti")
-        .drop("_src")
-    )
-    rewritten = _write_data_files(
-        survivors, root, extra.get("partition_spec")
-    )
-    new_segs = _segments_after_removal(root, prev_segs, affected)
-    if rewritten:
-        new_segs.append(_new_segment(root, rewritten, extra))
-    return _commit(root, parent, "delete", new_segs, extra, ref)
 
 
 def rollback_to(root: str, version: int) -> int:
@@ -3010,7 +2959,7 @@ def _commit_segments_with_retry(
         if seg is None:
             seg = _new_segment(root, files, extra)
         try:
-            return _commit(root, parent, op, carried + [seg], extra, ref)
+            return _commit(root, parent, op, carried + seg, extra, ref)
         except ConcurrentCommit:
             continue
 
@@ -3210,7 +3159,7 @@ def compact(
     # schema (+ the cluster cell column) — evolution collapses out of
     # the rewritten files
     written = _fields(df)
-    folded_seg = _new_segment(
+    folded = _new_segment(
         root,
         rewritten,
         _inherit(base_manifest, written, partition_spec=spec),
@@ -3277,7 +3226,7 @@ def compact(
                 root,
                 head,
                 "compact",
-                [folded_seg] + added_segs,
+                folded + added_segs,
                 extra,
             )
         except ConcurrentCommit:

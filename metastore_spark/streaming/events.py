@@ -14,8 +14,6 @@ and stops, and results must equal the batch computation.
 
 Scale notes: the event stream partitions by source; the windowed
 aggregate shuffles by (window, key) with watermark-bounded state.
-``dropDuplicatesWithinWatermark`` keeps exactly-once semantics for
-at-least-once sources with bounded state.
 """
 
 from __future__ import annotations
@@ -141,16 +139,6 @@ def windowed_event_counts(
             "n_events",
             "total_value",
         )
-    )
-
-
-def deduped_events(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Exactly-once projection of an at-least-once source: drop
-    duplicate event_ids arriving within the watermark horizon."""
-    return (
-        normalize_events(stream)
-        .withWatermark("event_time", watermark)
-        .dropDuplicatesWithinWatermark(["event_id"])
     )
 
 

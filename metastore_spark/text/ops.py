@@ -134,29 +134,3 @@ def fingerprint(col: Column) -> Column:
     """
     normalized = F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
     return F.md5(normalized)
-
-
-def rolling_hashes(col: Column, window: int = 8, mod: int = 1 << 31) -> Column:
-    """Polynomial rolling hashes of every ``window``-gram of tokens.
-
-    The winnowing-style fingerprint set for near-dup detection
-    (Schleimer et al., SIGMOD 2003 'Winnowing' — public algorithm).
-    JVM-side: transform over token positions, aggregate for the
-    polynomial hash. Returns array<bigint>.
-    """
-    toks = word_tokens(col)
-    n = F.size(toks)
-    base = F.lit(1000003).cast("bigint")
-
-    def gram_hash(i: Column) -> Column:
-        gram = F.slice(toks, i + 1, window)
-        return F.aggregate(
-            gram,
-            F.lit(0).cast("bigint"),
-            lambda acc, t: (acc * base + F.xxhash64(t)) % F.lit(mod),
-        )
-
-    idx = F.sequence(F.lit(0), F.greatest(n - window, F.lit(0)))
-    return F.when(n < window, F.array().cast("array<bigint>")).otherwise(
-        F.transform(idx, gram_hash)
-    )

@@ -146,7 +146,8 @@ def test_snapshot_store_build_race_single_winner(spark, tmp_path, monkeypatch):
 
 
 def test_register_views_route_events_through_substrate(spark):
-    catalog.register_views(spark, SF)
+    for name, df in catalog.load_tables(spark, SF).items():
+        df.createOrReplaceTempView(name)
     got = spark.sql("select count(*) n from events").first()["n"]
     assert got == 1000
     root = catalog.snapshot_root(spark, SF, "events")

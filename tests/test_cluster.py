@@ -4,10 +4,7 @@ chain convergence."""
 import pytest
 from pyspark.sql import functions as F
 
-from metastore_spark.dedup.cluster import (
-    connected_components,
-    dedup_survivors_by_cluster,
-)
+from metastore_spark.dedup.cluster import connected_components
 
 
 @pytest.fixture(scope="module")
@@ -29,12 +26,6 @@ def test_transitive_closure(graph):
     assert cc[3] == cc[4] == 3
     assert cc[5] == cc[6] == cc[7] == cc[8] == 5
     assert cc[9] == 9  # singleton
-
-
-def test_survivors(graph):
-    ids, pairs = graph
-    got = {r["doc_id"] for r in dedup_survivors_by_cluster(ids, pairs).collect()}
-    assert got == {0, 3, 5, 9}
 
 
 def test_long_chain_converges(spark):

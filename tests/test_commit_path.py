@@ -267,12 +267,33 @@ def test_snapshot_sink_enforces_add_only(spark, tmp_path):
     assert snap.current_version(root) == 1
 
 
-def test_cow_delete_keeps_untouched_files_metadata_unopened(
-    spark, tmp_path, monkeypatch
-):
-    """A copy-on-write delete replaces a partly affected segment by one
+def _replacement(spark):
+    return _frame(spark, 5, 6, parts=1).withColumn("v", F.lit(-1).cast("long"))
+
+
+# the four copy-on-write ops, each matching k == 5; the insert ops put
+# back one replacement row
+_COW = {
+    "delete_where": lambda spark, r: snap.commit_delete_where(
+        spark, r, F.col("k") == 5
+    ),
+    "delete_keys": lambda spark, r: snap.commit_delete_keys(
+        spark, r, spark.range(5, 6).selectExpr("id as k"), ["k"]
+    ),
+    "overwrite_where": lambda spark, r: snap.commit_overwrite_where(
+        spark, r, _replacement(spark), F.col("k") == 5
+    ),
+    "merge": lambda spark, r: snap.commit_merge(
+        spark, r, _replacement(spark), ["k"]
+    ),
+}
+
+
+def _check_cow_carry(spark, tmp_path, monkeypatch, op):
+    """A copy-on-write commit replaces a partly affected segment by one
     that carries its kept files' blooms and row counts as recorded,
-    without reopening their footers; the rewritten files get blooms."""
+    without reopening their footers; the affected file's survivors and
+    any inserted rows land in one new segment, with blooms."""
     root = _bloom_table(spark, tmp_path)
     m1 = snap.read_manifest(root, 1)
     old = snap._read_segment_obj(root, m1["segments"][0])
@@ -285,7 +306,7 @@ def test_cow_delete_keeps_untouched_files_metadata_unopened(
         return real(path, *a, **kw)
 
     monkeypatch.setattr(pq, "ParquetFile", counting)
-    snap.commit_delete_where(spark, root, F.col("k") == 5)
+    _COW[op](spark, root)
     monkeypatch.setattr(pq, "ParquetFile", real)
     m2 = snap.read_manifest(root, 2)
     kept_seg, new_seg = (
@@ -296,8 +317,51 @@ def test_cow_delete_keeps_untouched_files_metadata_unopened(
     for key in ("blooms", "rows"):
         assert kept_seg[key] == {f: old[key][f] for f in kept}
     assert set(new_seg["blooms"]) == set(new_seg["files"])
-    assert sorted(opened) == sorted(new_seg["files"])  # new files only
-    assert snap.read_snapshot(spark, root).count() == 399
+    # each footer opened once, only for files this commit wrote; one
+    # left out of the segment holds no rows
+    assert len(set(opened)) == len(opened)
+    assert set(new_seg["files"]) <= set(opened)
+    assert {os.path.dirname(f) for f in opened} == {
+        os.path.dirname(f) for f in new_seg["files"]
+    }
+    for f in set(opened) - set(new_seg["files"]):
+        assert pq.ParquetFile(os.path.join(root, f)).metadata.num_rows == 0
+    inserts = op in ("overwrite_where", "merge")
+    affected = sum(old["rows"].values()) - sum(kept_seg["rows"].values())
+    assert sum(new_seg["rows"].values()) == affected - 1 + inserts
+    head = snap.read_snapshot(spark, root)
+    assert head.count() == 399 + inserts
+    assert head.filter("k = 5").count() == inserts
+    assert head.filter("v = -1").count() == inserts
+
+
+def test_cow_delete_keeps_untouched_files_metadata_unopened(
+    spark, tmp_path, monkeypatch
+):
+    _check_cow_carry(spark, tmp_path, monkeypatch, "delete_where")
+
+
+@pytest.mark.parametrize("op", sorted(set(_COW) - {"delete_where"}))
+def test_cow_rewrite_keeps_untouched_files_metadata_unopened(
+    spark, tmp_path, monkeypatch, op
+):
+    _check_cow_carry(spark, tmp_path, monkeypatch, op)
+
+
+@pytest.mark.parametrize("op", ["merge", "overwrite_where"])
+def test_cow_empty_insert_commits_the_parent_segments(spark, tmp_path, op):
+    """An insert op with no rows to insert and nothing matched writes
+    no segment: the commit lists the parent's segments unchanged."""
+    root = str(tmp_path / "t")
+    snap.commit_append(spark, root, _frame(spark, 0, 40))
+    empty = _frame(spark, 0, 0)
+    if op == "merge":
+        v = snap.commit_merge(spark, root, empty, ["k"])
+    else:
+        v = snap.commit_overwrite_where(spark, root, empty, F.col("k") < 0)
+    m1, m2 = snap.read_manifest(root, 1), snap.read_manifest(root, v)
+    assert v == 2 and m2["segments"] == m1["segments"]
+    assert snap.read_snapshot(spark, root).count() == 40
 
 
 def test_append_opens_each_new_footer_once(spark, tmp_path, monkeypatch):
@@ -348,9 +412,12 @@ def test_commit_metadata_is_not_forked():
     manifest key (`_evolve`, the one op that rewrites the schema, IDs
     and spec names, builds the evolved head it inherits from as
     `dict(m, key=...)`); across `sources/` only `_new_segment` and
-    `_segments_after_removal` call `_write_segment`, and only
-    `_new_segment` derives a new segment's metadata. (The DataSource's
-    stream reader patches a read-side manifest view, not a commit.)"""
+    `_segments_after_removal` call `_write_segment`, only
+    `_new_segment` derives a new segment's metadata, and only the
+    copy-on-write kernel `_rewrite_matching` calls
+    `_segments_after_removal` or reads with ``with_source=True``. (The
+    DataSource's stream reader patches a read-side manifest view, not
+    a commit.)"""
     keys = set(_INHERITED) | {"schema"}
     segment_helpers = {
         "_file_stats", "_file_blooms", "_spec_partitions", "_columns_meta",
@@ -405,6 +472,19 @@ def test_commit_metadata_is_not_forked():
                 bad.append(f"{where} calls _write_segment")
             if callee in segment_helpers and fn != "_new_segment":
                 bad.append(f"{where} calls {callee}")
+            cow_only = callee == "_segments_after_removal" or (
+                callee == "_read_files"
+                and any(
+                    kw.arg == "with_source"
+                    and not (
+                        isinstance(kw.value, ast.Constant)
+                        and kw.value.value is False
+                    )
+                    for kw in node.keywords
+                )
+            )
+            if cow_only and fn != "_rewrite_matching":
+                bad.append(f"{where} calls {callee} (copy-on-write)")
     assert bad == []
     for gone in (
         "_carry_deletes", "_carry_cluster", "_carry_manifest_extras",

@@ -33,7 +33,9 @@ def test_events_partition_pruning(spark, tmp_path):
     path = str(tmp_path / "events_by_day")
     layout.write_events_by_day(events, path)
 
-    scan = layout.read_events_day_range(spark, path, "2024-01-05", "2024-01-06")
+    scan = spark.read.parquet(path).filter(
+        F.col("event_date").between("2024-01-05", "2024-01-06")
+    )
     plan = _explain(scan)
     assert "PartitionFilters" in plan
     # pruned scan reads exactly the two requested days
@@ -75,28 +77,6 @@ def test_events_partitioned_probe_and_pruned_query(spark, tmp_path, monkeypatch)
     plan = _explain(REGISTRY["events_day_range_pruned"].fn(spark, "/root/testdata/sf0.001"))
     assert "PartitionFilters" in plan
     assert "event_date" in plan
-
-
-def test_compact_parquet_small_files(spark, tmp_path):
-    src = str(tmp_path / "frag")
-    dest = str(tmp_path / "compact")
-    base = spark.range(50_000).selectExpr("id", "id % 97 AS k")
-    base.repartition(64).write.parquet(src)  # 64 tiny files
-    import os
-
-    n_src = sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
-    assert n_src == 64
-    n_out = layout.compact_parquet(spark, src, dest, target_mb=256)
-    assert n_out < n_src  # tiny corpus → collapses to few files
-    out = spark.read.parquet(dest)
-    assert out.count() == 50_000
-    assert out.agg(F.sum("id")).first()[0] == base.agg(F.sum("id")).first()[0]
-
-    # ordered compaction: row-group stats become selective
-    dest2 = str(tmp_path / "compact_sorted")
-    layout.compact_parquet(spark, src, dest2, target_mb=1, order_by=["id"])
-    again = spark.read.parquet(dest2)
-    assert again.count() == 50_000
 
 
 def test_fact_bucketed_join_no_shuffle(spark):

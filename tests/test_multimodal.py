@@ -1,4 +1,4 @@
-"""Multimodal plumbing tests: schema, Arrow batching, dedup, stubs."""
+"""Multimodal plumbing tests: schema, Arrow batching, decode kernels."""
 
 import pytest
 
@@ -7,12 +7,11 @@ from metastore_spark import multimodal as mm
 
 @pytest.fixture(scope="module")
 def media(spark):
-    df = mm.make_media_df(spark, 20)
-    # rows 17..19 share content with 0..2 (dedup targets)
-    dup = mm.make_media_df(spark, 3).selectExpr(
-        "media_id + 17 AS media_id", "uri", "media_type", "content", "meta"
+    # synthetic 32x24 images; rows 17..19 share content with 0..2
+    return spark.createDataFrame(
+        [(i, mm.synth_image_bytes(i % 17, 32, 24)) for i in range(20)],
+        "media_id bigint, content binary",
     )
-    return df.filter("media_id < 17").unionByName(dup)
 
 
 def test_decode_features(media):
@@ -24,20 +23,6 @@ def test_decode_features(media):
     assert 0.0 < rows[0]["mean_intensity"] < 255.0
     # deterministic: same content → same hash
     assert rows[17]["content_sha256"] == rows[0]["content_sha256"]
-
-
-def test_media_dedup(media):
-    keys = mm.media_exact_dedup_keys(media)
-    kept = {r["keep_id"] for r in keys.collect()}
-    assert len(kept) == 17  # 3 dup contents collapsed
-    assert {17, 18, 19}.isdisjoint(kept)  # originals (lower ids) win
-
-
-def test_resize_stub(media, spark):
-    out = mm.resize_stub(media, 8, 8)
-    r = out.filter("media_id = 5").first()
-    assert r["width"] == 8
-    assert bytes(r["content"]) == mm.synth_image_bytes(5, 8, 8)
 
 
 def test_decode_rejects_unknown_bytes(spark):

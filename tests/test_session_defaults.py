@@ -35,7 +35,8 @@ class _Builder:
     def appName(self, _name):
         return self
 
-    def master(self, _master):
+    def master(self, master):
+        self.master_set = master
         return self
 
     def config(self, k, v):
@@ -70,6 +71,18 @@ def test_get_spark_and_tune_runtime_share_one_table(monkeypatch):
         launched, tuned = _launched(monkeypatch, master), _tuned(master)
         assert set(launched) - set(tuned) == launch_only
         assert {k: launched[k] for k in tuned} == tuned
+
+
+def test_get_spark_hands_spark_master_to_the_builder(monkeypatch):
+    """With no ``master`` argument, ``SPARK_MASTER`` is the session's
+    master, and the local-only defaults stay off for a cluster one."""
+    monkeypatch.setenv("SPARK_MASTER", "spark://h:7077")
+    fake = _Builder()
+    monkeypatch.setattr(session, "SparkSession", fake)
+    session.get_spark()
+    assert fake.master_set == "spark://h:7077"
+    assert "spark.locality.wait" not in fake.confs
+    assert _THRESHOLD not in fake.confs
 
 
 def test_only_local_masters_list_on_the_driver():

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from metastore_spark.operators.sessions import sessionize
-from metastore_spark.operators.skew import salted_count, salted_join
+from metastore_spark.operators.skew import salted_join
 
 HOT_USER = 7
 N_EVENTS = 50_000
@@ -68,20 +68,6 @@ def test_salted_join_equals_plain_join_on_skew(skewed_events, spark):
     a = {r["user_id"]: (r["n"], r["v"]) for r in plain.collect()}
     b = {r["user_id"]: (r["n"], r["v"]) for r in salted.collect()}
     assert a == b
-
-
-def test_salted_count_equals_exact_on_skew(skewed_events):
-    exact = {
-        r["user_id"]: r["n"]
-        for r in skewed_events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    salted = {
-        r["user_id"]: r["n"]
-        for r in salted_count(skewed_events, "user_id").collect()
-    }
-    assert exact == salted
 
 
 def test_heavy_hitters_find_hot_user_on_skew(skewed_events, spark, tmp_path):

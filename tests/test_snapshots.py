@@ -65,7 +65,7 @@ def test_concurrent_commit_rejected(spark, tmp_path):
     # a racing writer advances the head between our parent snapshot
     # and our pointer swap
     files = snap._write_data_files(_df(spark, 10, 20), root)
-    seg = snap._new_segment(root, files, {})
+    (seg,) = snap._new_segment(root, files, {})
     snap.commit_append(spark, root, _df(spark, 20, 30))  # the racer wins
     with pytest.raises(snap.ConcurrentCommit):
         snap._commit(root, parent=1, op="append", segments=[seg])
@@ -436,7 +436,7 @@ def test_vacuum_reclaims_crashed_commit_preserves_versions(spark, tmp_path):
     # inject the crash window: data written, segment written, tmp
     # manifest staged — death before os.link
     files = snap._write_data_files(_df(spark, 500, 600), root)
-    seg = snap._new_segment(root, files, {})
+    (seg,) = snap._new_segment(root, files, {})
     reaped = subprocess.Popen(["true"])
     reaped.wait()
     tmp_manifest = os.path.join(
@@ -623,7 +623,7 @@ def _race_worker(args):
 
     out = []
     for i in range(5):
-        seg = s._new_segment(root, [f"data/w{w}-{i}.parquet"], {})
+        (seg,) = s._new_segment(root, [f"data/w{w}-{i}.parquet"], {})
 
         def attempt(seg=seg):
             parent = s.current_version(root)

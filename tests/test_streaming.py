@@ -86,18 +86,6 @@ def test_windowed_counts_append_respects_watermark(spark, stream_dir):
     assert all(s >= horizon for s in missing_starts)
 
 
-def test_stream_dedup(spark, stream_dir, tmp_path):
-    # duplicate the source files → at-least-once delivery simulation
-    dup_dir = str(tmp_path / "dup")
-    base = spark.read.parquet(stream_dir)
-    base.union(base).repartition(4).write.mode("overwrite").parquet(dup_dir)
-
-    stream = ev.read_event_stream(spark, dup_dir)
-    ev.run_to_memory_sink(ev.deduped_events(stream), "dedup_events")
-    n = spark.table("dedup_events").count()
-    assert n == base.count()
-
-
 def _write_time_ordered_files(spark, src_df, dest, n_files=3, ts_col="ts"):
     """Split rows into n_files contiguous event-time ranges and write
     them as separate sequential appends — file mtimes line up with

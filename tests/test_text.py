@@ -47,16 +47,6 @@ def test_fingerprint_normalizes(spark):
     assert fps[0] != fps[2]  # punctuation is content
 
 
-def test_rolling_hashes(spark):
-    df = spark.createDataFrame(
-        [(0, "a b c d e f g h i j"), (1, "short text")],
-        "doc_id bigint, text string",
-    )
-    out = df.select(ops.rolling_hashes(F.col("text"), window=8).alias("h")).collect()
-    assert len(out[0]["h"]) == 3  # 10 tokens, window 8 → 3 grams
-    assert out[1]["h"] == []  # under window → empty
-
-
 def test_repetition_signals_handcomputed(spark):
     from metastore_spark.queries import REGISTRY
     import metastore_spark.queries_text  # noqa: F401
